@@ -254,13 +254,14 @@ object Bench {
     }
     // remaining-legs ledger: initialized with every leg the run will time
     // (sweep names + the heavy family/layout legs registered below),
-    // decremented as legs complete; spentExpected accumulates the tier-0
-    // price of completed legs so the box factor compares like with like
+    // decremented as legs complete; spentExpected accumulates the price of
+    // each completed leg at the tier it actually ran at, so the box factor
+    // compares like with like — a failed leg (timing -1) adds nothing
     val remaining = scala.collection.mutable.Set.empty[String]
     var spentExpected = 15.0 // session startup + deep first calibration
-    def legDone(n: String): Unit = {
+    def legDone(n: String, tier: Int, t: Timing): Unit = {
       remaining -= n
-      spentExpected += wallFactor(0, expectedOf(n))
+      if (t.median >= 0) spentExpected += wallFactor(tier, expectedOf(n))
     }
     def projectedRemaining(tier: Int): Double = {
       val boxRatio = math.min(3.0,
@@ -279,8 +280,7 @@ object Bench {
       tierCur = math.max(tierCur, math.max(byElapsed, byProjection))
       tierCur
     }
-    def timedAdaptive(run: () => Boolean): Timing = {
-      val tier = tierNow()
+    def timedAdaptive(run: () => Boolean, tier: Int): Timing = {
       val t0 = nowOff()
       quiesce()
       def one(): Double = {
@@ -363,8 +363,9 @@ object Bench {
     // legs, their min-of-3 is the adjudication currency, and wall-clock
     // budget pressure only exists on the full 290-leg sweep.
     def timedLeg(name: String, run: () => Boolean): Timing = {
-      val t = if (only.isDefined) timed3(run) else timedAdaptive(run)
-      legDone(name)
+      val tier = tierNow()
+      val t = if (only.isDefined) timed3(run) else timedAdaptive(run, tier)
+      legDone(name, tier, t)
       t
     }
     // every timed leg registers its run thunk so the end-of-run isolated

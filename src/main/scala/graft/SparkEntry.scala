@@ -4,11 +4,12 @@ import org.apache.spark.sql.functions.col
 
 import graft.queries.{Analytics, BehaviorOps, CoreOps, CurationOps, FactOps, GeoOps, GraphOps, MaintenanceOps, OlapOps, PrivacyOps, ProfileOps, ScaleOps, StatsOps, TextOps, VectorOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Each entry in `queries` is one operator family from SURVEY.md §2,
-  * re-expressed Spark-first over the driver testdata; `oracleSql` holds the
-  * equivalent ANSI SQL the driver runs in DuckDB over the same parquet files.
+  * [[SparkEntry.registry]] declares every entry once: one operator family
+  * from SURVEY.md §2, re-expressed Spark-first over the driver testdata,
+  * paired with the equivalent ANSI SQL the driver runs in DuckDB over the
+  * same parquet files; `queries` and `oracleSql` are name-keyed views of it.
   * Column names and types are aligned on both sides (counts→BIGINT,
   * year/month/row_number→INT, monetary sums→exact DECIMAL accumulation cast
   * to DOUBLE) so the driver's sorted-column value hash matches exactly.
@@ -21,591 +22,27 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.topMonthlyUniqueLocations(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // D1/D2 aggregate + F2 ordered output
-    "q1_agg" -> (CoreOps.q1Agg _),
-    // F1 top-k + C1 join chain
-    "q_topk_revenue" -> (CoreOps.topkRevenue _),
-    // C1 multi-way FK joins to broadcast dims
-    "q_join_multiway" -> (CoreOps.joinMultiway _),
-    // C2 left outer join
-    "q_left_join" -> (CoreOps.leftJoinAgg _),
-    // B6/B7/A9 anti join (NOT EXISTS / NOT IN / quarantine delete)
-    "q_anti_join" -> (CoreOps.antiJoin _),
-    // C10 semi join (EXISTS)
-    "q_semi_join" -> (CoreOps.semiJoin _),
-    // A4 quarantine sink + B2-B5 validation predicates
-    "q_quarantine_invalid" -> (CoreOps.quarantineInvalid _),
-    "q_quarantine_valid" -> (CoreOps.quarantineValid _),
-    // A8 scrub + B8 CASE + B10 NULLIF/COALESCE
-    "q_scrub_case" -> (CoreOps.scrubCase _),
-    // D7 DISTINCT ON first-row-per-group
-    "q_distinct_on" -> (CoreOps.distinctOn _),
-    // E1 SCD2 end-dating via window lead/lag
-    "q_scd2_lag" -> (CoreOps.scd2Lag _),
-    // C5/C6 temporal as-of join + fallback coalesce
-    "q_asof_join" -> (CoreOps.asofJoin _),
-    // C7 prioritized best-match resolution
-    "q_priority_bestmatch" -> (CoreOps.priorityBestmatch _),
-    // C4 theta substring-containment join
-    "q_theta_contains" -> (CoreOps.thetaContains _),
-    // C4 at-scale rewrite: candidate-substring equi-join, same oracle
-    "q_theta_prefilter" -> (CoreOps.thetaPrefilter _),
-    // C8 join on computed key + D8/dim_date build + §1 surrogate keys
-    "q_dim_date_join" -> (CoreOps.dimDateJoin _),
-    // C11 case-insensitive equi-join
-    "q_ci_join" -> (CoreOps.ciJoin _),
-    // A6 idempotent anti-join insert
-    "q_dim_upsert_new" -> (CoreOps.dimUpsertNew _),
-    // A7 keyed upsert (ON CONFLICT DO UPDATE → full-outer merge)
-    "q_fact_upsert" -> (CoreOps.factUpsert _),
-    // A8 join-update (UPDATE … FROM → left join + coalesce)
-    "q_join_update" -> (CoreOps.joinUpdate _),
-    // D8 static seed dim (INSERT … VALUES → createDataFrame + broadcast)
-    "q_seed_dims" -> (CoreOps.seedDims _),
-    // C9 null-guarded join condition ≡ plain equi-join
-    "q_null_guard_join" -> (CoreOps.nullGuardJoin _),
-    // D3/D4 conditional aggregates
-    "q_cond_agg" -> (CoreOps.condAgg _),
-    // D5 multiple exact COUNT(DISTINCT)
-    "q_multi_count_distinct" -> (CoreOps.multiCountDistinct _),
-    // D5 at-scale rewrite: Expand-free two-phase form, same oracle
-    "q_multi_count_distinct_twophase" -> (CoreOps.multiCountDistinctTwophase _),
-    // D6 group key = expression
-    "q_groupby_expr" -> (CoreOps.groupbyExpr _),
-    // G set operations
-    "q_set_ops" -> (CoreOps.setOps _),
-    // B3 regex validation/extraction
-    "q_regex_extract" -> (CoreOps.regexExtract _),
-    // H scalar batteries
-    "q_scalar_strings" -> (CoreOps.scalarStrings _),
-    "q_scalar_dates" -> (CoreOps.scalarDates _),
-    "q_scalar_casts" -> (CoreOps.scalarCasts _),
-    // JSON read battery (typed from_json + path get_json_object)
-    "q_json_extract" -> (CoreOps.jsonExtract _),
-    // OLAP reshaping: pivot/unpivot, rollup subtotals, ranking windows
-    "q_pivot" -> (OlapOps.pivotEvents _),
-    "q_unpivot" -> (OlapOps.unpivotParts _),
-    // dense hourly grid, zero-filled gaps (resample for trend/window stats)
-    "q_gapfill" -> (OlapOps.gapFill _),
-    // LATERAL per-row top-N via the SQL entry point (decorrelated plan)
-    "q_lateral" -> (OlapOps.lateralTopOrders _),
-    // deterministic array aggregation (sorted collect_set profile)
-    "q_collect_types" -> (OlapOps.collectTypes _),
-    // exact-decimal time-decay recency weighting
-    "q_decay_score" -> (OlapOps.decayScore _),
-    // fixed-bucket equi-width histogram
-    "q_histogram" -> (OlapOps.histogram _),
-    "q_rollup" -> (OlapOps.rollupOrders _),
-    "q_cube" -> (OlapOps.cubeOrders _),
-    // explicit GROUPING SETS: only the asked-for marginals
-    "q_grouping_sets" -> (OlapOps.groupingSets _),
-    "q_window_battery" -> (OlapOps.windowBattery _),
-    // correlated scalar subquery via the spark.sql entry point (decorrelated)
-    "q_scalar_subquery" -> (OlapOps.scalarSubquery _),
-    // RANGE (value-distance) window frame: trailing 3-day features
-    "q_range_frame" -> (OlapOps.rangeFrame _),
-    // EP3: the reference's 7 analytical queries
-    "q_top_months_excl_jan" -> (Analytics.topMonthsExclJan _),
-    "q_top_location_months" -> (Analytics.topLocationMonths _),
-    "q_top_pairs" -> (Analytics.topPairs _),
-    "q_habitat_rank" -> (Analytics.habitatRank _),
-    "q_quality_summary" -> (Analytics.qualitySummary _),
-    "q_top_users" -> (Analytics.topUsers _),
-    "q_top_monthly_unique" -> (Analytics.topMonthlyUniqueLocations _),
-    // LLM-data-pipeline tier (SURVEY.md §7 tier 4) — dedup
-    "q_dedup_exact" -> (TextOps.dedupExact _),
-    "q_dedup_minhash" -> (TextOps.dedupMinhash _),
-    // incremental probe of a persisted MinHash bucket table (multi-batch)
-    "q_dedup_incremental" -> (TextOps.dedupIncremental _),
-    // transitive closure of the band graph: connected-component clusters
-    "q_dedup_cc" -> (TextOps.dedupCC _),
-    // CC with the exact-Jaccard verify stage (band collision = recall only)
-    "q_dedup_cc_verified" -> (TextOps.dedupCCVerified _),
-    // incremental verified dedup: batch probes the persisted band table,
-    // exact-Jaccard verify, component UPDATE at (touched comps + batch)
-    // scale — fixture-proven equal to the full recompute
-    "q_dedup_inc_verified" -> (TextOps.dedupIncVerified _),
-    "q_dedup_simhash" -> (TextOps.dedupSimhash _),
-    "q_dedup_simhash_cluster" -> (TextOps.dedupSimhashCluster _),
-    "q_dedup_ngram" -> (TextOps.dedupNgram _),
-    // asymmetric containment near-dup (quote/subset pairs Jaccard misses):
-    // min-5 sketch probed against the full inverted shingle postings
-    "q_dedup_contain" -> (TextOps.dedupContain _),
-    "q_fingerprint" -> (TextOps.fingerprint _),
-    // benchmark decontamination: broadcast the eval shingle set, map-side
-    // probe the training corpus (GPT-3-style n-gram overlap)
-    "q_decontaminate" -> (TextOps.decontaminate _),
-    // same answer via a distributed BloomFilterAggregate prefilter + exact
-    // confirm join — the shape for eval sets too big to broadcast exactly
-    "q_decontaminate_bloom" -> ((s, d) => TextOps.decontaminateBloom(s, d)),
-    // cross-split contamination audit: test-doc shingles probed against
-    // per-shingle train counts (shuffle join — neither side broadcastable)
-    "q_split_leakage" -> (TextOps.splitLeakage _),
-    // corpus curation: per-source quota, mixture sampling, repetition gates
-    "q_source_quota" -> (CurationOps.sourceQuota _),
-    // salted two-phase rank, hash-matching the same oracle (skew escape)
-    "q_quota_twophase" -> (CurationOps.sourceQuotaTwoPhase _),
-    "q_mixture_sample" -> (CurationOps.mixtureSample _),
-    "q_repetition" -> (CurationOps.repetitionStats _),
-    // the composed flow: dedup -> quality gate -> quota -> mixture
-    "q_curation_pipeline" -> (CurationOps.curationPipeline _),
-    // blocked levenshtein entity matching (equi-join blocks, verify inside)
-    "q_fuzzy_match" -> (CurationOps.fuzzyMatch _),
-    // complete lev<=2 matching: total-length ±2 band restores indel pairs;
-    // oracle is the UNBANDED naive pairwise form, proving the band drops nothing
-    "q_fuzzy_match_indel" -> (CurationOps.fuzzyMatchIndel _),
-    // training-context packing: per-source concat-and-chunk pack assignment
-    // via one window cumsum (no sequential recurrence)
-    "q_seq_pack" -> (CurationOps.seqPack _),
-    // deterministic hash-bucket train/valid/test split (map-only, append-stable)
-    "q_data_split" -> (CurationOps.dataSplit _),
-    // weighted sampling without replacement (priority sampling): map-only
-    // projection + TakeOrdered top-k, no transcendentals, no global sort
-    "q_priority_sample" -> (CurationOps.prioritySample _),
-    // CCNet-style LM quality scoring: self-estimated bigram model, exact-int
-    // ratio-of-sums familiarity (division-only, hash-stable cross-engine)
-    "q_lm_score" -> (CurationOps.lmFamiliarity _),
-    // DSIR importance weighting: target-domain vs raw bigram-LM familiarity
-    // ratio from ONE shared bigram pass (division-only, overflow-safe)
-    "q_dsir" -> (CurationOps.dsirWeights _),
-    // privacy tier: PII detection + masking (map-only regex pass over a
-    // deterministic contact string derived from event columns)
-    "q_pii_redact" -> (PrivacyOps.piiRedact _),
-    // k-anonymity releasability with one generalization step (dow -> '*')
-    "q_kanon_release" -> (PrivacyOps.kanonRelease _),
-    // text analysis
-    "q_text_stats" -> (TextOps.textStats _),
-    "q_lang_id" -> (TextOps.langId _),
-    "q_tfidf" -> (TextOps.tfidf _),
-    "q_top_ngrams" -> (TextOps.topNgrams _),
-    // context-window chunking (50-token windows, stride 40, map-only)
-    "q_doc_chunks" -> (TextOps.docChunks _),
-    // sub-document dedup: repeated 50-token windows across the corpus
-    // (boilerplate/template detection document dedup cannot see)
-    "q_chunk_dedup" -> (TextOps.chunkDedup _),
-    // multimodal metadata plumbing (SQL-expressible deterministic stub)
-    "q_multimodal_meta" -> (TextOps.multimodalMeta _),
-    // multimodal feature-extract: resize plan + quantized pseudo-embedding
-    // (column twin of the MultimodalStub batch encoder)
-    "q_media_features" -> (TextOps.mediaFeatures _),
-    // multimodal frame sampling: stride Generate over per-payload frame
-    // counts, per-frame digests, payload never travels with the frames
-    "q_frame_sample" -> (TextOps.frameSample _),
-    // pHash near-dup: integer DCT sign bits, Hamming-banded LSH cluster
-    "q_media_neardup" -> (TextOps.mediaNeardup _),
-    // §2.I: the streaming window aggregation run in batch mode (the
-    // transform is mode-agnostic; the watermark is a no-op on batch)
-    "q_hourly_counts" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.Streams.hourlyTypeCounts(Tables.events(s, dir))
-        .orderBy(col("window_start"), col("event_type"))),
-    // §2.I: first-delivery-wins ingest dedup, batch analog of
-    // dropDuplicatesWithinWatermark with in-query modeled re-delivery
-    "q_stream_dedup" -> (graft.streaming.Streams.streamDedupBatch _),
-    // §2.I: gap sessionization, batch analog of Sessionize (same boundaries;
-    // property-tied to Sessionize.fold in SessionizeProps)
-    "q_sessionize" -> (graft.streaming.Streams.sessionizeBatch _),
-    // §2.I: stream-stream join (watermark-bounded attribution), batch analog
-    "q_stream_join" -> (graft.streaming.Streams.attributionJoinBatch _),
-    // §2.I: the same sessions via the built-in session_window — hash-matches
-    // the q_sessionize oracle (one oracle, two plans: built-in vs custom)
-    "q_session_window" -> (graft.streaming.Streams.sessionWindowBatch _),
-    // §2.I: hopping (sliding) windows — each event in exactly two windows
-    "q_hopping_counts" -> ((s: SparkSession, dir: String) =>
-      graft.streaming.Streams.hoppingTypeCounts(Tables.events(s, dir))
-        .orderBy(col("window_start"), col("event_type"))),
-    // EP2 fact-build shapes over testdata (08_ETL2_part2.sql)
-    "q_fact_activity" -> (FactOps.factActivity _),
-    "q_fact_monthly_summary" -> (FactOps.factMonthlySummary _),
-    // pure range (point-in-interval) join, bucketized equi-join rewrite —
-    // the oracle states the naive BETWEEN join; the plan is hash, not NLJ
-    "q_range_join" -> (ScaleOps.rangeJoin _),
-    // Morton key arithmetic for z-order clustering (write side in LayoutSpec)
-    "q_zorder_key" -> (ScaleOps.zorderKeys _),
-    // skew-salted join, hash-matching the plain join oracle
-    "q_salted_join" -> (ScaleOps.saltedJoin _),
-    // deterministic hash-keyed stratified sampling (map-only, reproducible)
-    "q_stratified_sample" -> (ScaleOps.stratifiedSample _),
-    // skew-salted two-phase aggregation, hash-matching the plain oracle
-    "q_salted_agg" -> (ScaleOps.saltedAgg _),
-    // exact grouped quantiles (approx_percentile is the documented 100 TB path)
-    "q_quantiles" -> (ScaleOps.quantiles _),
-    // per-group p05/p95 outlier clipping: exact-percentile bounds frame
-    // (group-cardinality rows) broadcast back, clipping map-side
-    "q_winsorize" -> (ScaleOps.winsorize _),
-    // similarity search
-    "q_sim_topk" -> (VectorOps.simTopk _),
-    // retrieve-from-curated composition: candidates LM-quality-gated
-    // (aggregate-barriered) before the cosine pass
-    "q_retrieval_gated" -> (VectorOps.retrievalGated _),
-    "q_sim_lsh" -> (VectorOps.simLsh _),
-    "q_sim_ivf" -> (VectorOps.simIvf _),
-    // NSW-class graph ANN: bucketed top-Deg neighbor graph + unrolled
-    // greedy beam search (recall@3 measured in VectorOpsSpec)
-    "q_graph_ann" -> (VectorOps.graphAnn _),
-    // multi-probe IVF: each probe searches its nprobe nearest cells —
-    // the recall/cost knob (curve measured in VectorOpsSpec)
-    "q_sim_ivf_multi" -> (VectorOps.simIvfMulti _),
-    "q_embed_dedup" -> (VectorOps.embedDedup _),
-    // per-vector int8 scalar quantization + reconstruction-error audit
-    "q_vec_quant" -> (VectorOps.vecQuantize _),
-    // quantized Lloyd's k-means: broadcast-literal centroids, map-only
-    // assignment, one K·d-cell aggregate per update — exact int arithmetic
-    "q_kmeans" -> (VectorOps.kmeans _),
-    // SemDeDup: cosine near-dup keep/drop inside the LEARNED k-means
-    // clusters (LSH sub-bucket pruned) — shares kmeans' centroid set
-    "q_semdedup" -> (VectorOps.semDedup _),
-    // table maintenance: CDC merge-apply (last-writer-wins + tombstones,
-    // the foreachBatch-MERGE shape), key-skew diagnostics, compaction plan
-    "q_cdc_apply" -> (MaintenanceOps.cdcApply _),
-    "q_skew_report" -> (MaintenanceOps.skewReport _),
-    "q_compaction_plan" -> (MaintenanceOps.compactionPlan _),
-    // snapshot-to-snapshot reconciliation by content checksum
-    "q_data_diff" -> (MaintenanceOps.dataDiff _),
-    // behavioral analytics: staged conversion funnel, weekly retention
-    // cohorts, and per-day L-infinity distribution-drift monitoring
-    "q_funnel" -> (BehaviorOps.funnel _),
-    "q_retention" -> (BehaviorOps.retention _),
-    "q_drift_linf" -> (BehaviorOps.driftLinf _),
-    // gaps-and-islands activity streaks (one window, no self-join)
-    "q_streaks" -> (BehaviorOps.streaks _),
-    // profiling: count-min-sketch heavy hitters (exact audit beside) and
-    // join-key inference via distinct-set containment
-    "q_heavy_hitters" -> (ProfileOps.heavyHitters _),
-    "q_fk_profile" -> (ProfileOps.fkProfile _),
-    // distributed OLS: one exact-moment aggregate, closed-form fit at the
-    // O(groups) output edge — how a linear scorer trains at 100 TB
-    "q_ols_fit" -> (ProfileOps.olsFit _),
-    // equi-depth histogram: exact-percentile split points + broadcast
-    // bucket assignment — the range-partition balance statistic
-    "q_equidepth" -> (ProfileOps.equidepth _),
-    // event-time lateness profile: the watermark-sizing statistic
-    "q_lateness_profile" -> (ProfileOps.latenessProfile _),
-    // one-pass numeric column profile (catalog "describe")
-    "q_column_profile" -> (ProfileOps.columnProfile _),
-    // Gini concentration per priority: exact integer-cents rank sums
-    "q_gini" -> (ProfileOps.gini _),
-    // robust outlier profile: element-picked median + MAD per group
-    "q_mad_outliers" -> (ProfileOps.madOutliers _),
-    // incremental view maintenance: signed delta aggregate merged into a
-    // stored view — O(delta+view) refresh, base never rescanned
-    "q_ivm_agg" -> (MaintenanceOps.ivmApply _),
-    // JOIN-view IVM: bilinear signed delta (dA*B + A*dB + dA*dB) merged
-    // into the stored aggregate view; neither base table rescanned
-    "q_ivm_join" -> (MaintenanceOps.ivmJoin _),
-    // two-proportion z-test between experiment arms, one scan-reduce
-    "q_ab_test" -> (BehaviorOps.abTest _),
-    // chi-square independence over the arm x type contingency table,
-    // order-pinned fold so even the float statistic hash-matches
-    "q_chisq" -> (BehaviorOps.chisq _),
-    // top first-k user-journey paths across gap-sessions
-    "q_session_paths" -> (BehaviorOps.sessionPaths _),
-    // rolling 7-day distinct users via bounded x7 contribution explode
-    "q_rolling_dau" -> (BehaviorOps.rollingDau _),
-    // per-user EWMA: the ordered fold a combining aggregate can't express
-    "q_ewma" -> (BehaviorOps.ewma _),
-    // zone-map skip-ratio audit: clustered vs unclustered column pruning
-    "q_zonemap_audit" -> (MaintenanceOps.zonemapAudit _),
-    // corpus-slice vocabulary profile: hapax + inverse-Simpson diversity
-    "q_vocab_profile" -> (TextOps.vocabProfile _),
-    // fixed-point PageRank over the customer-supplier trade graph:
-    // 3 unrolled BSP iterations, one edge-shuffle each, integer-exact
-    "q_pagerank" -> (GraphOps.pagerank _),
-    // HyperLogLog distinct-user estimate, register-level and replayable
-    // by the oracle; daily sketches max-merged into the per-type state
-    "q_hll_distinct" -> (ProfileOps.hllDistinct _),
-    // deterministic q-digest quantile sketch + truth audit vs the exact
-    // deciles (completes the sketch quartet: CMS, HLL, MinHash, quantiles)
-    "q_qdigest" -> (ProfileOps.qdigest _),
-    // the MERGE law as a distributed plan: per-event-type digests built
-    // independently, union-and-recompressed, audited vs the global truth
-    "q_qdigest_merge" -> (ProfileOps.qdigestMerge _),
-    // Shannon entropy of the categorical catalog columns, fixed-point
-    "q_entropy_profile" -> (ProfileOps.entropyProfile _),
-    // market-basket pair co-occurrence with support + lift, cap-guarded
-    "q_basket_pairs" -> (BehaviorOps.basketPairs _),
-    // per-user time-weighted (hold-duration) average via exact moments
-    "q_time_weighted" -> (BehaviorOps.timeWeighted _),
-    // inverted-index build: df + total tf + truncated postings per term
-    "q_inverted_index" -> (TextOps.invertedIndex _),
-    // oriented triangle census of the part co-purchase graph
-    "q_triangles" -> (GraphOps.triangles _),
-    // per-node local clustering coefficient (ego density), top-20
-    "q_lcc" -> (GraphOps.lcc _),
-    // degree assortativity (Pearson of endpoint degrees), one row
-    "q_assortativity" -> (GraphOps.assortativity _),
-    // CMS inner-product join-size estimate with exact audit (est >= exact)
-    "q_join_size_est" -> (ProfileOps.joinSizeEst _),
-    // 80% Pareto point per priority: integer cumsum, cross-multiplied test
-    "q_pareto" -> (ProfileOps.pareto _),
-    // (dow, hour) seasonal baseline + 3-sigma anomaly counts per cell
-    "q_seasonal_anomaly" -> (BehaviorOps.seasonalAnomaly _),
-    // RFM quartile grid occupancy from exact population quantiles
-    "q_rfm" -> (BehaviorOps.rfm _),
-    // pairwise event-type audience Jaccard (bounded per-user fan-out)
-    "q_audience_overlap" -> (BehaviorOps.audienceOverlap _),
-    // dedup ROI: cluster-size histogram over the CC label frame
-    "q_cluster_profile" -> (TextOps.clusterProfile _),
-    // MinHash accuracy audit: signature estimate vs exact Jaccard per
-    // LSH candidate pair
-    "q_minhash_est" -> (TextOps.minhashEst _),
-    // trade-graph degree histogram by node kind (the skew early warning)
-    "q_degree_profile" -> (GraphOps.degreeProfile _),
-    // first-order Markov transition matrix over per-user event sequences
-    "q_markov_next" -> (BehaviorOps.markovNext _),
-    // Kaplan-Meier user-lifetime survival with right-censoring
-    "q_survival" -> (BehaviorOps.survival _),
-    // cohort LTV triangle: integer-cents cumsum per acquisition month
-    "q_cohort_ltv" -> (BehaviorOps.cohortLtv _),
-    // k-NN majority-vote classification over the held-out vectors
-    "q_knn_classify" -> (VectorOps.knnClassify _),
-    // per-class precision/recall/F1 of the heuristic language ID
-    "q_langid_eval" -> (TextOps.langIdEval _),
-    // deterministic hash-rank exemplars per (lang, source) stratum
-    "q_group_exemplars" -> (CurationOps.groupExemplars _),
-    // Pearson correlation matrix from one scan of exact integer moments
-    "q_corr_matrix" -> (StatsOps.corrMatrix _),
-    // daily-series lag-1..7 autocorrelation (the seasonality detector)
-    "q_autocorr" -> (StatsOps.autocorr _),
-    // first-digit Benford conformance audit, quantized integer-log expected
-    "q_benford" -> (StatsOps.benford _),
-    // exact-rational two-sample KS distance via two-level prefix sums
-    "q_ks_test" -> (StatsOps.ksTest _),
-    // per-type max-deviation changepoint over daily volumes
-    "q_changepoint" -> (StatsOps.changepoint _),
-    // BM25 ranking for a fixed query, integer-quantized idf
-    "q_bm25" -> (TextOps.bm25 _),
-    // per-source greedy token-budget allocation report
-    "q_token_budget" -> (CurationOps.tokenBudget _),
-    // top-k per source with at most one doc per near-dup cluster
-    "q_diverse_topk" -> (CurationOps.diverseTopk _),
-    // open-wedge common-neighbor / Adamic-Adar link prediction
-    "q_common_neighbors" -> (GraphOps.commonNeighbors _),
-    // item-item cosine neighbors over capped baskets ("also bought")
-    "q_item_cf" -> (BehaviorOps.itemCf _),
-    // last-touch conversion attribution with day-resolution lookback
-    "q_attribution" -> (BehaviorOps.attribution _),
-    // 2-D Pareto frontier via the two-level prefix-max sweep
-    "q_skyline" -> (OlapOps.skyline _),
-    // rank-based Mann-Whitney U with exact doubled-midrank arithmetic
-    "q_mann_whitney" -> (StatsOps.mannWhitney _),
-    // Welch's unequal-variance t-test from one conditional-moment scan
-    "q_ttest_welch" -> (StatsOps.welchTtest _),
-    // one-way ANOVA F with order-pinned cross-group float folds
-    "q_anova" -> (StatsOps.anova _),
-    // Spearman rank-correlation matrix via exact doubled midranks
-    "q_spearman" -> (StatsOps.spearman _),
-    // Kruskal-Wallis rank H across order priorities, tie-corrected
-    "q_kruskal" -> (StatsOps.kruskal _),
-    // lead-lag cross-correlation between two daily event-count series
-    "q_xcorr" -> (StatsOps.xcorr _),
-    // Theil-Sen median-slope robust monthly revenue trend per segment
-    "q_theilsen" -> (StatsOps.theilsen _),
-    // seed-teleport personalized PageRank over the trade graph
-    "q_ppr" -> (GraphOps.ppr _),
-    // NDCG@10 / MRR / recall@10 of a popularity ranker, exact-int metrics
-    "q_ndcg" -> (BehaviorOps.ndcg _),
-    // Holt-Winters additive weekly-seasonal smoothing backtest
-    "q_holt_winters" -> (StatsOps.holtWinters _),
-    // Laplace-mechanism noisy count release, deterministic noise replica
-    "q_dp_counts" -> (PrivacyOps.dpCounts _),
-    // in-engine Naive Bayes: train on parity split, classify, confusion
-    "q_nb_classify" -> (TextOps.nbClassify _),
-    // optimal decision-stump split per feature by exact-moment Gini
-    "q_stump" -> (StatsOps.stump _),
-    // Friedman blocked-rank chi2 across event types, tie-corrected
-    "q_friedman" -> (StatsOps.friedman _),
-    // oracle-checked recall@3 of multi-probe IVF vs exact brute force
-    "q_ann_recall" -> (VectorOps.annRecall _),
-    // decile lift / cumulative gains of the trained NB score
-    "q_lift_curve" -> (TextOps.liftCurve _),
-    // KS separation of the NB score distributions, positives vs negatives
-    "q_ks_classifier" -> (TextOps.ksClassifier _),
-    // McNemar paired test: trained NB vs the stopword langid heuristic
-    "q_mcnemar" -> (TextOps.mcnemar _),
-    // exact Mann-Whitney ROC-AUC of the NB score, ties half-credited
-    "q_auc_roc" -> (TextOps.aucRoc _),
-    // pairwise source shingle-Jaccard contamination matrix
-    "q_source_overlap" -> (TextOps.sourceOverlap _),
-    // semi-supervised majority-vote label spread over near-dup components
-    "q_label_spread" -> (TextOps.labelSpread _),
-    // HITS hubs/authorities, max-normalized fixed-point BSP rounds
-    "q_hits" -> (GraphOps.hits _),
-    // delete-one-bucket jackknife CI for the mean (deterministic resampling)
-    "q_jackknife" -> (StatsOps.jackknife _),
-    // Hill power-law tail index of the trade-graph degree distribution
-    "q_tail_index" -> (GraphOps.tailIndex _),
-    // top word pairs by quantized pointwise mutual information
-    "q_collocations" -> (TextOps.collocations _),
-    // seasonal-naive vs naive-1 backtest with skill score
-    "q_forecast_eval" -> (StatsOps.forecastEval _),
-    // reliability bins + order-pinned expected calibration error
-    "q_calibration" -> (StatsOps.calibration _),
-    // population stability index, smoothed integer-log bins
-    "q_psi" -> (StatsOps.psi _),
-    // categorical mutual information, exact integer PMI contributions
-    "q_mutual_info" -> (StatsOps.mutualInfo _),
-    // CUPED variance-reduced A/B comparison from one moment scan
-    "q_cuped" -> (StatsOps.cuped _),
-    // deterministic integer-weight bootstrap CI, rank-based bounds
-    "q_bootstrap_ci" -> (StatsOps.bootstrapCi _),
-    // Gopher quality-rule battery, per-rule violation counts by source
-    "q_gopher_rules" -> (TextOps.gopherRules _),
-    // content-defined chunking + chunk-level storage dedup (FastCDC shape)
-    "q_content_chunks" -> (TextOps.contentChunks _),
-    // CCNet head/middle/tail LM-familiarity buckets per language
-    "q_ccnet_buckets" -> (CurationOps.ccnetBuckets _),
-    // per-domain resampling weights to a uniform token mixture
-    "q_domain_weights" -> (CurationOps.domainWeights _),
-    // k-core peel trace over the co-purchase graph, fixed synchronous rounds
-    "q_kcore" -> (GraphOps.kcore _),
-    // multi-source min-hop BFS reach counts over the trade graph
-    "q_bfs_reach" -> (GraphOps.bfsReach _),
-    // BPE merge learning over the frequency-weighted word vocabulary
-    "q_bpe_train" -> (TextOps.bpeTrain _),
-    // product quantization: per-subspace codebooks + occupancy/distortion
-    "q_pq_quant" -> (VectorOps.pqQuantize _),
-    // Holt level+trend smoothing backtest, struct-accumulator ordered fold
-    "q_holt" -> (StatsOps.holt _),
-    // exact radius nearest-neighbor join via 3x3 grid-cell pruning
-    "q_radius_nn" -> (VectorOps.radiusNn _),
-    // winnowing fingerprints (MOSS): windowed rightmost-min 3-gram hashes
-    "q_winnow" -> (TextOps.winnow _),
-    // per-source distinctive vocabulary by smoothed quantized log-odds
-    "q_topic_words" -> (TextOps.topicWords _),
-    // marginal bigram-novelty curve over append-order id buckets
-    "q_novelty_curve" -> (TextOps.noveltyCurve _),
-    // QQ decile table between two corpus slices (the KS companion)
-    "q_qq_deciles" -> (StatsOps.qqDeciles _),
-    // Kimball drill-across: two facts pre-aggregated to the conformed month
-    "q_drill_across" -> (OlapOps.drillAcross _),
-    // signup->purchase time-to-convert latency percentiles
-    "q_funnel_time" -> (BehaviorOps.funnelTime _),
-    // Zipf exponent: weighted log-log OLS, midrank ranks, no global window
-    "q_zipf_fit" -> (TextOps.zipfFit _),
-    // per-type interarrival gap profile (cadence / session-gap sizing)
-    "q_interarrival" -> (BehaviorOps.interarrival _),
-    // period-over-period churn headline from one conditional aggregate
-    "q_churn" -> (BehaviorOps.churn _),
-    // Heaps'-law vocabulary-growth exponent over append-order buckets
-    "q_heaps_fit" -> (TextOps.heapsFit _),
-    // first-touch conversion attribution via one range-frame window
-    "q_first_touch" -> (BehaviorOps.firstTouch _),
-    // CUPED with per-stratum theta over pre-period activity tiers
-    "q_cuped_strat" -> (StatsOps.cupedStratified _),
-    // per-day PSI drift series against the all-period baseline
-    "q_psi_daily" -> (StatsOps.psiDaily _),
-    // cross-document plagiarism candidates off shared winnow fingerprints
-    "q_plagiarism_pairs" -> (TextOps.plagiarismPairs _),
-    // PQ asymmetric-distance ANN top-k via broadcast probe LUTs
-    "q_pq_ann" -> (VectorOps.pqAnn _),
-    // k-truss peel trace: per-round triangle-support edge filtering
-    "q_ktruss" -> (GraphOps.ktruss _),
-    // exact 2-D DBSCAN: grid radius graph, core CC, deterministic borders
-    "q_dbscan" -> (VectorOps.dbscan _),
-    // streaming-shaped PSI drift monitor (single windowed aggregation +
-    // static-baseline broadcast join), batch twin of q_psi_daily
-    "q_stream_psi" -> (graft.streaming.Streams.psiWindowedBatch _),
-    // composed FAISS stack: IVF cell pruning x PQ asymmetric distance
-    "q_ivf_pq" -> (VectorOps.ivfPqAnn _),
-    // Matryoshka truncation audit: 16-dim vs 64-dim top-3 agreement
-    "q_dim_trunc" -> (VectorOps.dimTruncRecall _),
-    // Newman modularity of co-purchase components, exact wide-int terms
-    "q_modularity" -> (GraphOps.modularity _),
-    // one-level Louvain: parity-scheduled modularity-ascent moves
-    "q_louvain" -> (GraphOps.louvain _),
-    // two-level Louvain: contraction into the weighted supergraph + re-run
-    "q_louvain2" -> (GraphOps.louvain2 _),
-    // STL-style daily decomposition: trend + weekday seasonal + residual
-    "q_stl" -> (StatsOps.stl _),
-    // entity resolution completed: match-pair components + survivorship
-    "q_golden_record" -> (CurationOps.goldenRecord _),
-    // Markov transition model backtested on each user's held-out last hop
-    "q_markov_eval" -> (BehaviorOps.markovEval _),
-    // item-CF hit-rate on an even/odd basket split with max-id holdout
-    "q_cf_eval" -> (BehaviorOps.cfEval _),
-    // tokenizer fertility per source: learned merges applied + measured
-    "q_bpe_fertility" -> (TextOps.bpeFertility _),
-    // tokenizer application: the corpus encoded with the learned merges
-    "q_bpe_encode" -> (TextOps.bpeEncode _),
-    // Simpson's screen: per-segment vs pooled slope, moments re-aggregated
-    "q_simpsons" -> (StatsOps.simpsons _),
-    // multi-probe IVF x PQ: both recall knobs in one composed query path
-    "q_ivfpq_multi" -> (VectorOps.ivfPqMulti _),
-    // Markov removal-effect attribution: absorbing-chain value iteration
-    "q_markov_removal" -> (BehaviorOps.markovRemoval _),
-    // cross-source quantile normalization (batch-effect correction)
-    "q_quantile_norm" -> (CurationOps.quantileNorm _),
-    // the ewma fold as mapGroupsWithState state (batch-mode twin)
-    "q_ewma_state" -> (graft.streaming.EwmaState.ewmaStateBatch _),
-    // golden record + hub verification: over-merged entities refined
-    "q_entity_verify" -> (CurationOps.entityVerify _),
-    // contrastive hard-negative mining (label-contrastive cosine top-k)
-    "q_hard_negatives" -> (VectorOps.hardNegatives _),
-    // hybrid dense+lexical retrieval fused by reciprocal rank
-    "q_hybrid_rrf" -> (VectorOps.hybridRrf _),
-    // top principal component: exact-integer centered Gram + power iteration
-    "q_pca_power" -> (VectorOps.pcaPower _),
-    // per-label PC1 projection moments (the trained component applied)
-    "q_pca_project" -> (VectorOps.pcaProject _),
-    // JL sketch distance-preservation audit over the LSH planes
-    "q_jl_audit" -> (VectorOps.jlAudit _),
-    // coarsened-exact-matching ATT (adaptive mean cuts, pruned strata)
-    "q_cem_att" -> (StatsOps.cemAtt _),
-    // per-source unigram KL divergence matrix (integer-sum total)
-    "q_source_kl" -> (TextOps.sourceKl _),
-    // Wald SPRT day-by-day experiment monitor (integer LLR cumsum)
-    "q_sprt_monitor" -> (BehaviorOps.sprtMonitor _),
-    // 2-component mixture by classification EM (exact-moment scores)
-    "q_gmm_hard" -> (StatsOps.gmmHard _),
-    // harmonic centrality from probe customers (exact lcm-scaled 1/d)
-    "q_harmonic" -> (GraphOps.harmonic _),
-    // source-sampled Brandes betweenness: integer sigma + 2^20 fixed-
-    // point dependency accumulation, top-20 interior nodes
-    "q_betweenness" -> (GraphOps.betweenness _),
-    // HyperANF neighborhood function: per-node HLL register-max
-    // propagation, quantized-integer estimate sums per depth
-    "q_anf" -> (GraphOps.anf _),
-    // MMR diversity re-ranking of each probe's cosine top-10 pool
-    "q_mmr" -> (VectorOps.mmrRerank _),
-    // leave-one-segment-out trend influence from additive moments
-    "q_loo_influence" -> (StatsOps.looInfluence _),
-    // the SPRT cumsum as flatMapGroupsWithState state (batch twin)
-    "q_sprt_state" -> (graft.streaming.SprtState.sprtStateBatch _),
-    // sample-ratio-mismatch guardrail on the experiment's user split
-    "q_srm_check" -> (BehaviorOps.srmCheck _),
-    // isotonic (PAV) calibration fit via the minimax closed form
-    "q_isotonic" -> (StatsOps.isotonic _),
-    // held-out bigram cross-entropy per source (LM corpus evaluation)
-    "q_perplexity_eval" -> (CurationOps.perplexityEval _),
-    // log-log price elasticity per brand (quantized-integer-log OLS)
-    "q_elasticity" -> (StatsOps.elasticity _),
-    // LSH (bands, rows) tuning table over the one 12-signature pass
-    "q_lsh_tuning" -> (TextOps.lshTuning _),
-    // URL canonicalization collapse report (pre-dedup crawl normalize)
-    "q_url_canon" -> (CurationOps.urlCanon _),
-    // per-host politeness scheduling over the canonical URL frontier
-    "q_crawl_frontier" -> (CurationOps.crawlFrontier _),
-    // grid-bucketed spatial radius self-join, exact-verified (3×3
-    // literal cell fan-out; never a cross join)
-    "q_geo_neighbors" -> (GeoOps.geoNeighbors _),
-    // cumulative distinct-user curve from max-merged daily HLL partials
-    "q_hll_sliding" -> (ProfileOps.hllSliding _),
-    // cell-scale density smoothing + exact-integer hotspot flags
-    "q_geo_density" -> (GeoOps.geoDensity _),
-    // real-coordinate (lat/lon degree) radius census: quantized-
-    // equirectangular metric, shared literal cos table, degree-scaled cells
-    "q_geo_latlon" -> (GeoOps.geoLatLon _),
-    // right-to-be-forgotten cascade audit (map-only cohort predicate)
-    "q_forget_user" -> (PrivacyOps.forgetUser _),
-    // Flesch reading-ease per source (exact count sums, one final formula)
-    "q_readability" -> (TextOps.readability _),
-    // report-noisy-max DP median selection over the value-bin spine
-    "q_dp_median" -> (PrivacyOps.dpMedian _),
-    // KMV theta-sketch union/intersection estimates vs exact overlap
-    "q_kmv_overlap" -> (ProfileOps.kmvOverlap _),
-  )
+  /** One registry row: the Spark builder over `(spark, sfDir)` and its
+    * DuckDB oracle SQL. */
+  final case class Entry(name: String,
+      run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+  /** Entry name → Spark builder, derived once from [[registry]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(e => e.name -> e.run).toMap
+
+  /** Entry name → DuckDB oracle SQL, derived once from [[registry]]. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(e => e.name -> e.oracleSql).toMap
+
+  /** The registry's guard against a repeated name, which a `Map(...)`
+    * literal would silently resolve to its last binding. */
+  private[graft] def distinctNames(entries: Seq[Entry]): Seq[Entry] = {
+    val dups = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate SparkEntry names: ${dups.toSeq.sorted.mkString(", ")}")
+    entries
+  }
 
   private val revenueSql =
     "CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)"
@@ -1315,71 +752,81 @@ object SparkEntry {
       | WHEN props IS NULL OR NOT regexp_matches(props, '^\{"k": [0-9]+\}$') THEN 'malformed props'
       | ELSE NULL END""".stripMargin.replaceAll("\n", " ")
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
+  /** Every entry, declared exactly once. */
+  lazy val registry: Seq[Entry] = distinctNames(Seq(
+    // D1/D2 aggregate + F2 ordered output
+    Entry("q1_agg", CoreOps.q1Agg,
       """SELECT l_returnflag, l_linestatus,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
         | COUNT(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_topk_revenue" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    // F1 top-k + C1 join chain
+    Entry("q_topk_revenue", CoreOps.topkRevenue,
       s"""SELECT c_custkey, c_name, $revenueSql AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         | JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_custkey, c_name ORDER BY revenue DESC, c_custkey LIMIT 10""".stripMargin,
-    "q_join_multiway" ->
+        |GROUP BY c_custkey, c_name ORDER BY revenue DESC, c_custkey LIMIT 10""".stripMargin),
+    // C1 multi-way FK joins to broadcast dims
+    Entry("q_join_multiway", CoreOps.joinMultiway,
       s"""SELECT r_name, COUNT(*) AS n_items, $revenueSql AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         | JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
         | JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q_left_join" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    // C2 left outer join
+    Entry("q_left_join", CoreOps.leftJoinAgg,
       """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
         | CAST(SUM(CAST(COALESCE(o_totalprice, 0) AS DECIMAL(12,2))) AS DOUBLE) AS total_spend
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "q_anti_join" ->
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    // B6/B7/A9 anti join (NOT EXISTS / NOT IN / quarantine delete)
+    Entry("q_anti_join", CoreOps.antiJoin,
       """SELECT c_custkey, c_name FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_semi_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    // C10 semi join (EXISTS)
+    Entry("q_semi_join", CoreOps.semiJoin,
       """SELECT c_custkey, c_mktsegment FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_quarantine_invalid" ->
+        |ORDER BY c_custkey""".stripMargin),
+    // A4 quarantine sink + B2-B5 validation predicates
+    Entry("q_quarantine_invalid", CoreOps.quarantineInvalid,
       s"""SELECT event_id, event_type, value, err AS error_message
         |FROM (SELECT *, $eventErrSql AS err FROM events)
-        |WHERE err IS NOT NULL ORDER BY event_id""".stripMargin,
-    "q_quarantine_valid" ->
+        |WHERE err IS NOT NULL ORDER BY event_id""".stripMargin),
+    Entry("q_quarantine_valid", CoreOps.quarantineValid,
       s"""SELECT event_id, user_id, event_type, value
         |FROM (SELECT *, $eventErrSql AS err FROM events)
-        |WHERE err IS NULL ORDER BY event_id""".stripMargin,
-    "q_scrub_case" ->
+        |WHERE err IS NULL ORDER BY event_id""".stripMargin),
+    // A8 scrub + B8 CASE + B10 NULLIF/COALESCE
+    Entry("q_scrub_case", CoreOps.scrubCase,
       """SELECT p_partkey,
         | COALESCE(CASE WHEN TRIM(p_name) = '' THEN NULL ELSE TRIM(p_name) END, 'unknown') AS name_clean,
         | CASE WHEN p_size BETWEEN 1 AND 25 THEN 'small'
         |      WHEN p_size BETWEEN 26 AND 40 THEN 'medium'
         |      ELSE 'large' END AS size_class
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_distinct_on" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    // D7 DISTINCT ON first-row-per-group
+    Entry("q_distinct_on", CoreOps.distinctOn,
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS first_order_date
         |FROM (SELECT o_custkey, o_orderkey, o_orderdate,
         |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
         |  FROM orders)
-        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "q_scd2_lag" ->
+        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin),
+    // E1 SCD2 end-dating via window lead/lag
+    Entry("q_scd2_lag", CoreOps.scd2Lag,
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS start_date,
         | CAST(LEAD(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         |      - INTERVAL 1 DAY AS DATE) AS end_date
-        |FROM orders ORDER BY o_custkey, start_date, o_orderkey""".stripMargin,
-    "q_asof_join" ->
+        |FROM orders ORDER BY o_custkey, start_date, o_orderkey""".stripMargin),
+    // C5/C6 temporal as-of join + fallback coalesce
+    Entry("q_asof_join", CoreOps.asofJoin,
       """WITH cand AS (
         |  SELECT e.event_id, e.user_id, o.o_orderkey,
         |    ROW_NUMBER() OVER (PARTITION BY e.event_id
@@ -1393,8 +840,9 @@ object SparkEntry {
         |    FROM orders) WHERE rn = 1)
         |SELECT c.event_id, COALESCE(c.o_orderkey, e2.earliest_orderkey) AS resolved_orderkey
         |FROM cand c LEFT JOIN earliest e2 ON c.user_id = e2.o_custkey
-        |WHERE c.rn = 1 ORDER BY c.event_id""".stripMargin,
-    "q_priority_bestmatch" ->
+        |WHERE c.rn = 1 ORDER BY c.event_id""".stripMargin),
+    // C7 prioritized best-match resolution
+    Entry("q_priority_bestmatch", CoreOps.priorityBestmatch,
       """WITH intervals AS (
         |  SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS start_date,
         |    CAST(LEAD(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
@@ -1411,12 +859,15 @@ object SparkEntry {
         |SELECT event_id, o_orderkey AS matched_orderkey, prio FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id
         |    ORDER BY prio, start_date, o_orderkey) AS rn FROM cand)
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "q_theta_contains" -> thetaSql,
+        |WHERE rn = 1 ORDER BY event_id""".stripMargin),
+    // C4 theta substring-containment join
+    Entry("q_theta_contains", CoreOps.thetaContains, thetaSql),
+    // C4 at-scale rewrite: candidate-substring equi-join, same oracle
     // the candidate-substring equi-join rewrite must produce the IDENTICAL
     // result — one oracle, two plans
-    "q_theta_prefilter" -> thetaSql,
-    "q_dim_date_join" ->
+    Entry("q_theta_prefilter", CoreOps.thetaPrefilter, thetaSql),
+    // C8 join on computed key + D8/dim_date build + §1 surrogate keys
+    Entry("q_dim_date_join", CoreOps.dimDateJoin,
       """WITH dim_date AS (
         |  SELECT CAST(year * 100 + month AS INT) AS date_sk,
         |    year, month,
@@ -1431,17 +882,19 @@ object SparkEntry {
         |  ON CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INT) = d.year
         | AND CAST(EXTRACT(MONTH FROM l.l_shipdate) AS INT) = d.month
         |GROUP BY d.date_sk, d.year, d.month, d.month_name, d.month_year
-        |ORDER BY d.year, d.month""".stripMargin,
-    "q_ci_join" ->
+        |ORDER BY d.year, d.month""".stripMargin),
+    // C11 case-insensitive equi-join
+    Entry("q_ci_join", CoreOps.ciJoin,
       """WITH seg_dim AS (
         |  SELECT CAST(concat('0x', substr(md5(seg_name), 1, 8)) AS BIGINT) AS seg_sk, seg_name
         |  FROM (SELECT DISTINCT UPPER(c_mktsegment) AS seg_name FROM customer))
         |SELECT s.seg_sk, s.seg_name, COUNT(*) AS n_customers,
         |  CAST(SUM(CAST(c.c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_acctbal
         |FROM customer c JOIN seg_dim s ON LOWER(c.c_mktsegment) = LOWER(s.seg_name)
-        |GROUP BY s.seg_sk, s.seg_name ORDER BY s.seg_name""".stripMargin,
+        |GROUP BY s.seg_sk, s.seg_name ORDER BY s.seg_name""".stripMargin),
+    // A6 idempotent anti-join insert
     // same adaptive max/2 orderkey cut, same NOT-EXISTS anti shape
-    "q_dim_upsert_new" ->
+    Entry("q_dim_upsert_new", CoreOps.dimUpsertNew,
       """WITH mx AS (SELECT MAX(l_orderkey) AS mx FROM lineitem),
         |i AS (SELECT DISTINCT l_partkey, l_suppkey
         |  FROM lineitem CROSS JOIN mx WHERE l_orderkey * 2 > mx),
@@ -1450,8 +903,9 @@ object SparkEntry {
         |SELECT l_partkey, l_suppkey FROM i
         |WHERE NOT EXISTS (SELECT 1 FROM e
         |  WHERE e.l_partkey = i.l_partkey AND e.l_suppkey = i.l_suppkey)
-        |ORDER BY l_partkey, l_suppkey""".stripMargin,
-    "q_fact_upsert" ->
+        |ORDER BY l_partkey, l_suppkey""".stripMargin),
+    // A7 keyed upsert (ON CONFLICT DO UPDATE → full-outer merge)
+    Entry("q_fact_upsert", CoreOps.factUpsert,
       """WITH f AS (
         |  SELECT o_custkey, COUNT(*) AS n_orders,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_spend
@@ -1467,8 +921,9 @@ object SparkEntry {
         |       WHEN b.n_orders IS NOT NULL THEN 'inserted'
         |       ELSE 'kept' END AS merge_action
         |FROM f FULL OUTER JOIN b ON f.o_custkey = b.o_custkey
-        |ORDER BY o_custkey""".stripMargin,
-    "q_join_update" ->
+        |ORDER BY o_custkey""".stripMargin),
+    // A8 join-update (UPDATE … FROM → left join + coalesce)
+    Entry("q_join_update", CoreOps.joinUpdate,
       """WITH upd AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS settled_spend
@@ -1478,8 +933,9 @@ object SparkEntry {
         |  COALESCE(settled_spend, CAST(c_acctbal AS DOUBLE)) AS new_bal,
         |  CASE WHEN settled_spend IS NOT NULL THEN 1 ELSE 0 END AS was_updated
         |FROM customer LEFT JOIN upd ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-    "q_seed_dims" ->
+        |ORDER BY c_custkey""".stripMargin),
+    // D8 static seed dim (INSERT … VALUES → createDataFrame + broadcast)
+    Entry("q_seed_dims", CoreOps.seedDims,
       """SELECT prio_rank, prio_name, is_fast, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
         |FROM orders
@@ -1488,8 +944,9 @@ object SparkEntry {
         |  AS prio(prio_rank, prio_name, is_fast)
         |  ON o_orderpriority = prio_name
         |GROUP BY prio_rank, prio_name, is_fast
-        |ORDER BY prio_rank""".stripMargin,
-    "q_null_guard_join" ->
+        |ORDER BY prio_rank""".stripMargin),
+    // C9 null-guarded join condition ≡ plain equi-join
+    Entry("q_null_guard_join", CoreOps.nullGuardJoin,
       """WITH o AS (
         |  SELECT o_orderpriority,
         |    CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END AS cust_key_n
@@ -1501,37 +958,44 @@ object SparkEntry {
         |FROM o LEFT JOIN customer
         |  ON o.cust_key_n IS NOT NULL AND c_custkey = o.cust_key_n
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_cond_agg" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    // D3/D4 conditional aggregates
+    Entry("q_cond_agg", CoreOps.condAgg,
       """SELECT l_returnflag,
         | CAST(SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS n_highdisc,
         | COUNT(CASE WHEN l_tax > 0.04 THEN 1 END) AS n_hightax,
         | COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_multi_count_distinct" -> multiDistinctSql,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // D5 multiple exact COUNT(DISTINCT)
+    Entry("q_multi_count_distinct", CoreOps.multiCountDistinct, multiDistinctSql),
+    // D5 at-scale rewrite: Expand-free two-phase form, same oracle
     // the Expand-free two-phase rewrite must produce the IDENTICAL result —
     // one oracle, two plans (the q_theta_prefilter pattern)
-    "q_multi_count_distinct_twophase" -> multiDistinctSql,
-    "q_groupby_expr" ->
+    Entry("q_multi_count_distinct_twophase", CoreOps.multiCountDistinctTwophase, multiDistinctSql),
+    // D6 group key = expression
+    Entry("q_groupby_expr", CoreOps.groupbyExpr,
       """SELECT COALESCE(CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_orderstatus END,
         |         'PENDING') AS status_bucket,
         | CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year,
         | COUNT(*) AS n_orders,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1, 2 ORDER BY status_bucket, order_year""".stripMargin,
-    "q_set_ops" ->
+        |FROM orders GROUP BY 1, 2 ORDER BY status_bucket, order_year""".stripMargin),
+    // G set operations
+    Entry("q_set_ops", CoreOps.setOps,
       """WITH f AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'),
         |p AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'P')
         |SELECT 'both' AS tag, o_custkey FROM (SELECT o_custkey FROM f INTERSECT SELECT o_custkey FROM p)
         |UNION ALL
         |SELECT 'f_only' AS tag, o_custkey FROM (SELECT o_custkey FROM f EXCEPT SELECT o_custkey FROM p)
-        |ORDER BY tag, o_custkey""".stripMargin,
-    "q_regex_extract" ->
+        |ORDER BY tag, o_custkey""".stripMargin),
+    // B3 regex validation/extraction
+    Entry("q_regex_extract", CoreOps.regexExtract,
       """SELECT event_id, CAST(regexp_extract(props, '[0-9]+') AS INT) AS k_val,
         | CASE WHEN regexp_matches(props, '^\{"k": [0-9]+\}$') THEN 1 ELSE 0 END AS valid_props,
         | CASE WHEN UPPER(event_type) IN ('CLICK','VIEW') THEN 1 ELSE 0 END AS is_passive
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_scalar_strings" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    // H scalar batteries
+    Entry("q_scalar_strings", CoreOps.scalarStrings,
       """SELECT p_partkey, TRIM(p_name) AS name_trim, UPPER(p_name) AS name_upper,
         | LOWER(p_brand) AS brand_lower,
         | UPPER(SUBSTRING(SPLIT_PART(p_name, ' ', 1), 1, 1)) || SUBSTRING(SPLIT_PART(p_name, ' ', 1), 2)
@@ -1546,8 +1010,8 @@ object SparkEntry {
         | p_brand || '/' || p_type AS brand_type,
         | CASE WHEN p_name LIKE '%bolt%' THEN 1 ELSE 0 END AS is_bolt,
         | CAST(LENGTH(p_name) AS INT) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_scalar_dates" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Entry("q_scalar_dates", CoreOps.scalarDates,
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
         | CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year,
         | CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS order_month,
@@ -1557,29 +1021,32 @@ object SparkEntry {
         | CAST(o_orderdate - INTERVAL 1 DAY AS DATE) AS prev_day,
         | CAST(o_orderdate + INTERVAL 30 DAY AS DATE) AS plus_30,
         | CAST(strptime(strftime(o_orderdate, '%Y-%m-%d'), '%Y-%m-%d') AS DATE) AS roundtrip_date
-        |FROM orders WHERE o_orderkey % 100 = 0 ORDER BY o_orderkey""".stripMargin,
-    "q_scalar_casts" ->
+        |FROM orders WHERE o_orderkey % 100 = 0 ORDER BY o_orderkey""".stripMargin),
+    Entry("q_scalar_casts", CoreOps.scalarCasts,
       """SELECT l_orderkey, l_linenumber,
         | CAST(l_quantity AS INT) AS qty_int,
         | CASE WHEN l_returnflag = 'R' THEN TRUE ELSE FALSE END AS returned_bool,
         | CAST(CAST(l_discount AS DECIMAL(9,6)) AS DOUBLE) AS disc_dec,
         | CAST(l_linenumber AS VARCHAR) AS line_str
         |FROM lineitem WHERE l_orderkey % 100 = 0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_json_extract" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    // JSON read battery (typed from_json + path get_json_object)
+    Entry("q_json_extract", CoreOps.jsonExtract,
       """SELECT event_id,
         |  CAST(json_extract(props, '$.k') AS INT) AS k_json,
         |  CAST(json_extract_string(props, '$.k') AS INT) AS k_path,
         |  CAST(json_extract(props, '$.k') IS NOT NULL AS INT) AS has_k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_pivot" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    // OLAP reshaping: pivot/unpivot, rollup subtotals, ranking windows
+    Entry("q_pivot", OlapOps.pivotEvents,
       """SELECT user_id,
         |  COUNT(CASE WHEN lower(event_type) = 'click' THEN 1 END) AS n_click,
         |  COUNT(CASE WHEN lower(event_type) = 'view' THEN 1 END) AS n_view,
         |  COUNT(CASE WHEN lower(event_type) = 'purchase' THEN 1 END) AS n_purchase,
         |  COUNT(CASE WHEN lower(event_type) = 'signup' THEN 1 END) AS n_signup
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_decay_score" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // exact-decimal time-decay recency weighting
+    Entry("q_decay_score", OlapOps.decayScore,
       """WITH m AS (SELECT max(CAST(ts AS DATE)) AS tmax FROM events),
         |e AS (
         |  SELECT user_id, value,
@@ -1588,21 +1055,24 @@ object SparkEntry {
         |SELECT user_id, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(power(0.5, k) AS DECIMAL(13,12)) * CAST(value AS DECIMAL(12,2))) AS DOUBLE)
         |    AS decay_score
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_collect_types" ->
+        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // deterministic array aggregation (sorted collect_set profile)
+    Entry("q_collect_types", OlapOps.collectTypes,
       """SELECT user_id,
         |  array_to_string(list_sort(list(DISTINCT lower(event_type))), ' ') AS event_types,
         |  min(ts) AS first_ts, max(ts) AS last_ts, COUNT(*) AS n_events
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_histogram" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // fixed-bucket equi-width histogram
+    Entry("q_histogram", OlapOps.histogram,
       """WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders),
         |b AS (SELECT v,
         |  CAST(least(greatest(floor((v - 0.0) / 50000.0), 0.0), 11.0) AS INT) AS bucket FROM v)
         |SELECT bucket, bucket * 50000.0 + 0.0 AS bucket_lo,
         |  (bucket + 1) * 50000.0 + 0.0 AS bucket_hi,
         |  COUNT(*) AS n_orders, min(v) AS min_v, max(v) AS max_v
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q_lateral" ->
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
+    // LATERAL per-row top-N via the SQL entry point (decorrelated plan)
+    Entry("q_lateral", OlapOps.lateralTopOrders,
       """SELECT c_custkey, o_orderkey, CAST(o_totalprice AS DOUBLE) AS totalprice
         |FROM customer,
         |LATERAL (
@@ -1610,8 +1080,9 @@ object SparkEntry {
         |  WHERE o_custkey = c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2)
         |WHERE c_custkey < 200
-        |ORDER BY c_custkey, totalprice DESC, o_orderkey""".stripMargin,
-    "q_gapfill" ->
+        |ORDER BY c_custkey, totalprice DESC, o_orderkey""".stripMargin),
+    // dense hourly grid, zero-filled gaps (resample for trend/window stats)
+    Entry("q_gapfill", OlapOps.gapFill,
       """WITH e AS (
         |  SELECT lower(event_type) AS event_type, date_trunc('hour', ts) AS hour_start
         |  FROM events),
@@ -1623,38 +1094,42 @@ object SparkEntry {
         |  FROM (SELECT DISTINCT event_type FROM e) t CROSS JOIN s)
         |SELECT g.event_type, g.hour_start, COALESCE(h.n, 0) AS n_events
         |FROM g LEFT JOIN h USING (event_type, hour_start)
-        |ORDER BY event_type, hour_start""".stripMargin,
-    "q_unpivot" ->
+        |ORDER BY event_type, hour_start""".stripMargin),
+    // OLAP reshaping: unpivot (the pivot inverse)
+    Entry("q_unpivot", OlapOps.unpivotParts,
       """SELECT p_partkey, metric, value FROM (
         |  SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS value FROM part
         |  UNION ALL
         |  SELECT p_partkey, 'retailprice' AS metric, p_retailprice AS value FROM part)
-        |ORDER BY p_partkey, metric""".stripMargin,
-    "q_rollup" ->
+        |ORDER BY p_partkey, metric""".stripMargin),
+    // OLAP reshaping: rollup subtotals with grouping flags
+    Entry("q_rollup", OlapOps.rollupOrders,
       """SELECT order_year, o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
         |  CAST(GROUPING(order_year) AS INT) AS g_year,
         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_prio
         |FROM (SELECT *, CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year FROM orders)
         |GROUP BY ROLLUP(order_year, o_orderpriority)
-        |ORDER BY order_year NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q_cube" ->
+        |ORDER BY order_year NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    Entry("q_cube", OlapOps.cubeOrders,
       """SELECT order_year, o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
         |  CAST(GROUPING(order_year) AS INT) AS g_year,
         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_prio
         |FROM (SELECT *, CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year FROM orders)
         |GROUP BY CUBE(order_year, o_orderpriority)
-        |ORDER BY order_year NULLS FIRST, o_orderpriority NULLS FIRST, g_year, g_prio""".stripMargin,
-    "q_grouping_sets" ->
+        |ORDER BY order_year NULLS FIRST, o_orderpriority NULLS FIRST, g_year, g_prio""".stripMargin),
+    // explicit GROUPING SETS: only the asked-for marginals
+    Entry("q_grouping_sets", OlapOps.groupingSets,
       """SELECT order_year, o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
         |  CAST(GROUPING(order_year) AS INT) AS g_year,
         |  CAST(GROUPING(o_orderpriority) AS INT) AS g_prio
         |FROM (SELECT *, CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year FROM orders)
         |GROUP BY GROUPING SETS ((order_year), (o_orderpriority))
-        |ORDER BY order_year NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q_doc_chunks" ->
+        |ORDER BY order_year NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    // context-window chunking (50-token windows, stride 40, map-only)
+    Entry("q_doc_chunks", TextOps.docChunks,
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
         |c AS (
@@ -1665,8 +1140,10 @@ object SparkEntry {
         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
         |  CAST(len(chunk) AS INT) AS n_chunk_tokens,
         |  ${h32Sql("list_aggregate(chunk, 'string_agg', ' ')")} AS chunk_hash
-        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q_chunk_dedup" ->
+        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin),
+    // sub-document dedup: repeated 50-token windows across the corpus
+    // (boilerplate/template detection document dedup cannot see)
+    Entry("q_chunk_dedup", TextOps.chunkDedup,
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
         |c AS (
@@ -1681,8 +1158,9 @@ object SparkEntry {
         |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
         |  MIN(doc_id) AS keep_doc_id
         |FROM s GROUP BY chunk_hash HAVING COUNT(*) > 1
-        |ORDER BY chunk_hash""".stripMargin,
-    "q_window_battery" ->
+        |ORDER BY chunk_hash""".stripMargin),
+    // OLAP reshaping: ranking-window battery
+    Entry("q_window_battery", OlapOps.windowBattery,
       """SELECT o_custkey, o_orderkey,
         |  CAST(RANK() OVER w AS INT) AS rnk,
         |  CAST(DENSE_RANK() OVER w AS INT) AS drnk,
@@ -1696,15 +1174,17 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
         |FROM orders WHERE o_custkey % 10 = 0
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_scalar_subquery" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    // correlated scalar subquery via the spark.sql entry point (decorrelated)
+    Entry("q_scalar_subquery", OlapOps.scalarSubquery,
       """SELECT c_custkey, c_name,
         |  CAST((SELECT MAX(CAST(o_totalprice AS DECIMAL(12,2))) FROM orders
         |        WHERE o_custkey = c_custkey) AS DOUBLE) AS max_order,
         |  (SELECT COUNT(*) FROM orders
         |   WHERE o_custkey = c_custkey AND o_orderstatus = 'F') AS n_finished
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_range_frame" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    // RANGE (value-distance) window frame: trailing 3-day features
+    Entry("q_range_frame", OlapOps.rangeFrame,
       """SELECT o_custkey, o_orderkey, day_num,
         |  COUNT(*) OVER w AS n_orders_3d,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER w AS DOUBLE) AS spend_3d
@@ -1712,43 +1192,44 @@ object SparkEntry {
         |      FROM orders)
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY day_num
         |  RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, day_num, o_orderkey""".stripMargin,
-    "q_top_months_excl_jan" ->
+        |ORDER BY o_custkey, day_num, o_orderkey""".stripMargin),
+    // EP3: the reference's 7 analytical queries
+    Entry("q_top_months_excl_jan", Analytics.topMonthsExclJan,
       """SELECT CAST(EXTRACT(YEAR FROM l_shipdate) AS INT) AS ship_year,
         | CAST(EXTRACT(MONTH FROM l_shipdate) AS INT) AS ship_month,
         | COUNT(*) AS n_returned
         |FROM lineitem
         |WHERE EXTRACT(MONTH FROM l_shipdate) <> 1 AND l_returnflag = 'R'
-        |GROUP BY 1, 2 ORDER BY n_returned DESC, ship_year, ship_month LIMIT 5""".stripMargin,
-    "q_top_location_months" ->
+        |GROUP BY 1, 2 ORDER BY n_returned DESC, ship_year, ship_month LIMIT 5""".stripMargin),
+    Entry("q_top_location_months", Analytics.topLocationMonths,
       """SELECT n_name, strftime(o_orderdate, '%Y-%m') AS order_month,
         | COUNT(*) AS n_orders,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
         |FROM orders JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1, 2 ORDER BY n_orders DESC, n_name, order_month LIMIT 10""".stripMargin,
-    "q_top_pairs" ->
+        |GROUP BY 1, 2 ORDER BY n_orders DESC, n_name, order_month LIMIT 10""".stripMargin),
+    Entry("q_top_pairs", Analytics.topPairs,
       """SELECT p_name, s_name, COUNT(*) AS n_lines,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         | JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2 ORDER BY n_lines DESC, p_name, s_name LIMIT 10""".stripMargin,
-    "q_habitat_rank" ->
+        |GROUP BY 1, 2 ORDER BY n_lines DESC, p_name, s_name LIMIT 10""".stripMargin),
+    Entry("q_habitat_rank", Analytics.habitatRank,
       """SELECT c_mktsegment, COUNT(*) AS n_customers,
         | CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_acctbal
         |FROM customer GROUP BY c_mktsegment
-        |ORDER BY n_customers DESC, c_mktsegment""".stripMargin,
-    "q_quality_summary" ->
+        |ORDER BY n_customers DESC, c_mktsegment""".stripMargin),
+    Entry("q_quality_summary", Analytics.qualitySummary,
       """SELECT o_orderpriority, COUNT(*) AS n_orders,
         | COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_finished,
         | COUNT(CASE WHEN o_totalprice > 200000 THEN 1 END) AS n_large,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_top_users" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Entry("q_top_users", Analytics.topUsers,
       """SELECT c_custkey, c_name, COUNT(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2 ORDER BY n_orders DESC, c_custkey LIMIT 10""".stripMargin,
-    "q_top_monthly_unique" ->
+        |GROUP BY 1, 2 ORDER BY n_orders DESC, c_custkey LIMIT 10""".stripMargin),
+    Entry("q_top_monthly_unique", Analytics.topMonthlyUniqueLocations,
       """WITH user_monthly AS (
         |  SELECT o_custkey, strftime(o_orderdate, '%Y-%m') AS order_month,
         |    COUNT(DISTINCT l_suppkey) AS n_distinct_suppliers
@@ -1758,16 +1239,17 @@ object SparkEntry {
         |    ORDER BY n_distinct_suppliers DESC, order_month) AS rn
         |  FROM user_monthly)
         |SELECT o_custkey, order_month, n_distinct_suppliers FROM ranked WHERE rn = 1
-        |ORDER BY n_distinct_suppliers DESC, o_custkey LIMIT 10""".stripMargin,
-    "q_dedup_exact" ->
+        |ORDER BY n_distinct_suppliers DESC, o_custkey LIMIT 10""".stripMargin),
+    // LLM-data-pipeline tier (SURVEY.md §7 tier 4) — dedup
+    Entry("q_dedup_exact", TextOps.dedupExact,
       """SELECT doc_id, content_hash, keep_doc_id, n_copies,
         | CAST(doc_id <> keep_doc_id AS INT) AS is_dup
         |FROM (SELECT doc_id, sha256(lower(trim(text))) AS content_hash,
         |  MIN(doc_id) OVER (PARTITION BY sha256(lower(trim(text)))) AS keep_doc_id,
         |  COUNT(*) OVER (PARTITION BY sha256(lower(trim(text)))) AS n_copies
         | FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "q_dedup_minhash" ->
+        |ORDER BY doc_id""".stripMargin),
+    Entry("q_dedup_minhash", TextOps.dedupMinhash,
       s"""$minhashBandedCtes,
         |rep AS (
         |  SELECT band_id, band_key, min(doc_id) AS bucket_rep
@@ -1777,8 +1259,9 @@ object SparkEntry {
         |  CAST(b.doc_id <> min(r.bucket_rep) AS INT) AS is_dup
         |FROM banded b JOIN rep r USING (band_id, band_key)
         |GROUP BY b.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-    "q_dedup_incremental" ->
+        |ORDER BY b.doc_id""".stripMargin),
+    // incremental probe of a persisted MinHash bucket table (multi-batch)
+    Entry("q_dedup_incremental", TextOps.dedupIncremental,
       s"""$minhashBandedCtes,
         |exist AS (
         |  SELECT band_id, band_key, min(doc_id) AS bucket_rep
@@ -1789,15 +1272,17 @@ object SparkEntry {
         |  CAST(min(e.bucket_rep) IS NOT NULL AS INT) AS is_known_dup
         |FROM nb LEFT JOIN exist e USING (band_id, band_key)
         |GROUP BY nb.doc_id
-        |ORDER BY nb.doc_id""".stripMargin,
-    "q_dedup_cc" ->
+        |ORDER BY nb.doc_id""".stripMargin),
+    // transitive closure of the band graph: connected-component clusters
+    Entry("q_dedup_cc", TextOps.dedupCC,
       s"""$ccComponentCtes
         |SELECT doc_id, component_id,
         |  CAST(doc_id <> component_id AS INT) AS is_dup
-        |FROM comp ORDER BY doc_id""".stripMargin,
+        |FROM comp ORDER BY doc_id""".stripMargin),
+    // CC with the exact-Jaccard verify stage (band collision = recall only)
     // same band buckets (cap-guarded), exact token-hash-set Jaccard
     // verify by integer cross-multiply, hooked-component tail
-    "q_dedup_cc_verified" -> {
+    Entry("q_dedup_cc_verified", TextOps.dedupCCVerified, {
       import graft.queries.TextOps.{CcJaccardTauDen, CcJaccardTauNum, LshBucketCap}
       s"""$minhashBandedCtes,
         |bkt2 AS (SELECT band_id, band_key, count(*) AS bsz
@@ -1821,14 +1306,17 @@ object SparkEntry {
         |SELECT doc_id, cluster_id AS component_id,
         |  CAST(doc_id <> cluster_id AS INT) AS is_dup
         |FROM comp ORDER BY doc_id""".stripMargin
-    },
+    }),
+    // incremental verified dedup: batch probes the persisted band table,
+    // exact-Jaccard verify, component UPDATE at (touched comps + batch)
+    // scale — fixture-proven equal to the full recompute
     // doc-level reference of the incremental update: existing-only
     // clustering (the persisted state), combined-bucket batch candidates
     // (>= 1 batch endpoint), exact-Jaccard verify, then a SECOND hooked
     // pass over the CONTRACTED (labels + batch ids) graph. The size
     // prefilter is an optimization (can never change what verifies) and
     // is deliberately absent here, as in the cc_verified oracle.
-    "q_dedup_inc_verified" -> {
+    Entry("q_dedup_inc_verified", TextOps.dedupIncVerified, {
       import graft.queries.TextOps.{CcJaccardTauDen, CcJaccardTauNum, LshBucketCap}
       def verifySql(cand: String, out: String) =
         s"""$out AS (SELECT doc_id_a AS src, doc_id_b AS dst FROM (
@@ -1881,17 +1369,17 @@ object SparkEntry {
         |  FROM ts t JOIN ucomp u ON t.doc_id = u.doc_id
         |  WHERE t.doc_id % 10 = 0)
         |ORDER BY doc_id""".stripMargin
-    },
-    "q_dedup_simhash" ->
+    }),
+    Entry("q_dedup_simhash", TextOps.dedupSimhash,
       s"""$simhashSqlCtes
-        |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin,
+        |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin),
     // same signatures, then the shared Hamming-verified clustering tail:
     // cap-guarded star candidates, bit_count(xor) <= 3 verify, walk
-    "q_dedup_simhash_cluster" ->
+    Entry("q_dedup_simhash_cluster", TextOps.dedupSimhashCluster,
       s"""$simhashSqlCtes,
         |${hammingClusterSql("sig", "simhash", nBands = 4, bandBits = 8,
-          hammingMax = graft.queries.TextOps.SimhashHammingMax)}""".stripMargin,
-    "q_dedup_ngram" ->
+          hammingMax = graft.queries.TextOps.SimhashHammingMax)}""".stripMargin),
+    Entry("q_dedup_ngram", TextOps.dedupNgram,
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
         |s AS (
@@ -1912,8 +1400,10 @@ object SparkEntry {
         |  JOIN s sb ON sb.doc_id = doc_id_b)
         |SELECT doc_id_a, doc_id_b, jaccard FROM j
         |WHERE jaccard >= 0.8
-        |ORDER BY doc_id_a, doc_id_b""".stripMargin,
-    "q_dedup_contain" ->
+        |ORDER BY doc_id_a, doc_id_b""".stripMargin),
+    // asymmetric containment near-dup (quote/subset pairs Jaccard misses):
+    // min-5 sketch probed against the full inverted shingle postings
+    Entry("q_dedup_contain", TextOps.dedupContain,
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
         |s AS (
@@ -1941,8 +1431,8 @@ object SparkEntry {
         |     OR (len(sa.h) = len(sb.h) AND doc_id_a < doc_id_b))
         |SELECT doc_id_a, doc_id_b, n_a, n_b, containment FROM j
         |WHERE containment >= 0.9
-        |ORDER BY doc_id_a, doc_id_b""".stripMargin,
-    "q_fingerprint" ->
+        |ORDER BY doc_id_a, doc_id_b""".stripMargin),
+    Entry("q_fingerprint", TextOps.fingerprint,
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
         |s AS (
@@ -1953,12 +1443,18 @@ object SparkEntry {
         |SELECT doc_id, CAST(r AS INT) AS rank, h[r] AS shingle_hash
         |FROM s CROSS JOIN (SELECT unnest(range(1, 6)) AS r)
         |WHERE r <= len(h)
-        |ORDER BY doc_id, rank""".stripMargin,
-    "q_decontaminate" -> decontaminateSql,
+        |ORDER BY doc_id, rank""".stripMargin),
+    // benchmark decontamination: broadcast the eval shingle set, map-side
+    // probe the training corpus (GPT-3-style n-gram overlap)
+    Entry("q_decontaminate", TextOps.decontaminate, decontaminateSql),
+    // same answer via a distributed BloomFilterAggregate prefilter + exact
+    // confirm join — the shape for eval sets too big to broadcast exactly
     // the bloom prefilter is transparent to the answer (false positives
     // die in the exact confirm join), so the oracle is shared verbatim
-    "q_decontaminate_bloom" -> decontaminateSql,
-    "q_split_leakage" -> {
+    Entry("q_decontaminate_bloom", (s, d) => TextOps.decontaminateBloom(s, d), decontaminateSql),
+    // cross-split contamination audit: test-doc shingles probed against
+    // per-shingle train counts (shuffle join — neither side broadcastable)
+    Entry("q_split_leakage", TextOps.splitLeakage, {
       val bucket = h32Sql("concat('split_', CAST(doc_id AS VARCHAR))") + " % 100"
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
@@ -1983,8 +1479,10 @@ object SparkEntry {
         |FROM te JOIN trc USING (sh)
         |GROUP BY te.doc_id, te.n_shingles
         |ORDER BY te.doc_id""".stripMargin
-    },
-    "q_seq_pack" ->
+    }),
+    // training-context packing: per-source concat-and-chunk pack assignment
+    // via one window cumsum (no sequential recurrence)
+    Entry("q_seq_pack", CurationOps.seqPack,
       """WITH d AS (
         |  SELECT source, doc_id,
         |    CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS INT) AS n_tokens
@@ -1997,9 +1495,14 @@ object SparkEntry {
         |SELECT source, doc_id, n_tokens,
         |  CAST(cum_excl // 256 AS BIGINT) AS pack_id,
         |  CAST(cum_excl % 256 AS BIGINT) AS pack_offset
-        |FROM c ORDER BY source, doc_id""".stripMargin,
-    "q_lm_score" -> s"SELECT * FROM ($lmFamiliarityCore) ORDER BY doc_id",
-    "q_dsir" ->
+        |FROM c ORDER BY source, doc_id""".stripMargin),
+    // CCNet-style LM quality scoring: self-estimated bigram model, exact-int
+    // ratio-of-sums familiarity (division-only, hash-stable cross-engine)
+    Entry("q_lm_score", CurationOps.lmFamiliarity,
+      s"SELECT * FROM ($lmFamiliarityCore) ORDER BY doc_id"),
+    // DSIR importance weighting: target-domain vs raw bigram-LM familiarity
+    // ratio from ONE shared bigram pass (division-only, overflow-safe)
+    Entry("q_dsir", CurationOps.dsirWeights,
       s"""WITH t AS (
         |  SELECT doc_id, lang, string_split_regex(lower(trim(text)), '\\s+') AS tk
         |  FROM documents),
@@ -2033,8 +1536,10 @@ object SparkEntry {
         |  CAST(sbt AS DOUBLE) / CAST(sct AS DOUBLE) AS fam_target,
         |  (CAST(sbt AS DOUBLE) / CAST(sct AS DOUBLE)) /
         |    (CAST(sba AS DOUBLE) / CAST(sca AS DOUBLE)) AS dsir_weight
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    "q_pii_redact" ->
+        |FROM agg ORDER BY doc_id""".stripMargin),
+    // privacy tier: PII detection + masking (map-only regex pass over a
+    // deterministic contact string derived from event columns)
+    Entry("q_pii_redact", PrivacyOps.piiRedact,
       """WITH c AS (
         |  SELECT event_id,
         |    concat('contact u', CAST(user_id AS VARCHAR),
@@ -2056,8 +1561,9 @@ object SparkEntry {
         |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
         |    '\b[0-9]{3}-[0-9]{4}\b', '<PHONE>', 'g'),
         |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g') AS redacted
-        |FROM c ORDER BY event_id""".stripMargin,
-    "q_kanon_release" ->
+        |FROM c ORDER BY event_id""".stripMargin),
+    // k-anonymity releasability with one generalization step (dow -> '*')
+    Entry("q_kanon_release", PrivacyOps.kanonRelease,
       """WITH base AS (
         |  SELECT event_type, CAST(hour(ts) AS INT) AS hour,
         |    CAST(dayofweek(ts) + 1 AS INT) AS dow, user_id
@@ -2079,14 +1585,17 @@ object SparkEntry {
         |SELECT event_type, hour, '*' AS dow, n_events, n_users,
         |  CASE WHEN n_users >= 20 THEN 2 ELSE 0 END AS anon_level
         |FROM l2
-        |ORDER BY event_type, hour, dow""".stripMargin,
-    "q_priority_sample" ->
+        |ORDER BY event_type, hour, dow""".stripMargin),
+    // weighted sampling without replacement (priority sampling): map-only
+    // projection + TakeOrdered top-k, no transcendentals, no global sort
+    Entry("q_priority_sample", CurationOps.prioritySample,
       s"""SELECT doc_id, source, n_chars,
         |  CAST(n_chars AS DOUBLE) * 4294967296 /
         |    (${h32Sql("concat('prio_', CAST(doc_id AS VARCHAR))")} + 1) AS priority
         |FROM documents
-        |ORDER BY priority DESC, doc_id LIMIT 30""".stripMargin,
-    "q_data_split" ->
+        |ORDER BY priority DESC, doc_id LIMIT 30""".stripMargin),
+    // deterministic hash-bucket train/valid/test split (map-only, append-stable)
+    Entry("q_data_split", CurationOps.dataSplit,
       s"""WITH b AS (
         |  SELECT doc_id, source,
         |    ${h32Sql("concat('split_', CAST(doc_id AS VARCHAR))")} % 100 AS bucket
@@ -2095,16 +1604,19 @@ object SparkEntry {
         |  CASE WHEN bucket < 90 THEN 'train'
         |       WHEN bucket < 95 THEN 'valid'
         |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
+    // salted two-phase rank, hash-matching the same oracle (skew escape)
     // the two-phase salted rank must land on the SAME rows and ranks as the
     // single-window form — one oracle, both plans
-    "q_quota_twophase" -> sourceQuotaSql,
-    "q_salted_join" ->
+    Entry("q_quota_twophase", CurationOps.sourceQuotaTwoPhase, sourceQuotaSql),
+    // skew-salted join, hash-matching the plain join oracle
+    Entry("q_salted_join", ScaleOps.saltedJoin,
       """SELECT o_orderpriority, COUNT(*) AS n_lines,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_fuzzy_match" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // blocked levenshtein entity matching (equi-join blocks, verify inside)
+    Entry("q_fuzzy_match", CurationOps.fuzzyMatch,
       """WITH p AS (
         |  SELECT p_partkey, lower(p_name) AS name,
         |    split_part(lower(p_name), ' ', 1) AS blk,
@@ -2116,8 +1628,10 @@ object SparkEntry {
         |  AND a.p_partkey < b.p_partkey
         |WHERE levenshtein(a.name, b.name) <= 2
         |GROUP BY a.blk, a.nlen
-        |ORDER BY a.blk, a.nlen""".stripMargin,
-    "q_fuzzy_match_indel" ->
+        |ORDER BY a.blk, a.nlen""".stripMargin),
+    // complete lev<=2 matching: total-length ±2 band restores indel pairs;
+    // oracle is the UNBANDED naive pairwise form, proving the band drops nothing
+    Entry("q_fuzzy_match_indel", CurationOps.fuzzyMatchIndel,
       """WITH p AS (
         |  SELECT p_partkey, lower(p_name) AS name,
         |    split_part(lower(p_name), ' ', 1) AS blk
@@ -2128,22 +1642,25 @@ object SparkEntry {
         |FROM p a JOIN p b ON a.blk = b.blk AND a.p_partkey < b.p_partkey
         |WHERE levenshtein(a.name, b.name) <= 2
         |GROUP BY a.blk
-        |ORDER BY a.blk""".stripMargin,
-    "q_source_quota" -> sourceQuotaSql,
-    "q_mixture_sample" ->
+        |ORDER BY a.blk""".stripMargin),
+    // corpus curation: per-source quota, mixture sampling, repetition gates
+    Entry("q_source_quota", CurationOps.sourceQuota, sourceQuotaSql),
+    // corpus curation: deterministic mixture sampling
+    Entry("q_mixture_sample", CurationOps.mixtureSample,
       s"""WITH d AS (
         |  SELECT doc_id, source,
         |    $mixtureUSql AS u,
         |    CAST($mixtureRateSql AS BIGINT) AS keep_rate
         |  FROM documents)
         |SELECT doc_id, source, u, keep_rate FROM d
-        |WHERE u < keep_rate ORDER BY doc_id""".stripMargin,
-    "q_repetition" ->
+        |WHERE u < keep_rate ORDER BY doc_id""".stripMargin),
+    Entry("q_repetition", CurationOps.repetitionStats,
       s"""$repetitionCtes
         |SELECT doc_id, n_tokens, top_token_count, top_token_frac,
         |  n_bigrams, n_distinct_bigrams, dup_bigram_frac, passes_repetition
-        |FROM rep ORDER BY doc_id""".stripMargin,
-    "q_curation_pipeline" ->
+        |FROM rep ORDER BY doc_id""".stripMargin),
+    // the composed flow: dedup -> quality gate -> quota -> mixture
+    Entry("q_curation_pipeline", CurationOps.curationPipeline,
       s"""$repetitionCtes,
         |k AS (
         |  SELECT doc_id, source, n_chars
@@ -2162,8 +1679,9 @@ object SparkEntry {
         |    $mixtureRateSql AS rate
         |  FROM q WHERE rn <= 10)
         |SELECT doc_id, source, n_chars, quota_rank, u
-        |FROM s WHERE u < rate ORDER BY doc_id""".stripMargin,
-    "q_text_stats" ->
+        |FROM s WHERE u < rate ORDER BY doc_id""".stripMargin),
+    // text analysis
+    Entry("q_text_stats", TextOps.textStats,
       """WITH d AS (
         |  SELECT *, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
         |e AS (
@@ -2181,13 +1699,13 @@ object SparkEntry {
         |  n_bpe_tokens, avg_token_len, stopword_ratio,
         |  CASE WHEN n_tokens BETWEEN 5 AND 1000 AND stopword_ratio < 0.5
         |       THEN 1.0 - stopword_ratio ELSE 0.0 END AS quality_score
-        |FROM e ORDER BY doc_id""".stripMargin,
-    "q_lang_id" ->
+        |FROM e ORDER BY doc_id""".stripMargin),
+    Entry("q_lang_id", TextOps.langId,
       s"""$langIdCtes
         |SELECT doc_id, s_en, s_es, s_de, s_fr, pred_lang, lang,
         |  CAST(pred_lang = lang AS INT) AS is_match
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "q_tfidf" ->
+        |FROM p ORDER BY doc_id""".stripMargin),
+    Entry("q_tfidf", TextOps.tfidf,
       """WITH t AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
         |  FROM documents),
@@ -2199,8 +1717,8 @@ object SparkEntry {
         |    ROW_NUMBER() OVER (PARTITION BY tf.doc_id
         |      ORDER BY CAST(tf.tf AS DOUBLE) / df.df DESC, tf.term) AS rn
         |  FROM tf JOIN df USING (term))
-        |WHERE rn <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q_top_ngrams" ->
+        |WHERE rn <= 3 ORDER BY doc_id, rank""".stripMargin),
+    Entry("q_top_ngrams", TextOps.topNgrams,
       """WITH t AS (
         |  SELECT string_split_regex(lower(trim(text)), '\s+') AS tk FROM documents),
         |b AS (
@@ -2208,15 +1726,17 @@ object SparkEntry {
         |    i -> concat(tk[i+1], ' ', tk[i+2]))) AS bigram
         |  FROM t WHERE len(tk) >= 2)
         |SELECT bigram, COUNT(*) AS n FROM b
-        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
+        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin),
+    // skew-salted two-phase aggregation, hash-matching the plain oracle
     // the plain-GROUP-BY oracle; the Spark side computes it via the
     // (key, salt) two-phase shape — one oracle, the skew-safe plan
-    "q_salted_agg" ->
+    Entry("q_salted_agg", ScaleOps.saltedAgg,
       """SELECT l_returnflag, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_stream_join" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // §2.I: stream-stream join (watermark-bounded attribution), batch analog
+    Entry("q_stream_join", graft.streaming.Streams.attributionJoinBatch,
       """WITH c AS (
         |  SELECT user_id, event_id AS click_id, ts AS click_ts
         |  FROM events WHERE lower(event_type) = 'click'),
@@ -2231,14 +1751,17 @@ object SparkEntry {
         |    AND c.click_ts <= p.purchase_ts
         |    AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR)
         |SELECT purchase_id, user_id, purchase_ts, click_id, click_ts, value
-        |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin,
-    "q_quantiles" ->
+        |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin),
+    // exact grouped quantiles (approx_percentile is the documented 100 TB path)
+    Entry("q_quantiles", ScaleOps.quantiles,
       """SELECT o_orderpriority, COUNT(*) AS n_orders,
         |  quantile_cont(CAST(o_totalprice AS DOUBLE), 0.25) AS p25,
         |  quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5) AS p50,
         |  quantile_cont(CAST(o_totalprice AS DOUBLE), 0.75) AS p75
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_winsorize" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // per-group p05/p95 outlier clipping: exact-percentile bounds frame
+    // (group-cardinality rows) broadcast back, clipping map-side
+    Entry("q_winsorize", ScaleOps.winsorize,
       """WITH b AS (
         |  SELECT event_type,
         |    quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi
@@ -2247,19 +1770,24 @@ object SparkEntry {
         |  CASE WHEN value IS NOT NULL THEN least(greatest(value, lo), hi) END AS clipped,
         |  (value < lo OR value > hi) AS is_clipped
         |FROM events e JOIN b USING (event_type)
-        |ORDER BY event_id""".stripMargin,
-    "q_hopping_counts" ->
+        |ORDER BY event_id""".stripMargin),
+    // §2.I: hopping (sliding) windows — each event in exactly two windows
+    Entry("q_hopping_counts", (s, dir) =>
+      graft.streaming.Streams.hoppingTypeCounts(Tables.events(s, dir))
+        .orderBy(col("window_start"), col("event_type")),
       """WITH h AS (
         |  SELECT event_type,
         |    time_bucket(INTERVAL 30 MINUTE, ts) - k * INTERVAL 30 MINUTE AS window_start
         |  FROM events CROSS JOIN (SELECT unnest(range(2)) AS k))
         |SELECT window_start, event_type, COUNT(*) AS n_events
         |FROM h GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
+        |ORDER BY window_start, event_type""".stripMargin),
+    // pure range (point-in-interval) join, bucketized equi-join rewrite —
+    // the oracle states the naive BETWEEN join; the plan is hash, not NLJ
     // the ORACLE is the naive nested-loop BETWEEN join (DuckDB's IEJoin
     // executes it); the Spark side must hash-match it from the bucketized
     // equi-join rewrite — one oracle, the scale-safe plan
-    "q_range_join" ->
+    Entry("q_range_join", ScaleOps.rangeJoin,
       """WITH i AS (
         |  SELECT o_custkey AS i_custkey, MIN(CAST(o_orderdate AS DATE)) AS lo
         |  FROM orders WHERE o_custkey < 100 GROUP BY o_custkey),
@@ -2268,14 +1796,15 @@ object SparkEntry {
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
         |FROM i2 JOIN orders ON CAST(o_orderdate AS DATE) BETWEEN lo AND hi
         |GROUP BY i_custkey, lo, hi
-        |ORDER BY i_custkey""".stripMargin,
+        |ORDER BY i_custkey""".stripMargin),
+    // Morton key arithmetic for z-order clustering (write side in LayoutSpec)
     // Morton spread via chained CTEs (each step referenced twice — a CTE
     // chain avoids the 2^4 textual blowup of inlining the magic-number
     // steps); bit-identical to Layout.zOrderKey's shift/and/or ladder.
     // Inputs quantize to the full 16-bit range from observed min/max first
     // (the zOrderKey domain contract): identical double arithmetic on both
     // sides — (c-lo)*65535.0/(hi-lo), mul before div — so FLOOR agrees
-    "q_zorder_key" ->
+    Entry("q_zorder_key", ScaleOps.zorderKeys,
       """WITH ob AS (
         |  SELECT o_orderkey, o_custkey,
         |    CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS dkey
@@ -2301,8 +1830,9 @@ object SparkEntry {
         |m4 AS (SELECT *, (a3 | (a3 << 1)) & 1431655765 AS a4,
         |               (b3 | (b3 << 1)) & 1431655765 AS b4 FROM m3)
         |SELECT o_orderkey, o_custkey, dkey, a4 | (b4 << 1) AS zkey
-        |FROM m4 ORDER BY o_orderkey""".stripMargin,
-    "q_stratified_sample" ->
+        |FROM m4 ORDER BY o_orderkey""".stripMargin),
+    // deterministic hash-keyed stratified sampling (map-only, reproducible)
+    Entry("q_stratified_sample", ScaleOps.stratifiedSample,
       """WITH s AS (
         |  SELECT event_id, user_id, event_type,
         |    CASE WHEN lower(event_type) = 'purchase' THEN 100
@@ -2313,19 +1843,22 @@ object SparkEntry {
         |  FROM events)
         |SELECT event_id, user_id, event_type,
         |  CAST(strat_rate AS INT) AS strat_rate, CAST(h_bucket AS INT) AS h_bucket
-        |FROM s WHERE h_bucket < strat_rate ORDER BY event_id""".stripMargin,
-    "q_multimodal_meta" ->
+        |FROM s WHERE h_bucket < strat_rate ORDER BY event_id""".stripMargin),
+    // multimodal metadata plumbing (SQL-expressible deterministic stub)
+    Entry("q_multimodal_meta", TextOps.multimodalMeta,
       s"""SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  sha256(text) AS content_sha,
         |  CAST(64 + CAST(concat('0x', substr(sha256(text), 1, 8)) AS BIGINT) % 193 AS INT) AS width,
         |  CAST(64 + CAST(concat('0x', substr(sha256(text), 9, 8)) AS BIGINT) % 129 AS INT) AS height,
         |  CAST(1 + octet_length(encode(text)) % 7 AS INT) AS n_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // multimodal feature-extract: resize plan + quantized pseudo-embedding
+    // (column twin of the MultimodalStub batch encoder)
     // the resize scale is one double division + min (correctly-rounded
     // IEEE both engines); embedding slices are integer arithmetic on the
     // one per-payload sha digest
-    "q_media_features" -> {
+    Entry("q_media_features", TextOps.mediaFeatures, {
       val box = s"${graft.queries.TextOps.MediaFitBox}.0"
       s"""WITH m AS (SELECT doc_id,
         |    CAST(64 + CAST(concat('0x', substr(sha256(text), 1, 8)) AS BIGINT) % 193 AS INT) AS width,
@@ -2343,10 +1876,12 @@ object SparkEntry {
         |      AS VARCHAR)), ' ')
         |    AS embedding
         |FROM s ORDER BY doc_id""".stripMargin
-    },
+    }),
+    // multimodal frame sampling: stride Generate over per-payload frame
+    // counts, per-frame digests, payload never travels with the frames
     // same frame arithmetic as q_multimodal_meta; range() end-exclusive
     // stride == sequence(0, n-1, stride) inclusive — identical index sets
-    "q_frame_sample" -> {
+    Entry("q_frame_sample", TextOps.frameSample, {
       val stride = graft.queries.TextOps.FrameStride
       s"""WITH m AS (SELECT doc_id, sha256(text) AS content_sha,
         |    CAST(1 + octet_length(encode(text)) % 7 AS INT) AS n_frames
@@ -2358,11 +1893,12 @@ object SparkEntry {
         |  sha256(concat(content_sha, ':', CAST(frame_idx AS VARCHAR))) AS frame_sha,
         |  frame_idx = 0 AS is_key_frame
         |FROM f ORDER BY doc_id, frame_idx""".stripMargin
-    },
+    }),
+    // pHash near-dup: integer DCT sign bits, Hamming-banded LSH cluster
     // same token-hash luma grid, same build-time-literal integer DCT
     // sign bits, same 7×9-bit banding and bucket-min cluster (the
     // dedup_simhash_cluster idiom); phashExprs emits BOTH trees
-    "q_media_neardup" -> {
+    Entry("q_media_neardup", TextOps.mediaNeardup, {
       import graft.queries.TextOps.{PhBandBits, PhBands, PhGrid}
       val n = PhGrid * PhGrid
       val (rowPassSql, colPassSql) = graft.queries.TextOps.dctExprs(
@@ -2385,15 +1921,21 @@ object SparkEntry {
         |${hammingClusterSql("ph", "phash", nBands = PhBands,
           bandBits = PhBandBits,
           hammingMax = graft.queries.TextOps.PhHammingMax)}""".stripMargin
-    },
-    "q_hourly_counts" ->
+    }),
+    // §2.I: the streaming window aggregation run in batch mode (the
+    // transform is mode-agnostic; the watermark is a no-op on batch)
+    Entry("q_hourly_counts", (s, dir) =>
+      graft.streaming.Streams.hourlyTypeCounts(Tables.events(s, dir))
+        .orderBy(col("window_start"), col("event_type")),
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         |  COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q_stream_dedup" ->
+        |ORDER BY 1, 2""".stripMargin),
+    // §2.I: first-delivery-wins ingest dedup, batch analog of
+    // dropDuplicatesWithinWatermark with in-query modeled re-delivery
+    Entry("q_stream_dedup", graft.streaming.Streams.streamDedupBatch,
       """WITH deliveries AS (
         |  SELECT event_id, ts, user_id, event_type, value, 1 AS delivery FROM events
         |  UNION ALL
@@ -2405,11 +1947,16 @@ object SparkEntry {
         |SELECT event_id, user_id, event_type, value, delivery FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY ts, delivery) AS rn
         |  FROM deliveries)
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "q_sessionize" -> sessionizeSql,
+        |WHERE rn = 1 ORDER BY event_id""".stripMargin),
+    // §2.I: gap sessionization, batch analog of Sessionize (same boundaries;
+    // property-tied to Sessionize.fold in SessionizeProps)
+    Entry("q_sessionize", graft.streaming.Streams.sessionizeBatch, sessionizeSql),
+    // §2.I: the same sessions via the built-in session_window — hash-matches
+    // the q_sessionize oracle (one oracle, two plans: built-in vs custom)
     // the built-in session_window form must produce the IDENTICAL sessions
-    "q_session_window" -> sessionizeSql,
-    "q_fact_activity" ->
+    Entry("q_session_window", graft.streaming.Streams.sessionWindowBatch, sessionizeSql),
+    // EP2 fact-build shapes over testdata (08_ETL2_part2.sql)
+    Entry("q_fact_activity", FactOps.factActivity,
       """SELECT p_brand, n_name AS supp_nation,
         |  CAST(EXTRACT(YEAR FROM l_shipdate) * 100 + EXTRACT(MONTH FROM l_shipdate) AS INT) AS date_sk,
         |  COUNT(*) AS n_lines,
@@ -2421,8 +1968,8 @@ object SparkEntry {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |GROUP BY 1, 2, 3
-        |ORDER BY p_brand, supp_nation, date_sk""".stripMargin,
-    "q_fact_monthly_summary" ->
+        |ORDER BY p_brand, supp_nation, date_sk""".stripMargin),
+    Entry("q_fact_monthly_summary", FactOps.factMonthlySummary,
       """WITH cand AS (
         |  SELECT e.event_id, e.user_id, e.ts, e.event_type, e.value, e.props, o.o_orderkey,
         |    ROW_NUMBER() OVER (PARTITION BY e.event_id
@@ -2448,8 +1995,9 @@ object SparkEntry {
         |  COUNT(DISTINCT props) AS n_distinct_props
         |FROM resolved
         |GROUP BY 1, 2, 3
-        |ORDER BY user_id, month_year, sub_sk NULLS FIRST""".stripMargin,
-    "q_sim_topk" ->
+        |ORDER BY user_id, month_year, sub_sk NULLS FIRST""".stripMargin),
+    // similarity search
+    Entry("q_sim_topk", VectorOps.simTopk,
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |pr AS (SELECT vec_id AS probe_id, embedding AS p_emb, n FROM e WHERE vec_id < 5),
         |pairs AS (
@@ -2459,11 +2007,12 @@ object SparkEntry {
         |SELECT probe_id, CAST(rnk AS INT) AS rank, neighbor_id, cos_sim FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
         |  FROM pairs)
-        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin,
+        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin),
+    // MMR diversity re-ranking of each probe's cosine top-10 pool
     // same pool (the simTopk shape, rank <= 10), same greedy rounds
     // unrolled: per round the engine-mirrored cosine MAX against the
     // picked set, score = rel - maxsim, argmax with cand-id tiebreak
-    "q_mmr" -> {
+    Entry("q_mmr", VectorOps.mmrRerank, {
       import graft.queries.VectorOps.{MmrK, MmrPoolK, RrfProbes}
       val rounds = (2 to MmrK).map { k =>
         s"""sc$k AS (SELECT p.probe_id, p.cand_id, p.rel,
@@ -2497,8 +2046,10 @@ object SparkEntry {
         |SELECT probe_id, mmr_rank, cand_id AS vec_id, rel, mmr_score FROM (
         |  ${(1 to MmrK).map(k => s"SELECT * FROM s$k").mkString("\n  UNION ALL ")})
         |ORDER BY probe_id, mmr_rank""".stripMargin
-    },
-    "q_retrieval_gated" ->
+    }),
+    // retrieve-from-curated composition: candidates LM-quality-gated
+    // (aggregate-barriered) before the cosine pass
+    Entry("q_retrieval_gated", VectorOps.retrievalGated,
       s"""WITH g AS (
         |  SELECT doc_id FROM ($lmFamiliarityCore)
         |  WHERE familiarity >= ${graft.queries.VectorOps.RetrievalGateMin}),
@@ -2512,8 +2063,8 @@ object SparkEntry {
         |SELECT probe_id, CAST(rnk AS INT) AS rank, neighbor_id, cos_sim FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
         |  FROM pairs)
-        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin,
-    "q_sim_lsh" ->
+        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin),
+    Entry("q_sim_lsh", VectorOps.simLsh,
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |b AS (
         |  SELECT vec_id, embedding, n,
@@ -2530,12 +2081,14 @@ object SparkEntry {
         |SELECT probe_id, bucket, CAST(rnk AS INT) AS rank, neighbor_id, cos_sim FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
         |  FROM pairs)
-        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin,
+        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin),
+    // NSW-class graph ANN: bucketed top-Deg neighbor graph + unrolled
+    // greedy beam search (recall@3 measured in VectorOpsSpec)
     // two-table bucketed candidate pairs, per-node top-Deg neighbor
     // graph (UNION-symmetrized), probe's-own-bucket beam seeds, then the
     // unrolled beam hops — expansion (UNION dedupes, matching
     // .distinct()), rescoring, per-probe top-B
-    "q_graph_ann" -> {
+    Entry("q_graph_ann", VectorOps.graphAnn, {
       import graft.queries.VectorOps.{GraphAnnBeam, GraphAnnDeg,
         GraphAnnEntries, GraphAnnHops}
       def bucketSql(j0: Int) =
@@ -2588,8 +2141,9 @@ object SparkEntry {
         |  WHERE EXISTS (SELECT 1 FROM bm$GraphAnnHops f
         |    WHERE f.probe_id = s.probe_id AND f.cand = s.cand))
         |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin
-    },
-    "q_embed_dedup" ->
+    }),
+    // similarity search: embedding near-dup
+    Entry("q_embed_dedup", VectorOps.embedDedup,
       s"""WITH e AS (SELECT vec_id, label, embedding, len(embedding) AS n FROM embeddings),
         |bk AS (
         |  SELECT vec_id, label, embedding, n,
@@ -2604,8 +2158,9 @@ object SparkEntry {
         |  FROM bk a JOIN bk b
         |    ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
         |WHERE cos_sim >= 0.3
-        |ORDER BY label, vec_id_a, vec_id_b""".stripMargin,
-    "q_vec_quant" ->
+        |ORDER BY label, vec_id_a, vec_id_b""".stripMargin),
+    // per-vector int8 scalar quantization + reconstruction-error audit
+    Entry("q_vec_quant", VectorOps.vecQuantize,
       """WITH e AS (
         |  SELECT vec_id, embedding,
         |    CAST(list_min(embedding) AS DOUBLE) AS mn,
@@ -2622,18 +2177,22 @@ object SparkEntry {
         |  list_reduce(list_transform(range(1, len(embedding) + 1),
         |    i -> abs(CAST(embedding[i] AS DOUBLE) - (mn + codes[i] * coalesce(scale, 0.0)))),
         |    (x, y) -> x + y) / len(embedding) AS mean_abs_err
-        |FROM c ORDER BY vec_id""".stripMargin,
+        |FROM c ORDER BY vec_id""".stripMargin),
+    // quantized Lloyd's k-means: broadcast-literal centroids, map-only
+    // assignment, one K·d-cell aggregate per update — exact int arithmetic
     // two unrolled Lloyd iterations over 1e-6-quantized embeddings; the 64
     // in range(1, 65) is the embedding width (schema constant, all SFs).
     // Exact int arithmetic end to end; floor((exact double)/n) centroids.
-    "q_kmeans" ->
+    Entry("q_kmeans", VectorOps.kmeans,
       s"""WITH $kmeansCte
         |SELECT vec_id, CAST(cid AS INT) AS cluster, dist AS dist2
-        |FROM a2 ORDER BY vec_id""".stripMargin,
+        |FROM a2 ORDER BY vec_id""".stripMargin),
+    // SemDeDup: cosine near-dup keep/drop inside the LEARNED k-means
+    // clusters (LSH sub-bucket pruned) — shares kmeans' centroid set
     // SemDeDup: the SAME trained clusters (shared kmeansCte, a2 = final
     // assignment), the SAME 4-plane bucket as q_embed_dedup, min-lower-id
     // keep rule
-    "q_semdedup" ->
+    Entry("q_semdedup", VectorOps.semDedup,
       s"""WITH $kmeansCte,
         |e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |bk AS (
@@ -2652,8 +2211,9 @@ object SparkEntry {
         |SELECT bk.vec_id, CAST(bk.cluster AS INT) AS cluster, bk.bucket,
         |  p.dup_of IS NULL AS is_kept, p.dup_of
         |FROM bk LEFT JOIN p USING (vec_id)
-        |ORDER BY bk.vec_id""".stripMargin,
-    "q_sim_ivf" ->
+        |ORDER BY bk.vec_id""".stripMargin),
+    // similarity search: IVF cosine top-k
+    Entry("q_sim_ivf", VectorOps.simIvf,
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |c AS (SELECT vec_id AS cid, embedding AS c_emb FROM e WHERE vec_id < 8),
         |sims AS (
@@ -2673,10 +2233,12 @@ object SparkEntry {
         |SELECT probe_id, cell, CAST(rnk AS INT) AS rank, neighbor_id, cos_sim FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
         |  FROM pairs)
-        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin,
+        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin),
+    // multi-probe IVF: each probe searches its nprobe nearest cells —
+    // the recall/cost knob (curve measured in VectorOpsSpec)
     // same cell assignment as q_sim_ivf; probes additionally keep their
     // top-IvfNProbe cells (r <= nprobe instead of r = 1 on the probe side)
-    "q_sim_ivf_multi" ->
+    Entry("q_sim_ivf_multi", VectorOps.simIvfMulti,
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |c AS (SELECT vec_id AS cid, embedding AS c_emb FROM e WHERE vec_id < 8),
         |sims AS (
@@ -2697,8 +2259,10 @@ object SparkEntry {
         |SELECT probe_id, CAST(rnk AS INT) AS rank, neighbor_id, cos_sim FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
         |  FROM pairs)
-        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin,
-    "q_cdc_apply" ->
+        |WHERE rnk <= 3 ORDER BY probe_id, rank""".stripMargin),
+    // table maintenance: CDC merge-apply (last-writer-wins + tombstones,
+    // the foreachBatch-MERGE shape), key-skew diagnostics, compaction plan
+    Entry("q_cdc_apply", MaintenanceOps.cdcApply,
       """WITH latest AS (
         |  SELECT user_id, event_type, value FROM (
         |    SELECT user_id, event_type, value,
@@ -2715,8 +2279,8 @@ object SparkEntry {
         |       ELSE 'update' END AS action
         |FROM snap s FULL OUTER JOIN latest l ON s.key = l.user_id
         |WHERE COALESCE(l.event_type, '') <> 'error'
-        |ORDER BY key""".stripMargin,
-    "q_skew_report" ->
+        |ORDER BY key""".stripMargin),
+    Entry("q_skew_report", MaintenanceOps.skewReport,
       """WITH li AS (SELECT COUNT(*) AS cnt FROM lineitem GROUP BY l_orderkey),
         |o AS (SELECT COUNT(*) AS cnt FROM orders GROUP BY o_custkey),
         |e AS (SELECT COUNT(*) AS cnt FROM events GROUP BY user_id),
@@ -2729,8 +2293,8 @@ object SparkEntry {
         |  quantile_cont(CAST(cnt AS DOUBLE), 0.5) AS p50_cnt,
         |  quantile_cont(CAST(cnt AS DOUBLE), 0.99) AS p99_cnt,
         |  CAST(MAX(cnt) AS DOUBLE) / AVG(cnt) AS skew_ratio
-        |FROM u GROUP BY key_col ORDER BY key_col""".stripMargin,
-    "q_compaction_plan" ->
+        |FROM u GROUP BY key_col ORDER BY key_col""".stripMargin),
+    Entry("q_compaction_plan", MaintenanceOps.compactionPlan,
       """WITH p AS (
         |  SELECT source, lang, COUNT(*) AS n_docs,
         |    CAST(SUM(n_chars) AS BIGINT) AS total_chars,
@@ -2741,8 +2305,9 @@ object SparkEntry {
         |  FROM p)
         |SELECT source, lang, n_docs, total_chars, files_now, planned_files,
         |  GREATEST(0, files_now - planned_files) AS files_saved
-        |FROM q ORDER BY source, lang""".stripMargin,
-    "q_data_diff" -> {
+        |FROM q ORDER BY source, lang""".stripMargin),
+    // snapshot-to-snapshot reconciliation by content checksum
+    Entry("q_data_diff", MaintenanceOps.dataDiff, {
       val sum1 = h32Sql("text")
       val sum2 = h32Sql("CASE WHEN doc_id % 11 = 0 THEN upper(text) ELSE text END")
       s"""WITH v1 AS (
@@ -2760,8 +2325,10 @@ object SparkEntry {
         |  FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id)
         |SELECT source, status, COUNT(*) AS n_docs
         |FROM j GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-    "q_funnel" ->
+    }),
+    // behavioral analytics: staged conversion funnel, weekly retention
+    // cohorts, and per-day L-infinity distribution-drift monitoring
+    Entry("q_funnel", BehaviorOps.funnel,
       """WITH s1 AS (
         |  SELECT user_id, MIN(ts) AS t1 FROM events
         |  WHERE event_type = 'signup' GROUP BY user_id),
@@ -2779,8 +2346,8 @@ object SparkEntry {
         |  AVG(epoch_us(t2) - epoch_us(t1)) FROM s2
         |UNION ALL SELECT 3, 'purchase', COUNT(*),
         |  AVG(epoch_us(t3) - epoch_us(t2)) FROM s3
-        |ORDER BY stage""".stripMargin,
-    "q_retention" ->
+        |ORDER BY stage""".stripMargin),
+    Entry("q_retention", BehaviorOps.retention,
       """WITH ev AS (
         |  SELECT user_id,
         |    CAST((CAST(ts AS DATE) - DATE '1970-01-01') // 7 AS INT) AS week
@@ -2789,8 +2356,9 @@ object SparkEntry {
         |SELECT c.cohort_week, ev.week - c.cohort_week AS week_offset,
         |  COUNT(DISTINCT ev.user_id) AS n_users
         |FROM ev JOIN c ON ev.user_id = c.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_streaks" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // gaps-and-islands activity streaks (one window, no self-join)
+    Entry("q_streaks", BehaviorOps.streaks,
       """WITH days AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |i AS (
@@ -2801,8 +2369,9 @@ object SparkEntry {
         |runs AS (SELECT user_id, island, COUNT(*) AS len FROM i GROUP BY 1, 2)
         |SELECT user_id, COUNT(*) AS n_streaks, MAX(len) AS longest_streak,
         |  CAST(SUM(len) AS BIGINT) AS active_days
-        |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_drift_linf" ->
+        |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // behavioral analytics: per-day L-infinity drift monitor
+    Entry("q_drift_linf", BehaviorOps.driftLinf,
       """WITH c AS (
         |  SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS o
         |  FROM events GROUP BY 1, 2),
@@ -2817,8 +2386,10 @@ object SparkEntry {
         |SELECT day, day_total AS n_events,
         |  MAX(ABS(CAST(o AS DOUBLE) / day_total
         |          - CAST(type_total AS DOUBLE) / grand)) AS linf_drift
-        |FROM x GROUP BY day, day_total ORDER BY day""".stripMargin,
-    "q_heavy_hitters" -> {
+        |FROM x GROUP BY day, day_total ORDER BY day""".stripMargin),
+    // profiling: count-min-sketch heavy hitters (exact audit beside) and
+    // join-key inference via distinct-set containment
+    Entry("q_heavy_hitters", ProfileOps.heavyHitters, {
       // 4 hash functions = 4 disjoint 8-hex slices of ONE md5 digest
       val bucketSql =
         "CAST(concat('0x', substr(md5(CAST(l_partkey AS VARCHAR)), 1 + 8 * CAST(depth AS INT), 8)) AS BIGINT) % 64"
@@ -2836,8 +2407,8 @@ object SparkEntry {
         |  GROUP BY 1, 2)
         |SELECT l_partkey, est, exact, est - exact AS overestimate
         |FROM est ORDER BY est DESC, l_partkey LIMIT 10""".stripMargin
-    },
-    "q_fk_profile" -> {
+    }),
+    Entry("q_fk_profile", ProfileOps.fkProfile, {
       def pairSql(ct: String, cc: String, pt: String, pc: String): String =
         s"""SELECT '$ct.$cc' AS child_col, '$pt.$pc' AS parent_col,
           |  CAST(SUM(is_c) AS BIGINT) AS n_child_keys,
@@ -2857,10 +2428,12 @@ object SparkEntry {
         pairSql("events", "user_id", "customer", "c_custkey"))
         .mkString("SELECT * FROM (\n", "\nUNION ALL\n",
           "\n) ORDER BY child_col, parent_col")
-    },
+    }),
+    // distributed OLS: one exact-moment aggregate, closed-form fit at the
+    // O(groups) output edge — how a linear scorer trains at 100 TB
     // same exact int64 moments, same fixed double association order as
     // the Spark side — slope/intercept/r2 round identically
-    "q_ols_fit" ->
+    Entry("q_ols_fit", ProfileOps.olsFit,
       s"""WITH m AS (
         |  SELECT lang, COUNT(*) AS n,
         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -2883,11 +2456,13 @@ object SparkEntry {
         |    * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
         |    / nullif((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |    * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0.0) AS r2
-        |FROM m ORDER BY lang""".stripMargin,
+        |FROM m ORDER BY lang""".stripMargin),
+    // equi-depth histogram: exact-percentile split points + broadcast
+    // bucket assignment — the range-partition balance statistic
     // same exact i/8 quantile boundaries (binary fractions, identical
     // interpolation both engines — the q_quantiles precedent), same
     // closed-left `>` bucket rule
-    "q_equidepth" -> {
+    Entry("q_equidepth", ProfileOps.equidepth, {
       val bsList = (1 until graft.queries.ProfileOps.EquidepthBuckets)
         .map(i => i.toDouble / graft.queries.ProfileOps.EquidepthBuckets)
         .mkString("[", ", ", "]")
@@ -2898,10 +2473,11 @@ object SparkEntry {
         |SELECT bucket, COUNT(*) AS n, MIN(price) AS lo, MAX(price) AS hi
         |FROM (SELECT price, 1 + $bucketExpr AS bucket FROM l CROSS JOIN b)
         |GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
+    }),
+    // event-time lateness profile: the watermark-sizing statistic
     // same running-max window over the same arrival order; lateness is
     // exact integer microseconds, percentiles the q_quantiles contract
-    "q_lateness_profile" ->
+    Entry("q_lateness_profile", ProfileOps.latenessProfile,
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
         |l AS (SELECT event_type,
         |    MAX(ts_us) OVER (PARTITION BY user_id ORDER BY event_id
@@ -2913,10 +2489,11 @@ object SparkEntry {
         |  quantile_cont(CAST(late_us AS DOUBLE), 0.99) AS p99_late_us,
         |  MAX(late_us) AS max_late_us,
         |  CAST(COUNT(*) FILTER (WHERE late_us > 0) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS late_rate
-        |FROM l GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM l GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // one-pass numeric column profile (catalog "describe")
     // four single-scan profile legs; COUNT(DISTINCT) ignores NULLs in
     // both engines, min/max cast to DOUBLE after aggregation
-    "q_column_profile" -> {
+    Entry("q_column_profile", ProfileOps.columnProfile, {
       def leg(t: String, c: String) =
         s"""SELECT '$t.$c' AS column_name, COUNT(*) AS n_rows, COUNT($c) AS n_nonnull,
           |  COUNT(DISTINCT $c) AS n_distinct,
@@ -2931,10 +2508,11 @@ object SparkEntry {
         |UNION ALL
         |${leg("events", "value")})
         |ORDER BY column_name""".stripMargin
-    },
+    }),
+    // Gini concentration per priority: exact integer-cents rank sums
     // exact integer-cents rank sums (the q1_agg DECIMAL cast), one
     // fixed-association double expression at the end
-    "q_gini" ->
+    Entry("q_gini", ProfileOps.gini,
       """WITH c AS (SELECT o_orderkey, o_orderpriority,
         |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
         |  FROM orders),
@@ -2947,11 +2525,12 @@ object SparkEntry {
         |SELECT o_orderpriority, n, s AS total_cents,
         |  2.0 * CAST(s1 AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(s AS DOUBLE))
         |    - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE) AS gini
-        |FROM a ORDER BY o_orderpriority""".stripMargin,
+        |FROM a ORDER BY o_orderpriority""".stripMargin),
+    // robust outlier profile: element-picked median + MAD per group
     // element-picked lower medians (never interpolated) so every value is
     // a datum and |x-med|, the second pick, and the 3*MAD comparison are
     // single IEEE ops — identical in both engines
-    "q_mad_outliers" ->
+    Entry("q_mad_outliers", ProfileOps.madOutliers,
       """WITH e AS (SELECT event_type, event_id, value FROM events WHERE value IS NOT NULL),
         |r1 AS (SELECT *,
         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
@@ -2966,19 +2545,23 @@ object SparkEntry {
         |SELECT d.event_type, COUNT(*) AS n, MIN(d.med) AS med, MIN(m.mad) AS mad,
         |  COUNT(*) FILTER (WHERE d.dev > 3 * m.mad) AS n_outliers
         |FROM d JOIN mad m USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin),
+    // incremental view maintenance: signed delta aggregate merged into a
+    // stored view — O(delta+view) refresh, base never rescanned
     // the oracle RECOMPUTES the final state from scratch — the abelian
     // merge in MaintenanceOps.ivmApply must equal it group for group;
     // final set algebra: (B \ D) ∪ I  =  k%7=0 ∨ k%11≠0
-    "q_ivm_agg" ->
+    Entry("q_ivm_agg", MaintenanceOps.ivmApply,
       """SELECT o_custkey, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_spend
         |FROM orders
         |WHERE o_orderkey % 7 = 0 OR o_orderkey % 11 <> 0
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    // JOIN-view IVM: bilinear signed delta (dA*B + A*dB + dA*dB) merged
+    // into the stored aggregate view; neither base table rescanned
     // recompute over the FINAL state of BOTH tables — the gate proving
     // the bilinear delta expansion merges to exactly the recomputed view
-    "q_ivm_join" ->
+    Entry("q_ivm_join", MaintenanceOps.ivmJoin,
       """WITH fo AS (SELECT o_orderkey AS ok, o_custkey FROM orders
         |  WHERE o_orderkey % 7 = 0 OR o_orderkey % 11 <> 0),
         |fl AS (SELECT l_orderkey AS ok, CAST(l_quantity AS DECIMAL(12,2)) AS qty
@@ -2988,10 +2571,11 @@ object SparkEntry {
         |SELECT o_custkey, COUNT(*) AS n_pairs,
         |  CAST(SUM(qty) AS DOUBLE) AS sum_qty
         |FROM fo JOIN fl USING (ok)
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    // two-proportion z-test between experiment arms, one scan-reduce
     // all four inputs are exact conditional counts from ONE scan; the z
     // arithmetic is mirrored node for node (olsFit association precedent)
-    "q_ab_test" -> {
+    Entry("q_ab_test", BehaviorOps.abTest, {
       val zSql = "(p_a - p_b) / sqrt(p_pool * (1.0 - p_pool) * " +
         "(1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))"
       s"""WITH c AS (SELECT
@@ -3009,10 +2593,11 @@ object SparkEntry {
         |SELECT n_a, conv_a, n_b, conv_b, p_a, p_b, $zSql AS z,
         |  ABS($zSql) > ${graft.queries.BehaviorOps.AbZCrit} AS significant
         |FROM p""".stripMargin
-    },
+    }),
+    // corpus-slice vocabulary profile: hapax + inverse-Simpson diversity
     // same whitespace tokenizer as every text entry; integer algebra up
     // to the single double division for the diversity index
-    "q_vocab_profile" ->
+    Entry("q_vocab_profile", TextOps.vocabProfile,
       """WITH tk AS (
         |  SELECT source, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         |  FROM documents),
@@ -3023,11 +2608,13 @@ object SparkEntry {
         |  COUNT(*) FILTER (WHERE n = 1) AS n_hapax,
         |  CAST(SUM(n * n) AS BIGINT) AS sum_sq,
         |  CAST(SUM(n) AS DOUBLE) * CAST(SUM(n) AS DOUBLE) / CAST(SUM(n * n) AS DOUBLE) AS inv_simpson
-        |FROM c GROUP BY source ORDER BY source""".stripMargin,
+        |FROM c GROUP BY source ORDER BY source""".stripMargin),
+    // chi-square independence over the arm x type contingency table,
+    // order-pinned fold so even the float statistic hash-matches
     // Σ(O−E)²/E is an order-dependent double sum, so BOTH engines fold
     // the cell terms in (arm, type) order: Spark aggregate-over-
     // sort_array ≡ DuckDB list_reduce-over-ordered-list
-    "q_chisq" ->
+    Entry("q_chisq", BehaviorOps.chisq,
       s"""WITH cells AS (
         |  SELECT user_id % 2 AS arm, event_type, COUNT(*) AS o
         |  FROM events GROUP BY 1, 2),
@@ -3045,10 +2632,11 @@ object SparkEntry {
         |  (COUNT(DISTINCT arm) - 1) * (COUNT(DISTINCT event_type) - 1) AS df,
         |  list_reduce(list(term ORDER BY arm, event_type), (a, b) -> a + b)
         |    > ${graft.queries.BehaviorOps.ChisqCrit} AS significant
-        |FROM y""".stripMargin,
+        |FROM y""".stripMargin),
+    // top first-k user-journey paths across gap-sessions
     // same gap-sessionize CTE as q_sessionize, then an ordered
     // string_agg ≡ Spark's sorted-collect array_join
-    "q_session_paths" -> {
+    Entry("q_session_paths", BehaviorOps.sessionPaths, {
       val gapUs = graft.streaming.Sessionize.GapMs * 1000L
       val k = graft.queries.BehaviorOps.PathSteps
       s"""WITH g AS (
@@ -3072,10 +2660,11 @@ object SparkEntry {
         |  FROM r WHERE step <= $k GROUP BY user_id, session_seq)
         |SELECT path, COUNT(*) AS n_sessions, COUNT(DISTINCT user_id) AS n_users
         |FROM p GROUP BY path ORDER BY n_sessions DESC, path LIMIT 15""".stripMargin
-    },
+    }),
+    // rolling 7-day distinct users via bounded x7 contribution explode
     // the same x7 contribution expansion; anchors restricted to ACTIVE
     // days on both sides
-    "q_rolling_dau" ->
+    Entry("q_rolling_dau", BehaviorOps.rollingDau,
       """WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |c AS (SELECT day + CAST(x.i AS INT) AS g_day, day, user_id
         |      FROM du CROSS JOIN (SELECT unnest(range(7)) AS i) x),
@@ -3083,17 +2672,20 @@ object SparkEntry {
         |SELECT g_day,
         |  COUNT(DISTINCT CASE WHEN day = g_day THEN user_id END) AS dau_1d,
         |  COUNT(DISTINCT user_id) AS dau_7d
-        |FROM f GROUP BY g_day ORDER BY g_day""".stripMargin,
+        |FROM f GROUP BY g_day ORDER BY g_day""".stripMargin),
+    // per-user EWMA: the ordered fold a combining aggregate can't express
     // the identical left fold: first element is the seed in BOTH
     // engines (list_reduce ≡ aggregate-with-first-as-init), and α=1/4
     // makes every coefficient an exact double
-    "q_ewma" -> ewmaSql,
+    Entry("q_ewma", BehaviorOps.ewma, ewmaSql),
+    // the ewma fold as mapGroupsWithState state (batch-mode twin)
     // the SAME fold carried as mapGroupsWithState state (one oracle,
     // two plans: collect_list HOF fold vs per-key stateful fold)
-    "q_ewma_state" -> ewmaSql,
+    Entry("q_ewma_state", graft.streaming.EwmaState.ewmaStateBatch, ewmaSql),
+    // zone-map skip-ratio audit: clustered vs unclustered column pruning
     // zones are exact per-file min/max; both probes and the monthly file
     // rule are shared constants, so the audit rows match exactly
-    "q_zonemap_audit" -> {
+    Entry("q_zonemap_audit", MaintenanceOps.zonemapAudit, {
       import graft.queries.MaintenanceOps.{ZoneDateLo, ZoneDateHi, ZonePriceGt}
       val dateSkip  = s"d_max < $ZoneDateLo OR d_min > $ZoneDateHi"
       val priceSkip = s"p_max <= $ZonePriceGt"
@@ -3116,10 +2708,12 @@ object SparkEntry {
         |UNION ALL
         |${leg("price_gt", priceSkip)})
         |ORDER BY predicate""".stripMargin
-    },
+    }),
+    // fixed-point PageRank over the customer-supplier trade graph:
+    // 3 unrolled BSP iterations, one edge-shuffle each, integer-exact
     // unrolled fixed-point iterations — every division is integral
     // truncation on positive values, so ranks are bit-identical
-    "q_pagerank" -> {
+    Entry("q_pagerank", GraphOps.pagerank, {
       import graft.queries.GraphOps.{PrBaseNum, PrDampNum, PrIters, PrScale}
       val iterCtes = (1 to PrIters).map { k =>
         s"""r$k AS (
@@ -3143,13 +2737,15 @@ object SparkEntry {
         |  CAST(pr AS BIGINT) AS pr
         |FROM r$PrIters
         |ORDER BY pr DESC, kind, entity_key LIMIT 20""".stripMargin
-    },
+    }),
+    // deterministic q-digest quantile sketch + truth audit vs the exact
+    // deciles (completes the sketch quartet: CMS, HLL, MinHash, quantiles)
     // the same level-synchronous q-digest sweep unrolled as 16 CTE rounds
     // (the PCA chain precedent); the quantile walk replays as a window
     // cumsum + MIN-over-suffix, provably equal to the engine's sorted
     // array fold (upper is the leading sort key, so the first crossing
     // node has the minimal upper)
-    "q_qdigest" -> {
+    Entry("q_qdigest", ProfileOps.qdigest, {
       import graft.queries.ProfileOps.{QdK, QdLevels, QdUniverse}
       // the keep predicate carries the root clamp (level >= QdLevels) the
       // engine's sweep applies — a no-op on this level-0 build, mirrored
@@ -3193,13 +2789,15 @@ object SparkEntry {
         |  CAST(2 * $QdLevels * e.t AS BIGINT) AS err_bound,
         |  CAST(e.n_nodes AS BIGINT) AS n_nodes
         |FROM est e JOIN tru t2 USING (p) JOIN rk USING (p) ORDER BY phi_pct""".stripMargin
-    },
+    }),
+    // the MERGE law as a distributed plan: per-event-type digests built
+    // independently, union-and-recompressed, audited vs the global truth
     // the per-type sweep (threshold per shard) then the merged sweep —
     // both the identical 16-round CASE text as q_qdigest, the first with
     // the shard key carried through every GROUP BY; same-(level, bin)
     // nodes COMBINE before the merged sweep (engine pre-combines too);
     // report tail identical to q_qdigest against the GLOBAL histogram
-    "q_qdigest_merge" -> {
+    Entry("q_qdigest_merge", ProfileOps.qdigestMerge, {
       import graft.queries.ProfileOps.{QdK, QdLevels, QdUniverse}
       def sweep(pfx: String, grp: String) = (0 until QdLevels).map { i =>
         s"""$pfx${i + 1} AS (SELECT ${grp}level, bin, SUM(c) AS c, done, MAX(t) AS t FROM (
@@ -3248,11 +2846,13 @@ object SparkEntry {
         |  CAST(2 * $QdLevels * e.t AS BIGINT) AS err_bound,
         |  CAST(e.n_nodes AS BIGINT) AS n_nodes
         |FROM est e JOIN tru t2 USING (p) JOIN rk USING (p) ORDER BY phi_pct""".stripMargin
-    },
+    }),
+    // HyperLogLog distinct-user estimate, register-level and replayable
+    // by the oracle; daily sketches max-merged into the per-type state
     // register index + leading-zero rank replayed from the same md5
     // slices; Σ 2^(33-M_r) is an exact integer sum, and the one float op
     // (the final division) uses the digit-identical numerator constant
-    "q_hll_distinct" -> {
+    Entry("q_hll_distinct", ProfileOps.hllDistinct, {
       import graft.queries.ProfileOps.{HllEstNum, HllRegisters}
       val estSql =
         s"$HllEstNum / CAST(s_present + ($HllRegisters - n_registers) * 8589934592 AS DOUBLE)"
@@ -3273,11 +2873,12 @@ object SparkEntry {
         |SELECT event_type, n_exact, n_registers, $estSql AS hll_est,
         |  ($estSql - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE) AS rel_err
         |FROM agg JOIN ex USING (event_type) ORDER BY event_type""".stripMargin
-    },
+    }),
+    // Shannon entropy of the categorical catalog columns, fixed-point
     // per-value log2 quantized via the identical floor(x·2^20 + 0.5);
     // the weighted sums are exact (HUGEINT here, DECIMAL(38,0) on the
     // Spark side), so only the mirrored final division runs in floats
-    "q_entropy_profile" -> {
+    Entry("q_entropy_profile", ProfileOps.entropyProfile, {
       import graft.queries.ProfileOps.EntScale
       def leg(name: String, tbl: String, c: String): String =
         s"""SELECT '$name' AS dim, CAST(SUM(cnt) AS BIGINT) AS n, COUNT(*) AS k,
@@ -3295,10 +2896,11 @@ object SparkEntry {
         |UNION ALL
         |${leg("documents.source", "documents", "source")})
         |ORDER BY dim""".stripMargin
-    },
+    }),
+    // market-basket pair co-occurrence with support + lift, cap-guarded
     // the cap is applied to baskets BEFORE pair formation in both
     // engines; lift is exact integer products under one division
-    "q_basket_pairs" -> {
+    Entry("q_basket_pairs", BehaviorOps.basketPairs, {
       import graft.queries.BehaviorOps.{BasketTopK, MaxBasketItems}
       s"""WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |sized AS (SELECT ok FROM lp GROUP BY ok
@@ -3316,10 +2918,11 @@ object SparkEntry {
         |JOIN ic ib ON ib.pk = pairs.pk_b
         |CROSS JOIN nb
         |ORDER BY n_co DESC, pk_a, pk_b LIMIT $BasketTopK""".stripMargin
-    },
+    }),
+    // per-user time-weighted (hold-duration) average via exact moments
     // identical per-row quantization (floor ·10⁴, integral-div seconds),
     // exact integer/128-bit sums, one mirrored final division
-    "q_time_weighted" -> {
+    Entry("q_time_weighted", BehaviorOps.timeWeighted, {
       import graft.queries.BehaviorOps.TwScale
       s"""WITH e AS (SELECT user_id, ts, event_id, value FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
@@ -3334,10 +2937,11 @@ object SparkEntry {
         |  CAST(SUM(CAST(v_scaled AS HUGEINT) * dur_s) AS DOUBLE)
         |    / ($TwScale.0 * CAST(nullif(CAST(SUM(dur_s) AS BIGINT), 0) AS DOUBLE)) AS twa
         |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin
-    },
+    }),
+    // inverted-index build: df + total tf + truncated postings per term
     // same tokenizer, same per-term rank truncation; postings ordered
     // numerically then stringified in both engines
-    "q_inverted_index" -> {
+    Entry("q_inverted_index", TextOps.invertedIndex, {
       import graft.queries.TextOps.PostingsCap
       s"""WITH t AS (SELECT doc_id,
         |    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
@@ -3349,10 +2953,11 @@ object SparkEntry {
         |  string_agg(CASE WHEN rn <= $PostingsCap THEN CAST(doc_id AS VARCHAR) END,
         |             ',' ORDER BY doc_id) AS postings
         |FROM r GROUP BY term ORDER BY df DESC, term LIMIT 20""".stripMargin
-    },
+    }),
+    // oriented triangle census of the part co-purchase graph
     // same id-order orientation (u < v, b < c), same basket cap and
     // support threshold — every count is integer-exact
-    "q_triangles" -> {
+    Entry("q_triangles", GraphOps.triangles, {
       import graft.queries.BehaviorOps.MaxBasketItems
       import graft.queries.GraphOps.TriMinSupport
       s"""WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
@@ -3379,10 +2984,11 @@ object SparkEntry {
         |  CAST(3 * (SELECT COUNT(*) FROM tris) AS DOUBLE)
         |    / CAST((SELECT CAST(SUM(deg * (deg - 1) // 2) AS BIGINT) FROM deg) AS DOUBLE)
         |    AS closure_rate""".stripMargin
-    },
+    }),
+    // CMS inner-product join-size estimate with exact audit (est >= exact)
     // same one-digest bucket slices as q_heavy_hitters on BOTH join
     // sides; inner products exact (HUGEINT / DECIMAL(38,0))
-    "q_join_size_est" -> {
+    Entry("q_join_size_est", ProfileOps.joinSizeEst, {
       def bucketSql(k: String) =
         s"CAST(concat('0x', substr(md5(CAST($k AS VARCHAR)), 1 + 8 * CAST(depth AS INT), 8)) AS BIGINT) % 64"
       s"""WITH d AS (SELECT unnest(range(4)) AS depth),
@@ -3401,10 +3007,11 @@ object SparkEntry {
         |SELECT 'lineitem*orders@orderkey' AS join_key, est, exact,
         |  est - exact AS overestimate
         |FROM est CROSS JOIN ex""".stripMargin
-    },
+    }),
+    // 80% Pareto point per priority: integer cumsum, cross-multiplied test
     // exact integer cents, explicit ROWS cumsum frame, integer 5:4
     // cross-multiplication — float only in the final share
-    "q_pareto" ->
+    Entry("q_pareto", ProfileOps.pareto,
       """WITH o AS (SELECT o_orderpriority AS pri, o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
         |  FROM orders),
@@ -3419,10 +3026,11 @@ object SparkEntry {
         |  CAST(MIN(rk) AS DOUBLE) / CAST(t.n_orders AS DOUBLE) AS top_share
         |FROM r JOIN t ON r.pri = t.pri
         |WHERE cum * 5 >= total_cents * 4
-        |GROUP BY r.pri, t.n_orders, t.total_cents ORDER BY r.pri""".stripMargin,
+        |GROUP BY r.pri, t.n_orders, t.total_cents ORDER BY r.pri""".stripMargin),
+    // (dow, hour) seasonal baseline + 3-sigma anomaly counts per cell
     // integer calendar dow (neither engine's dayofweek numbering), exact
     // moments, mirrored mean/σ arithmetic, 3σ flags on identical doubles
-    "q_seasonal_anomaly" -> {
+    Entry("q_seasonal_anomaly", BehaviorOps.seasonalAnomaly, {
       import graft.queries.BehaviorOps.TwScale
       s"""WITH e AS (SELECT
         |    datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) % 7 AS dow,
@@ -3444,10 +3052,11 @@ object SparkEntry {
         |FROM e JOIN m ON e.dow = m.dow AND e.hr = m.hr
         |GROUP BY e.dow, e.hr, m.n, m.mean_scaled, m.sd_scaled
         |ORDER BY e.dow, e.hr""".stripMargin
-    },
+    }),
+    // RFM quartile grid occupancy from exact population quantiles
     // identical exact-quantile boundaries (integer inputs, shared
     // interpolation) and the same >-comparison scoring on both sides
-    "q_rfm" -> {
+    Entry("q_rfm", BehaviorOps.rfm, {
       def over(v: String, b: String) =
         s"(($v > $b[1])::INT + ($v > $b[2])::INT + ($v > $b[3])::INT)"
       s"""WITH pc AS (SELECT o_custkey, MAX(CAST(o_orderdate AS DATE)) AS last_od,
@@ -3467,10 +3076,11 @@ object SparkEntry {
         |SELECT r_score, f_score, m_score, COUNT(*) AS n_customers,
         |  CAST(SUM(m) AS BIGINT) AS total_cents
         |FROM s GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-    },
+    }),
+    // pairwise event-type audience Jaccard (bounded per-user fan-out)
     // distinct (type, user) pairs feed both the sizes and the pair
     // intersection; |A∪B| stays integer until the final division
-    "q_audience_overlap" ->
+    Entry("q_audience_overlap", BehaviorOps.audienceOverlap,
       """WITH tu AS (SELECT DISTINCT event_type, user_id FROM events
         |  WHERE user_id IS NOT NULL),
         |sz AS (SELECT event_type, COUNT(*) AS n FROM tu GROUP BY 1),
@@ -3483,9 +3093,10 @@ object SparkEntry {
         |  CAST(n_both AS DOUBLE) / CAST(sa.n + sb.n - n_both AS DOUBLE) AS jaccard
         |FROM p JOIN sz sa ON sa.event_type = p.type_a
         |JOIN sz sb ON sb.event_type = p.type_b
-        |ORDER BY type_a, type_b""".stripMargin,
+        |ORDER BY type_a, type_b""".stripMargin),
+    // dedup ROI: cluster-size histogram over the CC label frame
     // the q_dedup_cc label chain, then two aggregates and a scalar total
-    "q_cluster_profile" ->
+    Entry("q_cluster_profile", TextOps.clusterProfile,
       s"""$minhashBandedCtes,
         |rep AS (
         |  SELECT band_id, band_key, min(doc_id) AS rep
@@ -3507,10 +3118,12 @@ object SparkEntry {
         |  CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(cluster_size * COUNT(*) AS DOUBLE) / CAST(n_total AS DOUBLE) AS doc_pct
         |FROM cs CROSS JOIN tot
-        |GROUP BY cluster_size, n_total ORDER BY cluster_size""".stripMargin,
+        |GROUP BY cluster_size, n_total ORDER BY cluster_size""".stripMargin),
+    // MinHash accuracy audit: signature estimate vs exact Jaccard per
+    // LSH candidate pair
     // same signature battery (minhashSigSql) and band buckets; exact
     // Jaccard over distinct token hashes, pair-restricted
-    "q_minhash_est" -> {
+    Entry("q_minhash_est", TextOps.minhashEst, {
       val matchSum = (0 until 12)
         .map(i => s"(sa.sig$i = sb.sig$i)::INT").mkString(" + ")
       s"""$minhashBandedCtes,
@@ -3542,8 +3155,9 @@ object SparkEntry {
         |JOIN sz sa ON sa.doc_id = m.doc_id_a
         |JOIN sz sb ON sb.doc_id = m.doc_id_b
         |ORDER BY m.doc_id_a, m.doc_id_b""".stripMargin
-    },
-    "q_degree_profile" ->
+    }),
+    // trade-graph degree histogram by node kind (the skew early warning)
+    Entry("q_degree_profile", GraphOps.degreeProfile,
       """WITH pairs AS (
         |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -3553,10 +3167,11 @@ object SparkEntry {
         |  SELECT 'customer' AS kind, deg, COUNT(*) AS n_nodes FROM cd GROUP BY deg
         |  UNION ALL
         |  SELECT 'supplier' AS kind, deg, COUNT(*) AS n_nodes FROM sd GROUP BY deg)
-        |ORDER BY kind, deg""".stripMargin,
+        |ORDER BY kind, deg""".stripMargin),
+    // first-order Markov transition matrix over per-user event sequences
     // same lead() sequence (ties on event_id), row totals from the cell
     // frame itself, one division per cell
-    "q_markov_next" ->
+    Entry("q_markov_next", BehaviorOps.markovNext,
       """WITH seq AS (SELECT event_type AS cur,
         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
@@ -3564,10 +3179,11 @@ object SparkEntry {
         |  WHERE nxt IS NOT NULL GROUP BY 1, 2)
         |SELECT cur, nxt, n,
         |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY cur) AS DOUBLE) AS p
-        |FROM cells ORDER BY cur, nxt""".stripMargin,
+        |FROM cells ORDER BY cur, nxt""".stripMargin),
+    // Kaplan-Meier user-lifetime survival with right-censoring
     // identical left-fold product per prefix: list_reduce seeded by the
     // first factor ≡ aggregate seeded 1.0 (1.0·f1 is exact)
-    "q_survival" -> {
+    Entry("q_survival", BehaviorOps.survival, {
       import graft.queries.BehaviorOps.SurvCensorDays
       s"""WITH pu AS (SELECT o_custkey, MIN(CAST(o_orderdate AS DATE)) AS first_d,
         |    MAX(CAST(o_orderdate AS DATE)) AS last_d
@@ -3590,10 +3206,11 @@ object SparkEntry {
         |    x -> 1.0 - CAST(x.d AS DOUBLE) / CAST(x.r AS DOUBLE)),
         |    (a, b) -> a * b) AS survival
         |FROM ix ORDER BY week""".stripMargin
-    },
+    }),
+    // cohort LTV triangle: integer-cents cumsum per acquisition month
     // integer month index (year*12+month), exact cents, explicit ROWS
     // cumsum frame, one final division
-    "q_cohort_ltv" ->
+    Entry("q_cohort_ltv", BehaviorOps.cohortLtv,
       """WITH o AS (SELECT o_custkey,
         |    CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m_idx,
         |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
@@ -3610,9 +3227,10 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
         |    / CAST(n_customers AS DOUBLE) AS ltv_cents
         |FROM cells JOIN sz ON sz.cohort_m = cells.cohort_m
-        |ORDER BY cells.cohort_m, offset_m""".stripMargin,
+        |ORDER BY cells.cohort_m, offset_m""".stripMargin),
+    // k-NN majority-vote classification over the held-out vectors
     // same cosine fold, same K, ties to the smaller label in both engines
-    "q_knn_classify" -> {
+    Entry("q_knn_classify", VectorOps.knnClassify, {
       import graft.queries.VectorOps.{KnnHoldoutMod, KnnK}
       s"""WITH e AS (SELECT vec_id, label, embedding, len(embedding) AS n
         |  FROM embeddings),
@@ -3633,10 +3251,11 @@ object SparkEntry {
         |FROM (SELECT *, ROW_NUMBER() OVER (
         |    PARTITION BY probe_id ORDER BY n_votes DESC, n_label) AS vr FROM v)
         |WHERE vr = 1 ORDER BY probe_id""".stripMargin
-    },
+    }),
+    // per-class precision/recall/F1 of the heuristic language ID
     // the q_lang_id prediction chain, then class-cardinality aggregates
     // and nullif-guarded ratio arithmetic mirrored term for term
-    "q_langid_eval" -> {
+    Entry("q_langid_eval", TextOps.langIdEval, {
       val prec = "CAST(COALESCE(tp.tp, 0) AS DOUBLE) / nullif(CAST(COALESCE(pn.n_pred, 0) AS DOUBLE), 0.0)"
       val rec = "CAST(COALESCE(tp.tp, 0) AS DOUBLE) / nullif(CAST(COALESCE(sup.support, 0) AS DOUBLE), 0.0)"
       s"""$langIdCtes,
@@ -3656,9 +3275,10 @@ object SparkEntry {
         |LEFT JOIN pn ON pn.cls = cls.cls
         |LEFT JOIN tp ON tp.cls = cls.cls
         |ORDER BY lang_class""".stripMargin
-    },
+    }),
+    // deterministic hash-rank exemplars per (lang, source) stratum
     // same md5 hash-rank, same (hk, doc_id) tie order
-    "q_group_exemplars" -> {
+    Entry("q_group_exemplars", CurationOps.groupExemplars, {
       import graft.queries.CurationOps.ExemplarsPerGroup
       s"""SELECT lang, source, CAST(rn AS BIGINT) AS exemplar_rank, doc_id, preview
         |FROM (
@@ -3668,7 +3288,8 @@ object SparkEntry {
         |  FROM documents)
         |WHERE rn <= $ExemplarsPerGroup
         |ORDER BY lang, source, exemplar_rank""".stripMargin
-    },
+    }),
+    // Pearson correlation matrix from one scan of exact integer moments
     // same hundredths-scaled integer moments (squares as HUGEINT — the
     // DECIMAL(38,0) twin), same double combination order per pair.
     // The double cast routes through VARCHAR: DuckDB's direct
@@ -3676,7 +3297,7 @@ object SparkEntry {
     // 4096 off on the price² moment at sf0.1), while string→double is —
     // and Spark's Decimal→Double is correctly rounded, so the detour is
     // what makes the two engines agree bitwise.
-    "q_corr_matrix" -> {
+    Entry("q_corr_matrix", StatsOps.corrMatrix, {
       val cols = Seq("quantity", "extendedprice", "discount", "tax")
       val moments = cols.map(c => s"SUM($c) AS s_$c") ++
         (for (x <- cols; y <- cols if x <= y)
@@ -3696,9 +3317,10 @@ object SparkEntry {
         |  FROM lineitem),
         |m AS (SELECT COUNT(*) AS n, ${moments.mkString(", ")} FROM li)
         |SELECT * FROM (${legs.mkString(" UNION ALL ")}) ORDER BY x, y""".stripMargin
-    },
+    }),
+    // daily-series lag-1..7 autocorrelation (the seasonality detector)
     // same days-sized lagged equi-join, same exact moments per lag
-    "q_autocorr" -> {
+    Entry("q_autocorr", StatsOps.autocorr, {
       import graft.queries.StatsOps.AutocorrMaxLag
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       // VARCHAR detour for the HUGEINT cross-moments (see q_ttest_welch)
@@ -3719,10 +3341,11 @@ object SparkEntry {
         |    / nullif(sqrt((${dbl("n_pairs")} * ${hdbl("sxx")} - ${dbl("sx")} * ${dbl("sx")})
         |         * (${dbl("n_pairs")} * ${hdbl("syy")} - ${dbl("sy")} * ${dbl("sy")})), 0.0) AS autocorr
         |FROM m ORDER BY lag""".stripMargin
-    },
+    }),
+    // first-digit Benford conformance audit, quantized integer-log expected
     // digits from the same exact cents integer; the expected mass is a
     // difference of quantized integer log10s, so it matches bitwise
-    "q_benford" -> {
+    Entry("q_benford", StatsOps.benford, {
       import graft.queries.StatsOps.LogScale
       s"""WITH c AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM orders),
         |d AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit, COUNT(*) AS n
@@ -3737,11 +3360,12 @@ object SparkEntry {
         |      / $LogScale.0 AS benford_pct
         |  FROM d CROSS JOIN t)
         |ORDER BY digit""".stripMargin
-    },
+    }),
+    // exact-rational two-sample KS distance via two-level prefix sums
     // the oracle may use the single global cumsum the Spark plan is
     // banned from (DuckDB has no 100 TB to serialize); D is the same
     // exact rational max|C1*n2 - C2*n1| / (n1*n2)
-    "q_ks_test" -> {
+    Entry("q_ks_test", StatsOps.ksTest, {
       import graft.queries.StatsOps.{KsSourceA, KsSourceB}
       s"""WITH d AS (SELECT n_chars AS v, source FROM documents
         |  WHERE source IN ('$KsSourceA', '$KsSourceB')),
@@ -3761,9 +3385,10 @@ object SparkEntry {
         |  CAST(d_num AS DOUBLE) / CAST(n1 * n2 AS DOUBLE) AS d_stat
         |FROM dev JOIN dm ON dnum = d_num
         |GROUP BY n1, n2, d_num""".stripMargin
-    },
+    }),
+    // per-type max-deviation changepoint over daily volumes
     // same (type, day) reduction, same integer deviation, min-day tiebreak
-    "q_changepoint" ->
+    Entry("q_changepoint", StatsOps.changepoint,
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
         |  FROM events GROUP BY 1, 2),
         |cum AS (SELECT event_type, day,
@@ -3782,10 +3407,11 @@ object SparkEntry {
         |FROM dev JOIN b USING (event_type)
         |WHERE dev = max_dev
         |GROUP BY event_type, n_days, total, max_dev
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
+    // BM25 ranking for a fixed query, integer-quantized idf
     // same integer idf quantization (logs of integers only), same
     // double normalization order, contribution quantized BEFORE the sum
-    "q_bm25" -> {
+    Entry("q_bm25", TextOps.bm25, {
       import graft.queries.TextOps.{BmB, BmK1, BmScale, BmTerms, BmTopK}
       val terms = BmTerms.map(t => s"'$t'").mkString(", ")
       def lnq(m: String) =
@@ -3812,9 +3438,10 @@ object SparkEntry {
         |  CAST(SUM(contrib_q) AS DOUBLE) / $BmScale.0 AS bm25
         |FROM c GROUP BY doc_id
         |ORDER BY score_q DESC, doc_id LIMIT $BmTopK""".stripMargin
-    },
+    }),
+    // per-source greedy token-budget allocation report
     // same longest-first prefix rule under the same budget constant
-    "q_token_budget" -> {
+    Entry("q_token_budget", CurationOps.tokenBudget, {
       import graft.queries.CurationOps.TokenBudget
       s"""WITH d AS (SELECT source, doc_id, n_chars,
         |    CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS tokens
@@ -3829,10 +3456,11 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN cum <= $TokenBudget THEN tokens ELSE 0 END) AS DOUBLE)
         |    / $TokenBudget.0 AS fill_ratio
         |FROM c GROUP BY source ORDER BY source""".stripMargin
-    },
+    }),
+    // top-k per source with at most one doc per near-dup cluster
     // same min-shingle-hash cluster key (sorted list => element 1), same
     // singleton fallback for unshingleable docs, same two-window ranks
-    "q_diverse_topk" -> {
+    Entry("q_diverse_topk", CurationOps.diverseTopk, {
       import graft.queries.CurationOps.DiverseK
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
@@ -3853,10 +3481,11 @@ object SparkEntry {
         |SELECT source, rank_in_source, doc_id, cluster, n_chars
         |FROM k WHERE rank_in_source <= $DiverseK
         |ORDER BY source, rank_in_source""".stripMargin
-    },
+    }),
+    // open-wedge common-neighbor / Adamic-Adar link prediction
     // same capped edge build as q_triangles, same integer Adamic-Adar
     // quantization (// is DuckDB's integer division, Spark's div)
-    "q_common_neighbors" -> {
+    Entry("q_common_neighbors", GraphOps.commonNeighbors, {
       import graft.queries.BehaviorOps.MaxBasketItems
       import graft.queries.GraphOps.{AaScale, CnTopK, TriMinSupport}
       s"""WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
@@ -3879,17 +3508,19 @@ object SparkEntry {
         |  FROM open JOIN deg USING (w) GROUP BY 1, 2)
         |SELECT a, b, cn, aa_q, CAST(aa_q AS DOUBLE) / $AaScale.0 AS adamic_adar
         |FROM s ORDER BY cn DESC, aa_q DESC, a, b LIMIT $CnTopK""".stripMargin
-    },
+    }),
+    // item-item cosine neighbors over capped baskets ("also bought")
     // same basket cap before pair formation, same quantized cosine (every
     // input integer-exact, one sqrt + one division per pair)
-    "q_item_cf" ->
+    Entry("q_item_cf", BehaviorOps.itemCf,
       s"""WITH ${itemCfCtes()}
         |SELECT item, cf_rank, nbr, n_co, cos_q FROM r
         |WHERE cf_rank <= ${graft.queries.BehaviorOps.CfNeighbors}
-        |ORDER BY item, cf_rank""".stripMargin,
+        |ORDER BY item, cf_rank""".stripMargin),
+    // item-CF hit-rate on an even/odd basket split with max-id holdout
     // same even/odd append-stable split, same CF chain on the train half,
     // same max-id holdout and applicable-basket denominator
-    "q_cf_eval" -> {
+    Entry("q_cf_eval", BehaviorOps.cfEval, {
       import graft.queries.BehaviorOps.{CfNeighbors, MaxBasketItems}
       s"""WITH ${itemCfCtes("WHERE l_orderkey % 2 = 0")},
         |cf AS (SELECT item, nbr FROM r WHERE cf_rank <= $CfNeighbors),
@@ -3911,10 +3542,11 @@ object SparkEntry {
         |  (SELECT COUNT(*) FROM hits) AS n_hits,
         |  CAST((SELECT COUNT(*) FROM hits) AS DOUBLE)
         |    / CAST((SELECT COUNT(*) FROM app) AS DOUBLE) AS hit_rate""".stripMargin
-    },
+    }),
+    // last-touch conversion attribution with day-resolution lookback
     // same (rank, day, code) int64 encoding under the same running MAX,
     // same day-resolution lookback, integer-cents revenue
-    "q_attribution" -> {
+    Entry("q_attribution", BehaviorOps.attribution, {
       import graft.queries.BehaviorOps.{AttrConvType, AttrLookbackDays, AttrTouch}
       val codeCase = AttrTouch.map { case (t, c) =>
         s"WHEN event_type = '$t' THEN rn * ${1L << 21} + day * 8 + $c"
@@ -3936,10 +3568,11 @@ object SparkEntry {
         |  FROM x WHERE event_type = '$AttrConvType')
         |SELECT channel, COUNT(*) AS n_conversions, CAST(SUM(cents) AS BIGINT) AS revenue_cents
         |FROM c GROUP BY channel ORDER BY channel""".stripMargin
-    },
+    }),
+    // 2-D Pareto frontier via the two-level prefix-max sweep
     // the oracle may take the single global cummax the Spark plan is
     // banned from; dominance rule and tie handling are identical
-    "q_skyline" ->
+    Entry("q_skyline", OlapOps.skyline,
       """WITH p AS (SELECT CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
         |    CAST(p_size AS BIGINT) AS size FROM part),
         |g AS (SELECT cents, size, COUNT(*) AS n_parts FROM p GROUP BY 1, 2),
@@ -3950,10 +3583,11 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS mlt FROM best)
         |SELECT cents AS price_cents, size AS max_size, n_parts
         |FROM c WHERE mlt IS NULL OR size > mlt
-        |ORDER BY price_cents""".stripMargin,
+        |ORDER BY price_cents""".stripMargin),
+    // rank-based Mann-Whitney U with exact doubled-midrank arithmetic
     // same doubled-midrank integers over the same per-value counts; the
     // oracle's global cumsum is the banned-in-Spark shortcut
-    "q_mann_whitney" -> {
+    Entry("q_mann_whitney", StatsOps.mannWhitney, {
       import graft.queries.StatsOps.{KsSourceA, KsSourceB}
       s"""WITH d AS (SELECT n_chars AS v, source FROM documents
         |  WHERE source IN ('$KsSourceA', '$KsSourceB')),
@@ -3973,9 +3607,10 @@ object SparkEntry {
         |  CAST(2 * n1 * n2 - (r1_2 - n1 * (n1 + 1)) AS DOUBLE) / 2.0 AS u2,
         |  CAST(r1_2 - n1 * (n1 + 1) AS DOUBLE) / CAST(2 * n1 * n2 AS DOUBLE) AS auc
         |FROM m""".stripMargin
-    },
+    }),
+    // Welch's unequal-variance t-test from one conditional-moment scan
     // same six conditional moments, same closed-form t and Welch df
-    "q_ttest_welch" -> {
+    Entry("q_ttest_welch", StatsOps.welchTtest, {
       import graft.queries.StatsOps.{TtSegA, TtSegB}
       def mom(seg: String, t: String) =
         s"""SUM(CASE WHEN c_mktsegment = '$seg' THEN 1 ELSE 0 END) AS n$t,
@@ -4003,10 +3638,11 @@ object SparkEntry {
         |  (($se1 + $se2) * ($se1 + $se2))
         |    / ($se1 * $se1 / (${dbl("n1")} - 1.0) + $se2 * $se2 / (${dbl("n2")} - 1.0)) AS welch_df
         |FROM m""".stripMargin
-    },
+    }),
+    // one-way ANOVA F with order-pinned cross-group float folds
     // same exact group moments; the cross-group float sums ride the same
     // sorted-list left fold as q_ewma/q_chisq so the order is pinned
-    "q_anova" ->
+    Entry("q_anova", StatsOps.anova,
       """WITH o AS (SELECT o_orderpriority AS grp,
         |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents
         |  FROM orders),
@@ -4027,10 +3663,11 @@ object SparkEntry {
         |SELECT k, n, ssb, ssw,
         |  (ssb / CAST(k - 1 AS DOUBLE)) / (ssw / CAST(n - k AS DOUBLE)) AS f_stat,
         |  ssb / (ssb + ssw) AS eta_sq
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin),
+    // Spearman rank-correlation matrix via exact doubled midranks
     // same doubled midranks (window cumsum over distinct values replays
     // the engine's two-level prefix sum exactly), same DECIMAL moments
-    "q_spearman" -> {
+    Entry("q_spearman", StatsOps.spearman, {
       val cols = Seq("discount", "extendedprice", "quantity")
       val rts = cols.map { c =>
         s"""rt_$c AS (SELECT v, 2 * (f - c) + c + 1 AS rank2 FROM (
@@ -4058,10 +3695,11 @@ object SparkEntry {
         |  FROM li $joins),
         |m AS (SELECT COUNT(*) AS n, ${moments.mkString(", ")} FROM j)
         |SELECT * FROM (${legs.mkString(" UNION ALL ")}) ORDER BY x, y""".stripMargin
-    },
+    }),
+    // Kruskal-Wallis rank H across order priorities, tie-corrected
     // same doubled midranks, same grp-ordered float fold (the anova
     // list_reduce), same exact HUGEINT tie moment via the VARCHAR detour
-    "q_kruskal" -> {
+    Entry("q_kruskal", StatsOps.kruskal, {
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
       s"""WITH o AS (SELECT o_orderpriority AS grp,
         |    CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v
@@ -4085,9 +3723,10 @@ object SparkEntry {
         |    1.0 - t3d / (nd * nd * nd - nd) AS tie_c
         |  FROM f)
         |SELECT k, n, h, tie_c, h / nullif(tie_c, 0.0) AS h_adj FROM h""".stripMargin
-    },
+    }),
+    // lead-lag cross-correlation between two daily event-count series
     // same days-sized lagged equi-join per signed lag, same exact moments
-    "q_xcorr" -> {
+    Entry("q_xcorr", StatsOps.xcorr, {
       import graft.queries.StatsOps.{XcMaxLag, XcTypeA, XcTypeB}
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
@@ -4109,10 +3748,11 @@ object SparkEntry {
         |    / nullif(sqrt((${dbl("n_pairs")} * ${hdbl("sxx")} - ${dbl("sx")} * ${dbl("sx")})
         |         * (${dbl("n_pairs")} * ${hdbl("syy")} - ${dbl("sy")} * ${dbl("sy")})), 0.0) AS xcorr
         |FROM m ORDER BY lag""".stripMargin
-    },
+    }),
+    // Theil-Sen median-slope robust monthly revenue trend per segment
     // same calendar-bounded monthly reduction, same exact-int slope
     // division, same (slope, mi1, mi2) lower-median rank selection
-    "q_theilsen" ->
+    Entry("q_theilsen", StatsOps.theilsen,
       """WITH monthly AS (
         |  SELECT c_mktsegment AS seg,
         |    CAST((year(CAST(o_orderdate AS DATE)) - 1992) * 12
@@ -4130,10 +3770,11 @@ object SparkEntry {
         |  FROM monthly GROUP BY 1)
         |SELECT r.seg AS seg, n_months, n_pairs, slope AS median_slope
         |FROM rn r JOIN sizes s ON r.seg = s.seg
-        |WHERE rn = (n_pairs + 1) // 2 ORDER BY r.seg""".stripMargin,
+        |WHERE rn = (n_pairs + 1) // 2 ORDER BY r.seg""".stripMargin),
+    // seed-teleport personalized PageRank over the trade graph
     // the pagerank unroll with teleport mass restricted to the seed set
     // (suppliers ≡ 0 mod PprSeedMod), same integer fixed point
-    "q_ppr" -> {
+    Entry("q_ppr", GraphOps.ppr, {
       import graft.queries.GraphOps.{PprSeedMod, PrBaseNum, PrDampNum, PrIters, PrScale}
       val seedSql = s"node % 2 = 1 AND ((node - 1) // 2) % $PprSeedMod = 0"
       val iterCtes = (1 to PrIters).map { k =>
@@ -4161,10 +3802,11 @@ object SparkEntry {
         |  CAST(pr AS BIGINT) AS ppr
         |FROM r$PrIters
         |ORDER BY ppr DESC, kind, entity_key LIMIT 20""".stripMargin
-    },
+    }),
+    // NDCG@10 / MRR / recall@10 of a popularity ranker, exact-int metrics
     // same parity split, same literal discount weights, same integral
     // per-user quantization (DCG <= IDCG keeps every metric <= 10^6)
-    "q_ndcg" -> {
+    Entry("q_ndcg", BehaviorOps.ndcg, {
       import graft.queries.BehaviorOps.{NdcgK, NdcgQScale, NdcgWeights}
       val wvals = NdcgWeights.zipWithIndex
         .map { case (w, i) => s"(${i + 1}, $w)" }.mkString(", ")
@@ -4203,10 +3845,11 @@ object SparkEntry {
         |  ${hdbl("SUM(rec_q)")} / (CAST(COUNT(*) AS DOUBLE) * $NdcgQScale.0) AS mean_recall,
         |  CAST(SUM(hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS hit_rate
         |FROM per""".stripMargin
-    },
+    }),
+    // pairwise source shingle-Jaccard contamination matrix
     // same distinct (source, shingle) reduction, bounded per-shingle
     // fan-out, |A|+|B|-|A∩B| union arithmetic
-    "q_source_overlap" -> {
+    Entry("q_source_overlap", TextOps.sourceOverlap, {
       import graft.queries.TextOps.OverlapTopK
       s"""WITH t AS (
         |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
@@ -4224,10 +3867,11 @@ object SparkEntry {
         |  CAST(n_inter AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - n_inter AS DOUBLE) AS jaccard
         |FROM p JOIN c ca ON ca.source = p.source_a JOIN c cb ON cb.source = p.source_b
         |ORDER BY jaccard DESC, source_a, source_b LIMIT $OverlapTopK""".stripMargin
-    },
+    }),
+    // semi-supervised majority-vote label spread over near-dup components
     // same components (shared CTE), same majority vote + tiebreak, same
     // held-out accuracy arithmetic
-    "q_label_spread" -> {
+    Entry("q_label_spread", TextOps.labelSpread, {
       import graft.queries.TextOps.SpreadSeedMod
       s"""$ccComponentCtes,
         |seeds AS (SELECT c.component_id, d.lang
@@ -4247,9 +3891,10 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN prop_lang = lang THEN 1 ELSE 0 END) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE) AS accuracy
         |FROM asg GROUP BY prop_lang ORDER BY prop_lang""".stripMargin
-    },
+    }),
+    // HITS hubs/authorities, max-normalized fixed-point BSP rounds
     // same unrolled half-rounds, same integral max-normalization
-    "q_hits" -> {
+    Entry("q_hits", GraphOps.hits, {
       import graft.queries.GraphOps.{HitsScale, HitsTopK}
       s"""WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS s
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -4269,9 +3914,10 @@ object SparkEntry {
         |  (SELECT 'authority' AS kind, s AS entity_key, a AS score FROM a2
         |   ORDER BY score DESC, entity_key LIMIT $HitsTopK))
         |ORDER BY kind, score DESC, entity_key""".stripMargin
-    },
+    }),
+    // delete-one-bucket jackknife CI for the mean (deterministic resampling)
     // same md5 buckets, same exact bucket sums, same pinned float folds
-    "q_jackknife" -> {
+    Entry("q_jackknife", StatsOps.jackknife, {
       import graft.queries.StatsOps.JkBuckets
       val bucket = h32Sql("CAST(o_orderkey AS VARCHAR)") + s" % $JkBuckets"
       s"""WITH o AS (SELECT $bucket AS bucket,
@@ -4299,9 +3945,10 @@ object SparkEntry {
         |  CAST(s AS DOUBLE) / CAST(n AS DOUBLE) - 1.96 * sqrt(jk_var) AS ci_lo,
         |  CAST(s AS DOUBLE) / CAST(n AS DOUBLE) + 1.96 * sqrt(jk_var) AS ci_hi
         |FROM v""".stripMargin
-    },
+    }),
+    // Hill power-law tail index of the trade-graph degree distribution
     // same quantized integer log sum over the same tail slice
-    "q_tail_index" -> {
+    Entry("q_tail_index", GraphOps.tailIndex, {
       import graft.queries.GraphOps.{AaScale, TailMinDeg}
       def lnq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $AaScale.0 + 0.5) AS BIGINT)"
@@ -4316,9 +3963,10 @@ object SparkEntry {
         |    / CAST(nullif(SUM(${lnq("deg")} - ${lnq(TailMinDeg.toString)}), 0) AS DOUBLE) AS alpha
         |FROM deg WHERE deg >= $TailMinDeg
         |GROUP BY kind ORDER BY kind""".stripMargin
-    },
+    }),
+    // top word pairs by quantized pointwise mutual information
     // same integer-count quantized logs, same support floor and tie order
-    "q_collocations" -> {
+    Entry("q_collocations", TextOps.collocations, {
       import graft.queries.TextOps.{BmScale, PmiMinCount, PmiTopK}
       def lq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $BmScale.0 + 0.5) AS BIGINT)"
@@ -4337,9 +3985,10 @@ object SparkEntry {
         |SELECT w1, w2, c_xy, c_x, c_y, pmi_q,
         |  CAST(pmi_q AS DOUBLE) / $BmScale.0 AS pmi
         |FROM s ORDER BY pmi_q DESC, w1, w2 LIMIT $PmiTopK""".stripMargin
-    },
+    }),
+    // seasonal-naive vs naive-1 backtest with skill score
     // same O(days) reduction, same exact-cents absolute errors
-    "q_forecast_eval" ->
+    Entry("q_forecast_eval", StatsOps.forecastEval,
       """WITH daily AS (
         |  SELECT CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS x
@@ -4356,10 +4005,11 @@ object SparkEntry {
         |  CAST(ae1 AS DOUBLE) / CAST(n_eval AS DOUBLE) AS mae1_cents,
         |  CAST(ae7 AS DOUBLE) / CAST(n_eval AS DOUBLE) AS mae7_cents,
         |  1.0 - CAST(ae7 AS DOUBLE) / CAST(nullif(ae1, 0) AS DOUBLE) AS skill
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
+    // reliability bins + order-pinned expected calibration error
     // same md5-derived pseudo-score, same 10-bin integer moments; the ECE
     // fold rides list(... ORDER BY bin) ≡ sort_array, 0.0-seed-equivalent
-    "q_calibration" -> {
+    Entry("q_calibration", StatsOps.calibration, {
       import graft.queries.StatsOps.CalBins
       val milli = h32Sql("CAST(event_id AS VARCHAR)") + " % 1000"
       s"""WITH e AS (SELECT $milli AS milli,
@@ -4379,10 +4029,11 @@ object SparkEntry {
         |    / CAST(n_total AS DOUBLE) AS ece FROM t)
         |SELECT bin, n, n_pos, mean_conf, frac_pos, abs_gap, ece
         |FROM b3 CROSS JOIN tt ORDER BY bin""".stripMargin
-    },
+    }),
+    // LSH (bands, rows) tuning table over the one 12-signature pass
     // same 12 signatures, same b·r = 12 retilings, same exact integer
     // bucket economics and bucket-min fold counts
-    "q_lsh_tuning" -> {
+    Entry("q_lsh_tuning", TextOps.lshTuning, {
       import graft.queries.TextOps.LshConfigs
       val configs = LshConfigs.map { case (b, r) =>
         val cases = (0 until b).map { j =>
@@ -4421,10 +4072,11 @@ object SparkEntry {
         |$configs
         |$rows
         |ORDER BY rows_per_band""".stripMargin
-    },
+    }),
+    // held-out bigram cross-entropy per source (LM corpus evaluation)
     // same even/odd split, same add-one smoothing with the train context
     // vocabulary as V, same integer-argument quantized log sums
-    "q_perplexity_eval" -> {
+    Entry("q_perplexity_eval", CurationOps.perplexityEval, {
       import graft.queries.StatsOps.LogScale
       def lnq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $LogScale.0 + 0.5) AS BIGINT)"
@@ -4449,10 +4101,11 @@ object SparkEntry {
         |SELECT source, COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_bigrams,
         |  -CAST(SUM(lp) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / $LogScale.0 AS cross_entropy
         |FROM sc GROUP BY source ORDER BY source""".stripMargin
-    },
+    }),
+    // isotonic (PAV) calibration fit via the minimax closed form
     // same reliability bins, same exact prefix-sum interval means, same
     // minimax (max over j<=i of min over k>=i) pick on identical doubles
-    "q_isotonic" -> {
+    Entry("q_isotonic", StatsOps.isotonic, {
       import graft.queries.StatsOps.CalBins
       val milli = h32Sql("CAST(event_id AS VARCHAR)") + " % 1000"
       s"""WITH e AS (SELECT $milli AS milli,
@@ -4477,12 +4130,13 @@ object SparkEntry {
         |SELECT bin, n, n_pos,
         |  CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) AS raw_rate, iso_rate
         |FROM b JOIN iso ON bin = i ORDER BY bin""".stripMargin
-    },
+    }),
+    // population stability index, smoothed integer-log bins
     // same literal bin spine, same +1/+bins smoothing, same quantized
     // integer-argument logs; total PSI folds in bin order on both sides;
     // same two-sided bin clamp (greatest 0 collapses negative values onto
     // bin 0 in both engines, absorbing the trunc-vs-floor divide gap)
-    "q_psi" -> {
+    Entry("q_psi", StatsOps.psi, {
       import graft.queries.StatsOps.{LogScale, PsiBins, PsiBinCents}
       // the argument is a HUGEINT count product: its double read routes
       // through the pinned CAST-to-VARCHAR detour (the q_gmm_hard lnqh
@@ -4513,10 +4167,11 @@ object SparkEntry {
         |  FROM x2)
         |SELECT bin, sa - 1 AS n_a, sb - 1 AS n_b, share_a, share_b, psi_term, psi
         |FROM x2 CROSS JOIN tot ORDER BY bin""".stripMargin
-    },
+    }),
+    // categorical mutual information, exact integer PMI contributions
     // same cell/margin counts, same integer PMI quantization; MI total is
     // an exact integer sum — no float fold at all
-    "q_mutual_info" -> {
+    Entry("q_mutual_info", StatsOps.mutualInfo, {
       import graft.queries.StatsOps.LogScale
       // HUGEINT count-product argument -> VARCHAR detour (q_psi note)
       def lnq(m: String) =
@@ -4534,10 +4189,11 @@ object SparkEntry {
         |  CAST(pmi_q AS DOUBLE) / $LogScale.0 AS pmi,
         |  CAST(mi_num AS DOUBLE) / (CAST(nn2 AS DOUBLE) * $LogScale.0) AS mi
         |FROM s CROSS JOIN mi ORDER BY x_val, y_val""".stripMargin
-    },
+    }),
+    // CUPED variance-reduced A/B comparison from one moment scan
     // same user-level conditional sums, same exact covariance moments
     // (HUGEINT products through the VARCHAR detour), same closed forms
-    "q_cuped" -> {
+    Entry("q_cuped", StatsOps.cuped, {
       val arm = h32Sql("CAST(user_id AS VARCHAR)") + " % 2"
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
@@ -4573,11 +4229,12 @@ object SparkEntry {
         |    - theta * (${dbl("sx_a")} / ${dbl("n_users")} - ${dbl("sx")} / ${dbl("n")}) AS adj_mean_cents,
         |  theta, var_reduction
         |FROM a CROSS JOIN gg ORDER BY arm""".stripMargin
-    },
+    }),
+    // deterministic integer-weight bootstrap CI, rank-based bounds
     // same one-digest hex-digit weights (the CMS slicing discipline),
     // same rank-based bounds over the value-sorted replicate means,
     // same order-pinned SE fold
-    "q_bootstrap_ci" -> {
+    Entry("q_bootstrap_ci", StatsOps.bootstrapCi, {
       import graft.queries.StatsOps.{BootReps, BootWMod}
       val w = s"CAST(concat('0x', substr(d, CAST(r.range + 1 AS INT), 1)) AS BIGINT) % $BootWMod"
       s"""WITH o AS (SELECT md5(CAST(o_orderkey AS VARCHAR)) AS d,
@@ -4600,10 +4257,11 @@ object SparkEntry {
         |SELECT n_rows, n_reps, CAST(s AS DOUBLE) / CAST(n_rows AS DOUBLE) AS point_mean_cents,
         |  boot_se, ci_lo, ci_hi
         |FROM p CROSS JOIN st""".stripMargin
-    },
+    }),
+    // Gopher quality-rule battery, per-rule violation counts by source
     // same exact-integer rule comparisons (cross-multiplied ratios), same
     // stopword list; the mode rides the one (doc, token) aggregate
-    "q_gopher_rules" -> {
+    Entry("q_gopher_rules", TextOps.gopherRules, {
       import graft.queries.TextOps.{GopherMinTokens, GopherMaxTokens, GopherMinStops}
       val stops = graft.queries.TextOps.Stopwords.map(s => s"'$s'").mkString(", ")
       s"""WITH t AS (SELECT doc_id, source,
@@ -4635,10 +4293,11 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN f_wc + f_awl + f_stop + f_rep + f_alpha = 0
         |    THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pass_rate
         |FROM f GROUP BY source ORDER BY source""".stripMargin
-    },
+    }),
+    // content-defined chunking + chunk-level storage dedup (FastCDC shape)
     // same content-decided boundaries (h32(token) mod CdcMod), same
     // doc-partitioned exclusive prefix sum, same min()-pinned dedup
-    "q_content_chunks" -> {
+    Entry("q_content_chunks", TextOps.contentChunks, {
       import graft.queries.TextOps.CdcMod
       s"""WITH t AS (SELECT doc_id,
         |    string_split_regex(lower(trim(text)), '\\s+') AS tk FROM documents),
@@ -4663,9 +4322,10 @@ object SparkEntry {
         |SELECT chunk_hash, n_chunk_tokens, n_occurrences, n_docs, keep_doc_id,
         |  (n_occurrences - 1) * n_chunk_tokens AS tokens_saved
         |FROM g WHERE n_occurrences > 1 ORDER BY chunk_hash""".stripMargin
-    },
+    }),
+    // CCNet head/middle/tail LM-familiarity buckets per language
     // same familiarity core, same NTILE fill and (score DESC, doc_id) tiebreak
-    "q_ccnet_buckets" ->
+    Entry("q_ccnet_buckets", CurationOps.ccnetBuckets,
       s"""WITH fam AS ($lmFamiliarityCore),
         |s AS (SELECT fam.*, d.lang FROM fam JOIN documents d USING (doc_id)),
         |b AS (SELECT lang, n_bigrams, familiarity,
@@ -4675,9 +4335,10 @@ object SparkEntry {
         |  CASE bn WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket,
         |  COUNT(*) AS n_docs, CAST(SUM(n_bigrams) AS BIGINT) AS n_bigrams,
         |  MIN(familiarity) AS min_familiarity, MAX(familiarity) AS max_familiarity
-        |FROM b GROUP BY 1, 2 ORDER BY lang, bucket""".stripMargin,
+        |FROM b GROUP BY 1, 2 ORDER BY lang, bucket""".stripMargin),
+    // per-domain resampling weights to a uniform token mixture
     // same map-only token counts, same single-division ratios and cap
-    "q_domain_weights" -> {
+    Entry("q_domain_weights", CurationOps.domainWeights, {
       import graft.queries.CurationOps.WeightCap
       s"""WITH t AS (SELECT source,
         |    CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS nt
@@ -4692,10 +4353,11 @@ object SparkEntry {
         |  least(CAST(total_tokens AS DOUBLE) / CAST(n_sources * n_tokens AS DOUBLE),
         |    $WeightCap) AS weight_capped
         |FROM p CROSS JOIN g ORDER BY source""".stripMargin
-    },
+    }),
+    // k-core peel trace over the co-purchase graph, fixed synchronous rounds
     // same capped co-edge build as q_triangles; the peel rounds unroll to
     // exactly KcoreIters chained CTEs — synchronous peeling on both sides
-    "q_kcore" -> {
+    Entry("q_kcore", GraphOps.kcore, {
       import graft.queries.BehaviorOps.MaxBasketItems
       import graft.queries.GraphOps.{TriMinSupport, KcoreK, KcoreIters}
       // every CTE is MATERIALIZED: DuckDB inlines plain CTEs per
@@ -4717,11 +4379,12 @@ object SparkEntry {
       s"""WITH ${coEdgeCtes()},
         |$rounds
         |SELECT * FROM ($stats) ORDER BY iteration""".stripMargin
-    },
+    }),
+    // k-truss peel trace: per-round triangle-support edge filtering
     // same unthresholded coEdges build, same once-per-triangle enumeration
     // (id-ordered here, degree-ordered in Spark — the triangle SET is
     // orientation-invariant), same 3-edge support counts and peel rule
-    "q_ktruss" -> {
+    Entry("q_ktruss", GraphOps.ktruss, {
       import graft.queries.GraphOps.{KtrussK, KtrussIters, KtrussEdgeSupport}
       val rounds = (0 to KtrussIters).map { i =>
         val base =
@@ -4748,11 +4411,12 @@ object SparkEntry {
       s"""WITH ${coEdgeCtes(KtrussEdgeSupport)},
         |$rounds
         |SELECT * FROM ($stats) ORDER BY iteration""".stripMargin
-    },
+    }),
+    // degree assortativity (Pearson of endpoint degrees), one row
     // same unthresholded edges + symmetrized endpoint-degree pairs; the
     // six moments in HUGEINT on the VARCHAR detour, the one closed form
     // mirrored node for node (the corr_matrix contract)
-    "q_assortativity" -> {
+    Entry("q_assortativity", GraphOps.assortativity, {
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
       val num = s"(CAST(n AS DOUBLE) * ${hdbl("sxy")} - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
       val den = s"(sqrt(CAST(n AS DOUBLE) * ${hdbl("sxx")} - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))" +
@@ -4773,11 +4437,12 @@ object SparkEntry {
         |  CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mean_deg,
         |  $num / nullif($den, 0.0) AS assortativity
         |FROM mo""".stripMargin
-    },
+    }),
+    // per-node local clustering coefficient (ego density), top-20
     // same unthresholded co-purchase edges; triangles enumerate once via
     // the shared-lower-endpoint join (a < b < c), per-node counts from
     // the 3-way union, one mirrored division
-    "q_lcc" -> {
+    Entry("q_lcc", GraphOps.lcc, {
       import graft.queries.GraphOps.LccTopK
       s"""WITH ${coEdgeCtes(1L)},
         |tri AS MATERIALIZED (SELECT e1.u AS a, e1.v AS b, e2.v AS c
@@ -4793,10 +4458,11 @@ object SparkEntry {
         |  CAST(n_tri * 2 AS DOUBLE) / CAST(deg * (deg - 1) AS DOUBLE) AS lcc
         |FROM pn JOIN deg USING (node)
         |ORDER BY n_tri DESC, partkey LIMIT $LccTopK""".stripMargin
-    },
+    }),
+    // multi-source min-hop BFS reach counts over the trade graph
     // same symmetric trade edges and seed rule; depths unroll with
     // NOT-IN exclusion of every earlier level — min-hop on both sides
-    "q_bfs_reach" -> {
+    Entry("q_bfs_reach", GraphOps.bfsReach, {
       import graft.queries.GraphOps.{BfsSeedMod, BfsMaxDepth}
       val levels = (1 to BfsMaxDepth).map { d =>
         val excl = (0 until d).map {
@@ -4823,21 +4489,23 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN node % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_customers,
         |  CAST(SUM(CASE WHEN node % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_suppliers
         |FROM a GROUP BY depth ORDER BY depth""".stripMargin
-    },
+    }),
+    // BPE merge learning over the frequency-weighted word vocabulary
     // same vocabulary-weighted pair counts, same leading-delimiter greedy
     // replace, same (cnt DESC, l, r) winner rule; rounds unroll MATERIALIZED;
     // same exclusion of delimiter-bearing ('|') tokens from the vocabulary
-    "q_bpe_train" -> {
+    Entry("q_bpe_train", TextOps.bpeTrain, {
       import graft.queries.TextOps.BpeIters
       val union = (1 to BpeIters).map(i =>
         s"SELECT CAST($i AS INT) AS merge_rank, l AS lhs, r AS rhs, l || r AS merged, cnt AS pair_count FROM m$i")
         .mkString("\nUNION ALL\n")
       s"""WITH $bpeChainSql
         |SELECT * FROM ($union) ORDER BY merge_rank""".stripMargin
-    },
+    }),
+    // tokenizer fertility per source: learned merges applied + measured
     // same trained merges (the shared chain) applied per SOURCE vocabulary
     // with the same replace chain; symbol count = '|' count; exact sums
-    "q_bpe_fertility" -> {
+    Entry("q_bpe_fertility", TextOps.bpeFertility, {
       import graft.queries.TextOps.BpeIters
       val applies = (1 to BpeIters).map { i =>
         s"""f$i AS MATERIALIZED (SELECT source, replace(repr,
@@ -4865,10 +4533,11 @@ object SparkEntry {
         |  CAST(CAST(SUM(freq * n_chars) AS BIGINT) AS DOUBLE)
         |    / CAST(CAST(SUM(freq * n_sym) AS BIGINT) AS DOUBLE) AS chars_per_token
         |FROM fin GROUP BY source ORDER BY source""".stripMargin
-    },
+    }),
+    // tokenizer application: the corpus encoded with the learned merges
     // same trained merges applied to the DISTINCT-WORD table, the corpus
     // re-joined on the word key; per-doc exact integer sums
-    "q_bpe_encode" -> {
+    Entry("q_bpe_encode", TextOps.bpeEncode, {
       import graft.queries.TextOps.BpeIters
       val applies = (1 to BpeIters).map { i =>
         s"""e$i AS MATERIALIZED (SELECT w, n_chars, replace(repr,
@@ -4896,11 +4565,12 @@ object SparkEntry {
         |    / CAST(CAST(SUM(cnt * n_sym) AS BIGINT) AS DOUBLE) AS chars_per_bpe_token
         |FROM dw JOIN esym USING (w)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
+    }),
+    // product quantization: per-subspace codebooks + occupancy/distortion
     // same lowest-id seeds, one integer Lloyd update and argmin encode per
     // subspace (the kmeansCte recipe sliced); HUGEINT distortions through
     // the VARCHAR detour
-    "q_pq_quant" -> {
+    Entry("q_pq_quant", VectorOps.pqQuantize, {
       import graft.queries.VectorOps.PqM
       val stats = (0 until PqM).map { m =>
         s"""SELECT CAST($m AS INT) AS subspace, CAST(cid AS INT) AS code,
@@ -4911,10 +4581,11 @@ object SparkEntry {
       }.mkString("\nUNION ALL\n")
       s"""WITH $pqChainSql
         |SELECT * FROM ($stats) ORDER BY subspace, code""".stripMargin
-    },
+    }),
+    // PQ asymmetric-distance ANN top-k via broadcast probe LUTs
     // same trained codebooks (the shared chain), same exact integer
     // subspace LUT distances, same (adc, id) rank rule
-    "q_pq_ann" -> {
+    Entry("q_pq_ann", VectorOps.pqAnn, {
       import graft.queries.VectorOps.PqTopK
       s"""WITH $pqChainSql,
         |$pqAdcCtes,
@@ -4924,12 +4595,13 @@ object SparkEntry {
         |  FROM adc WHERE vec_id <> probe_id)
         |SELECT probe_id, rank, neighbor_id, adc_dist
         |FROM r WHERE rank <= $PqTopK ORDER BY probe_id, rank""".stripMargin
-    },
+    }),
+    // composed FAISS stack: IVF cell pruning x PQ asymmetric distance
     // the composed stack: q_sim_ivf's cell assignment gates which ADC
     // pairs survive; same codebooks, LUT integers, and rank rule (the
     // oracle filters the full ADC table by cell — correctness-identical
     // to Spark's cell-pruned join)
-    "q_ivf_pq" -> {
+    Entry("q_ivf_pq", VectorOps.ivfPqAnn, {
       import graft.queries.VectorOps.PqTopK
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |c AS (SELECT vec_id AS cid, embedding AS c_emb FROM e WHERE vec_id < 8),
@@ -4953,11 +4625,12 @@ object SparkEntry {
         |  FROM flt)
         |SELECT probe_id, cell, rank, neighbor_id, adc_dist
         |FROM r WHERE rank <= $PqTopK ORDER BY probe_id, rank""".stripMargin
-    },
+    }),
+    // multi-probe IVF x PQ: both recall knobs in one composed query path
     // the q_ivf_pq chain with the probe side taking its top-IvfNProbe
     // cells (same sim DESC, cid tie rule as the assignment); a candidate
     // has exactly one cell, so the multi-probe join needs no dedup
-    "q_ivfpq_multi" -> {
+    Entry("q_ivfpq_multi", VectorOps.ivfPqMulti, {
       import graft.queries.VectorOps.{IvfNProbe, PqProbes, PqTopK}
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |c AS (SELECT vec_id AS cid, embedding AS c_emb FROM e WHERE vec_id < 8),
@@ -4982,12 +4655,13 @@ object SparkEntry {
         |  FROM flt)
         |SELECT probe_id, rank, neighbor_id, adc_dist
         |FROM r WHERE rank <= $PqTopK ORDER BY probe_id, rank""".stripMargin
-    },
+    }),
+    // Markov removal-effect attribution: absorbing-chain value iteration
     // same purchase-split journeys, same quantized matrix, the SAME
     // unrolled integer value iteration (removal = value forced to 0, no
     // matrix rebuild); every division is integral on non-negatives, the
     // effect sum is an integer sum — only the two final ratios are doubles
-    "q_markov_removal" -> {
+    Entry("q_markov_removal", BehaviorOps.markovRemoval, {
       import graft.queries.BehaviorOps.{MarkovRemIters, MarkovRemScale}
       val rounds = (1 to MarkovRemIters).map { k =>
         s"""v$k AS MATERIALIZED (
@@ -5034,10 +4708,11 @@ object SparkEntry {
         |    AS removal_effect,
         |  CAST(eff_q AS DOUBLE) / nullif(CAST(te AS DOUBLE), 0.0) AS attribution
         |FROM eff CROSS JOIN t2 ORDER BY channel""".stripMargin
-    },
+    }),
+    // cross-source quantile normalization (batch-effect correction)
     // same (n_chars, doc_id) rank tie rule, same floor-interpolated index
     // by integer cross-multiplication, one division of an exact int sum
-    "q_quantile_norm" ->
+    Entry("q_quantile_norm", CurationOps.quantileNorm,
       """WITH d AS (SELECT doc_id, source, n_chars FROM documents),
         |rk AS (SELECT doc_id, source, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS r
@@ -5054,11 +4729,12 @@ object SparkEntry {
         |SELECT rk.doc_id, rk.source, rk.n_chars,
         |  CAST(rk.r AS INT) AS rank_in_source,
         |  CAST(t.sv AS DOUBLE) / CAST(t.c AS DOUBLE) AS norm_chars
-        |FROM rk JOIN t USING (source, r) ORDER BY rk.doc_id""".stripMargin,
+        |FROM rk JOIN t USING (source, r) ORDER BY rk.doc_id""".stripMargin),
+    // Matryoshka truncation audit: 16-dim vs 64-dim top-3 agreement
     // one pair pass, two rankings: the truncated cosine reads the first
     // TruncDims components of the SAME arrays (range-bounded list fold =
     // Spark's sliced-array dot, same left-to-right order)
-    "q_dim_trunc" -> {
+    Entry("q_dim_trunc", VectorOps.dimTruncRecall, {
       import graft.queries.VectorOps.TruncDims
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |pr AS (SELECT vec_id AS probe_id, embedding AS p_emb, n FROM e WHERE vec_id < 5),
@@ -5076,10 +4752,11 @@ object SparkEntry {
         |SELECT probe_id, CAST(tr AS INT) AS rank, neighbor_id, cos_trunc,
         |  fr <= 3 AS in_full_top3
         |FROM rk WHERE tr <= 3 ORDER BY probe_id, rank""".stripMargin
-    },
+    }),
+    // Simpson's screen: per-segment vs pooled slope, moments re-aggregated
     // same per-segment exact moments (HUGEINT through the VARCHAR
     // detour), pooled moments RE-AGGREGATED from them, same closed forms
-    "q_simpsons" -> {
+    Entry("q_simpsons", StatsOps.simpsons, {
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       def slope(n: String, sx: String, sy: String, sxy: String, sxx: String) =
@@ -5102,9 +4779,10 @@ object SparkEntry {
         |SELECT segment, n, slope, pooled_slope,
         |  slope * pooled_slope < 0 AS is_reversed
         |FROM s ORDER BY segment""".stripMargin
-    },
+    }),
+    // sample-ratio-mismatch guardrail on the experiment's user split
     // same user-grain distinct, same integer cross-multiplied flag
-    "q_srm_check" -> {
+    Entry("q_srm_check", BehaviorOps.srmCheck, {
       import graft.queries.BehaviorOps.SrmChiCritX1000
       s"""WITH u AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
         |c AS (SELECT
@@ -5115,10 +4793,11 @@ object SparkEntry {
         |  CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS chi_sq,
         |  1000 * (n_a - n_b) * (n_a - n_b) > $SrmChiCritX1000 * (n_a + n_b) AS srm
         |FROM c""".stripMargin
-    },
+    }),
+    // log-log price elasticity per brand (quantized-integer-log OLS)
     // same integer-argument quantized logs on both axes, same moments,
     // same closed-form slope/intercept through the VARCHAR detour
-    "q_elasticity" -> {
+    Entry("q_elasticity", StatsOps.elasticity, {
       import graft.queries.StatsOps.LogScale
       def lnq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $LogScale.0 + 0.5) AS BIGINT)"
@@ -5139,10 +4818,11 @@ object SparkEntry {
         |    (${dbl("sy")} - ($slope) * ${dbl("sx")}) / ${dbl("n")} / $LogScale.0 AS intercept
         |  FROM m)
         |SELECT brand, n, elasticity, intercept FROM s ORDER BY brand""".stripMargin
-    },
+    }),
+    // leave-one-segment-out trend influence from additive moments
     // same additive moments (pooled − segment), same closed-form slopes
     // through the same VARCHAR detour for the HUGEINT moments
-    "q_loo_influence" -> {
+    Entry("q_loo_influence", StatsOps.looInfluence, {
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       def slope(n: String, sx: String, sy: String, sxy: String, sxx: String) =
@@ -5170,10 +4850,11 @@ object SparkEntry {
         |SELECT segment, n, slope_full, slope_loo,
         |  slope_full - slope_loo AS influence
         |FROM s ORDER BY segment""".stripMargin
-    },
+    }),
+    // Markov transition model backtested on each user's held-out last hop
     // same transition build, same last-per-user holdout, same
     // (count DESC, next) argmax; unseen states predict NULL = miss
-    "q_markov_eval" ->
+    Entry("q_markov_eval", BehaviorOps.markovEval,
       """WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |t AS (SELECT user_id, event_type AS cur,
@@ -5192,11 +4873,12 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN nxt = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
         |  CAST(SUM(CASE WHEN nxt = pred THEN 1 ELSE 0 END) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE) AS accuracy
-        |FROM test GROUP BY cur ORDER BY cur""".stripMargin,
+        |FROM test GROUP BY cur ORDER BY cur""".stripMargin),
+    // STL-style daily decomposition: trend + weekday seasonal + residual
     // same day-scale series, same 7-offset explode join for the centered
     // trend sum, same integer detrend (7*cents - sum7) and weekday means;
     // every component derives from exact integers, divisions at the edge
-    "q_stl" -> {
+    Entry("q_stl", StatsOps.stl, {
       import graft.queries.StatsOps.StlHalf
       val w = 2 * StlHalf + 1
       s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
@@ -5219,11 +4901,12 @@ object SparkEntry {
         |  CAST(cents AS DOUBLE) - CAST(sum7 AS DOUBLE) / $w
         |    - CAST(s_num AS DOUBLE) / CAST(s_n * $w AS DOUBLE) AS residual
         |FROM det JOIN seas USING (dow) ORDER BY day""".stripMargin
-    },
+    }),
+    // entity resolution completed: match-pair components + survivorship
     // same drop-one sorted-word-subset keys (equi-join candidate match),
     // recursive-walk components over name strings (both engines order
     // ASCII names identically), same (m DESC, name) survivorship
-    "q_golden_record" ->
+    Entry("q_golden_record", CurationOps.goldenRecord,
       s"""WITH $goldenLabSql,
         |ent AS (SELECT comp, COUNT(*) AS n_variants, CAST(SUM(m) AS BIGINT) AS n_rows
         |  FROM lab GROUP BY 1),
@@ -5231,11 +4914,12 @@ object SparkEntry {
         |    SELECT *, row_number() OVER (PARTITION BY comp ORDER BY m DESC, name) AS r
         |    FROM lab) WHERE r = 1)
         |SELECT canonical_name, n_variants, n_rows FROM ent JOIN canon USING (comp)
-        |WHERE n_variants >= 2 ORDER BY canonical_name""".stripMargin,
+        |WHERE n_variants >= 2 ORDER BY canonical_name""".stripMargin),
+    // golden record + hub verification: over-merged entities refined
     // same chain + hub verification vs the elected canonical: word-set
     // Jaccard by exact sizes (|A∩B| = |A|+|B|−|A∪B|), integer
     // cross-multiplied threshold, same (m DESC, name) canonical
-    "q_entity_verify" -> {
+    Entry("q_entity_verify", CurationOps.entityVerify, {
       import graft.queries.CurationOps.VerifyTauDen
       s"""WITH $goldenLabSql,
         |canon AS (SELECT comp, name AS canon_name FROM (
@@ -5255,9 +4939,10 @@ object SparkEntry {
         |FROM v GROUP BY comp, canon_name
         |HAVING SUM(CASE WHEN inter_n * $VerifyTauDen >= un THEN 1 ELSE 0 END) >= 2
         |ORDER BY canonical_name""".stripMargin
-    },
+    }),
+    // contrastive hard-negative mining (label-contrastive cosine top-k)
     // same label-rejecting pair join, same cosine and (cos desc, id) rank
-    "q_hard_negatives" -> {
+    Entry("q_hard_negatives", VectorOps.hardNegatives, {
       import graft.queries.VectorOps.{HardNegK, HardNegProbes}
       s"""WITH e AS (SELECT vec_id, label, embedding, len(embedding) AS n FROM embeddings),
         |pr AS (SELECT vec_id AS probe_id, label AS p_label, embedding AS p_emb, n
@@ -5271,10 +4956,11 @@ object SparkEntry {
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
         |  FROM pairs)
         |WHERE rnk <= $HardNegK ORDER BY probe_id, rank""".stripMargin
-    },
+    }),
+    // hybrid dense+lexical retrieval fused by reciprocal rank
     // same two rank lists (cosine scan; probe-term BM25 with the exact
     // integer-quantized contributions) fused by the same two-term RRF sum
-    "q_hybrid_rrf" -> {
+    Entry("q_hybrid_rrf", VectorOps.hybridRrf, {
       import graft.queries.TextOps.{BmB, BmK1, BmScale}
       import graft.queries.VectorOps.{RrfK, RrfPoolK, RrfProbes, RrfTopK}
       def lnq(m: String) =
@@ -5330,20 +5016,22 @@ object SparkEntry {
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY rrf_score DESC, neighbor_id) AS rnk
         |  FROM fused)
         |WHERE rnk <= $RrfTopK ORDER BY probe_id, rank""".stripMargin
-    },
+    }),
+    // top principal component: exact-integer centered Gram + power iteration
     // same integer moments (n·Σqq − ΣqΣq), same 24 unrolled L∞-normalized
     // matvec rounds as k-ascending first-seed folds, same Rayleigh close
-    "q_pca_power" -> {
+    Entry("q_pca_power", VectorOps.pcaPower, {
       import graft.queries.VectorOps.PcaDim
       s"""WITH $pcaCoreSql
         |SELECT CAST(jj - 1 AS INT) AS dim, v[jj] / sqrt(den) AS loading,
         |  num / den AS lambda, (num / den) / CAST(tr.tr AS DOUBLE) AS var_frac
         |FROM sc CROSS JOIN tr CROSS JOIN (SELECT unnest(range(1, ${PcaDim + 1})) AS jj)
         |ORDER BY dim""".stripMargin
-    },
+    }),
+    // per-source unigram KL divergence matrix (integer-sum total)
     // same add-one smoothing over the shared vocab, same integer
     // cross-product log arguments, same single end division
-    "q_source_kl" -> {
+    Entry("q_source_kl", TextOps.sourceKl, {
       import graft.queries.TextOps.BmScale
       // HUGEINT count-product argument -> VARCHAR detour (q_psi note)
       def lnq(m: String) =
@@ -5370,17 +5058,20 @@ object SparkEntry {
         |    / CAST(nap AS DOUBLE) / $BmScale.0 AS kl
         |FROM j GROUP BY source_a, source_b, n_a, n_b, nap
         |ORDER BY source_a, source_b""".stripMargin
-    },
+    }),
+    // Wald SPRT day-by-day experiment monitor (integer LLR cumsum)
     // same /50 rational hypotheses, same integer lnq increments, same
     // arm-partitioned day cumsum against the quantized ±ln 19 bound
-    "q_sprt_monitor" -> sprtMonitorSql,
+    Entry("q_sprt_monitor", BehaviorOps.sprtMonitor, sprtMonitorSql),
+    // the SPRT cumsum as flatMapGroupsWithState state (batch twin)
     // the SAME integer cumsum carried as flatMapGroupsWithState state
     // (one oracle, two plans: window cumsum vs per-arm stateful fold)
-    "q_sprt_state" -> sprtMonitorSql,
+    Entry("q_sprt_state", graft.streaming.SprtState.sprtStateBatch, sprtMonitorSql),
+    // harmonic centrality from probe customers (exact lcm-scaled 1/d)
     // same bipartite encoding and seeds; the layered first-visit BFS
     // replays as a depth-bounded recursive walk + MIN(depth); same
     // lcm-scaled integer reciprocals
-    "q_harmonic" -> {
+    Entry("q_harmonic", GraphOps.harmonic, {
       import graft.queries.GraphOps.{HarmonicLcm, HarmonicMaxDepth, HarmonicSeedMod}
       s"""WITH pairs AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -5399,13 +5090,15 @@ object SparkEntry {
         |SELECT s // 2 AS custkey, CAST(COUNT(*) AS BIGINT) AS n_reached,
         |  CAST(SUM($HarmonicLcm // depth) AS DOUBLE) / $HarmonicLcm.0 AS harmonic
         |FROM d WHERE depth > 0 GROUP BY s ORDER BY custkey""".stripMargin
-    },
+    }),
+    // source-sampled Brandes betweenness: integer sigma + 2^20 fixed-
+    // point dependency accumulation, top-20 interior nodes
     // same bipartite encoding and seeds as q_harmonic; sigma replays as
     // WALK COUNTS (a minimum-length walk cannot revisit, so the count of
     // length-MIN(depth) walks IS the shortest-path count) in unrolled
     // edge-join CTEs with HUGEINT counts; the backward sweep applies the
     // identical half-up integral rational (2a+b)//(2b) level by level
-    "q_betweenness" -> {
+    Entry("q_betweenness", GraphOps.betweenness, {
       import graft.queries.GraphOps.{BetwMaxDepth, BetwScale, HarmonicSeedMod}
       val walks = (1 to BetwMaxDepth).map { d =>
         s"""w$d AS MATERIALIZED (SELECT w.sk, e.dst AS node, SUM(w.sigma) AS sigma
@@ -5453,12 +5146,14 @@ object SparkEntry {
         |  node // 2 AS entity_key, n_sources, betw_q,
         |  CAST(betw_q AS DOUBLE) / $BetwScale.0 AS betweenness
         |FROM agg ORDER BY betw_q DESC, kind, entity_key LIMIT 20""".stripMargin
-    },
+    }),
+    // HyperANF neighborhood function: per-node HLL register-max
+    // propagation, quantized-integer estimate sums per depth
     // same md5 registers as q_hll_distinct, propagated through unrolled
     // 16-column register-MAX CTEs; per-node estimates floor-quantized to
     // 1/1024 BEFORE the cross-node sum, so nf_q is an exact integer in
     // both engines and only the mirrored final divisions run in floats
-    "q_anf" -> {
+    Entry("q_anf", GraphOps.anf, {
       import graft.queries.GraphOps.{AnfEstNum, AnfMaxDepth, AnfQScale, AnfRegisters}
       val ms = (0 until AnfRegisters).map(i => s"m$i")
       val mcols = ms.mkString(", ")
@@ -5506,10 +5201,11 @@ object SparkEntry {
         |  CAST(nf_q AS DOUBLE) / $AnfQScale.0 AS nf_est, nf_q,
         |  CAST(nf_q AS DOUBLE) / CAST(nf_q_max AS DOUBLE) AS nf_ratio
         |FROM all_ CROSS JOIN hz ORDER BY depth""".stripMargin
-    },
+    }),
+    // 2-component mixture by classification EM (exact-moment scores)
     // same midpoint init, same unrolled rounds with HUGEINT moments and
     // the identical per-row score expression (lnq grid + exact rational)
-    "q_gmm_hard" -> {
+    Entry("q_gmm_hard", StatsOps.gmmHard, {
       import graft.queries.StatsOps.{GmmRounds, LogScale}
       def lnq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $LogScale.0 + 0.5) AS BIGINT)"
@@ -5558,9 +5254,10 @@ object SparkEntry {
         |$rounds,
         |${moments(s"a$GmmRounds", "fin")}
         |${out(1)} UNION ALL ${out(2)} ORDER BY component""".stripMargin
-    },
+    }),
+    // JL sketch distance-preservation audit over the LSH planes
     // same ±1 md5 planes, same left-associated 16-term estimate
-    "q_jl_audit" -> {
+    Entry("q_jl_audit", VectorOps.jlAudit, {
       import graft.queries.VectorOps.{JlPlanes, JlProbes}
       val projCols = (0 until JlPlanes).map(j => s"${planeDotSql(j)} AS p$j").mkString(",\n    ")
       val est = (0 until JlPlanes)
@@ -5577,10 +5274,11 @@ object SparkEntry {
         |  FROM b a JOIN b c ON a.vec_id < c.vec_id)
         |SELECT id_a, id_b, d2_true, d2_jl, d2_jl / nullif(d2_true, CAST(0 AS DOUBLE)) AS ratio
         |FROM pairs ORDER BY id_a, id_b""".stripMargin
-    },
+    }),
+    // coarsened-exact-matching ATT (adaptive mean cuts, pruned strata)
     // same adaptive cross-multiplied cuts, same pruned-strata join, same
     // stratum-ordered ATT fold
-    "q_cem_att" ->
+    Entry("q_cem_att", StatsOps.cemAtt,
       s"""WITH ev AS (SELECT user_id, event_type,
         |    CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM events),
         |u AS (SELECT user_id,
@@ -5608,10 +5306,11 @@ object SparkEntry {
         |att AS (SELECT list_reduce(list(CAST(n_treated AS DOUBLE) * diff ORDER BY stratum),
         |    (a, b) -> a + b) / CAST(SUM(n_treated) AS DOUBLE) AS att FROM d2)
         |SELECT stratum, n_treated, n_control, mean_y_treated, mean_y_control, diff, att
-        |FROM d2 CROSS JOIN att ORDER BY stratum""".stripMargin,
+        |FROM d2 CROSS JOIN att ORDER BY stratum""".stripMargin),
+    // per-label PC1 projection moments (the trained component applied)
     // same unit loadings, same k-ascending projection fold and floor
     // quantization, same HUGEINT (n·Σp² − ΣpΣp) spread moments
-    "q_pca_project" -> {
+    Entry("q_pca_project", VectorOps.pcaProject, {
       import graft.queries.VectorOps.{PcaDim, PcaScale}
       val dp1 = PcaDim + 1
       s"""WITH $pcaCoreSql,
@@ -5632,11 +5331,12 @@ object SparkEntry {
         |    / (CAST(n_vecs AS DOUBLE) * CAST(n_vecs AS DOUBLE))
         |    / ${PcaScale * PcaScale}.0 AS var_proj
         |FROM ag ORDER BY label""".stripMargin
-    },
+    }),
+    // Newman modularity of co-purchase components, exact wide-int terms
     // same thresholded co-edges; recursive-walk components (= Spark's
     // converged pointer-jumping labels); identical wide-int modularity
     // terms through the VARCHAR detour
-    "q_modularity" ->
+    Entry("q_modularity", GraphOps.modularity,
       s"""WITH ${coEdgeCtes()},
         |sym AS (SELECT u AS src, v AS dst FROM e0
         |  UNION ALL SELECT v AS src, u AS dst FROM e0),
@@ -5667,11 +5367,12 @@ object SparkEntry {
         |SELECT component, n_nodes, e_c AS intra_edges, d_c AS degree_sum,
         |  CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(den AS VARCHAR) AS DOUBLE) AS q_c,
         |  q_total
-        |FROM parts CROSS JOIN qt ORDER BY component""".stripMargin,
+        |FROM parts CROSS JOIN qt ORDER BY component""".stripMargin),
+    // one-level Louvain: parity-scheduled modularity-ascent moves
     // same singleton start, same exact HUGEINT gain score 2m·k_ic −
     // k_i·(tot − own k_i), same min-community tiebreak and parity-
     // alternating move schedule, unrolled to the shared round count
-    "q_louvain" -> {
+    Entry("q_louvain", GraphOps.louvain, {
       import graft.queries.GraphOps.LouvainIters
       val lk = s"l$LouvainIters"
       s"""WITH $louvainL1Ctes,
@@ -5694,12 +5395,13 @@ object SparkEntry {
         |  CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(den AS VARCHAR) AS DOUBLE) AS q_c,
         |  q_total
         |FROM parts CROSS JOIN qt ORDER BY community""".stripMargin
-    },
+    }),
+    // two-level Louvain: contraction into the weighted supergraph + re-run
     // same level-1 chain, contraction into the weighted supergraph (edge
     // weight = inter-community count, self rows = intra mass, supernode
     // weight = level-1 tot, m invariant), the SAME move-round template
     // re-run weighted, final partition = labels2 ∘ labels1
-    "q_louvain2" -> {
+    Entry("q_louvain2", GraphOps.louvain2, {
       import graft.queries.GraphOps.{LouvainIters, LouvainLevelsMax}
       val lk = s"l$LouvainIters"
       // One contraction LEVEL, mirrored (GraphOps.louvain2From's level
@@ -5792,13 +5494,14 @@ object SparkEntry {
         |  CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(den AS VARCHAR) AS DOUBLE) AS q_c,
         |  q_total, q_level1
         |FROM parts CROSS JOIN qt CROSS JOIN q1 ORDER BY community""".stripMargin
-    },
+    }),
+    // exact 2-D DBSCAN: grid radius graph, core CC, deterministic borders
     // same quantized coordinates and radius (the oracle may take the
     // quadratic candidate join the Spark plan is banned from — the shift
     // cancels in differences), same core rule, recursive-walk components
     // (= Spark's converged min-label propagation), same min-adjacent
     // border assignment
-    "q_dbscan" -> {
+    Entry("q_dbscan", VectorOps.dbscan, {
       import graft.queries.VectorOps.{NnRadius, DbscanMinPts}
       s"""WITH p AS MATERIALIZED (SELECT vec_id,
         |    CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000000) AS BIGINT) AS x,
@@ -5828,14 +5531,15 @@ object SparkEntry {
         |nb AS (SELECT comp, COUNT(*) AS n_border FROM borders GROUP BY 1)
         |SELECT nc.comp AS cluster_id, n_core, COALESCE(n_border, 0) AS n_border
         |FROM nc LEFT JOIN nb USING (comp) ORDER BY cluster_id""".stripMargin
-    },
+    }),
+    // Holt level+trend smoothing backtest, struct-accumulator ordered fold
     // same calendar-reduced series, same first-element-seeded ARRAY fold.
     // Two DuckDB traps pinned here: a bare 0.5 is DECIMAL (the recursion
     // would run in decimal arithmetic), and a STRUCT accumulator is
     // mutated field-by-field by list_reduce — the t field's `a.l` reads
     // the already-updated level (probed: [10,20,40] gave t=4.6875, not
     // the IEEE-correct 8.125) — so the state rides a 2-element list
-    "q_holt" -> {
+    Entry("q_holt", StatsOps.holt, {
       import graft.queries.StatsOps.HoltHorizon
       val half = "CAST(0.5 AS DOUBLE)"
       s"""WITH daily AS (
@@ -5858,10 +5562,11 @@ object SparkEntry {
         |  abs(CAST(d.x AS DOUBLE) - f.forecast_cents) AS abs_err
         |FROM f JOIN daily d ON d.day = f.day
         |ORDER BY h""".stripMargin
-    },
+    }),
+    // Holt-Winters additive weekly-seasonal smoothing backtest
     // the same 10-slot array fold, generated from the SAME hwStepExprs
     // (1-based here) so both engines run the identical expression tree
-    "q_holt_winters" -> {
+    Entry("q_holt_winters", StatsOps.holtWinters, {
       import graft.queries.StatsOps.{HwHorizon, HwPeriod, hwStepExprs}
       val zeros = Seq.fill(8)("CAST(0.0 AS DOUBLE)").mkString(", ")
       val merge = hwStepExprs(1).mkString("[", ", ", "]")
@@ -5884,10 +5589,11 @@ object SparkEntry {
         |  abs(CAST(d.x AS DOUBLE) - f.forecast_cents) AS abs_err
         |FROM f JOIN daily d ON d.day = f.day
         |ORDER BY h""".stripMargin
-    },
+    }),
+    // Laplace-mechanism noisy count release, deterministic noise replica
     // same md5-derived symmetric draw, same quantized integer-log
     // magnitude, same clamp — noise is bit-identical by construction
-    "q_dp_counts" -> {
+    Entry("q_dp_counts", PrivacyOps.dpCounts, {
       import graft.queries.PrivacyOps.{DpBMilli, DpEpsMilli, DpHalfRange}
       import graft.queries.StatsOps.LogScale
       def lnqSql(e: String) =
@@ -5908,10 +5614,11 @@ object SparkEntry {
         |  ${DpEpsMilli.toDouble / 1000.0} AS epsilon_nominal,
         |  TRUE AS deterministic_replica
         |FROM r ORDER BY source""".stripMargin
-    },
+    }),
+    // in-engine Naive Bayes: train on parity split, classify, confusion
     // same parity split, same Laplace-smoothed quantized-log weights,
     // same matched-tokens-only normalizer — scores are exact integers
-    "q_nb_classify" -> {
+    Entry("q_nb_classify", TextOps.nbClassify, {
       s"""WITH $nbScoredCtes,
         |m AS (SELECT n_train, v, CAST(COUNT(*) AS BIGINT) AS n_test,
         |    CAST(SUM(CASE WHEN score > 0 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
@@ -5928,10 +5635,11 @@ object SparkEntry {
         |    / nullif(CAST(tp AS DOUBLE) / nullif(CAST(tp + fp AS DOUBLE), 0.0)
         |      + CAST(tp AS DOUBLE) / nullif(CAST(tp + fn AS DOUBLE), 0.0), 0.0) AS f1
         |FROM m""".stripMargin
-    },
+    }),
+    // decile lift / cumulative gains of the trained NB score
     // same NB scoring chain; global rank replays the engine's exclusive
     // prefix + within-score rank; same integer decile cut and cumulative
-    "q_lift_curve" -> {
+    Entry("q_lift_curve", TextOps.liftCurve, {
       s"""WITH $nbScoredCtes,
         |rk AS (SELECT y, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rn
         |  FROM scored),
@@ -5949,10 +5657,11 @@ object SparkEntry {
         |    / nullif(CAST(n_d AS DOUBLE) * CAST(p AS DOUBLE), 0.0) AS lift,
         |  CAST(cum_pos AS DOUBLE) / nullif(CAST(p AS DOUBLE), 0.0) AS cum_gain
         |FROM g JOIN cum ON g.decile = cum.d2 ORDER BY decile""".stripMargin
-    },
+    }),
+    // KS separation of the NB score distributions, positives vs negatives
     // same NB scoring chain; the ksTest shape over the score column with
     // per-class cumulatives — exact rational D, min-score location
-    "q_ks_classifier" -> {
+    Entry("q_ks_classifier", TextOps.ksClassifier, {
       s"""WITH $nbScoredCtes,
         |pv AS (SELECT score AS v, CAST(SUM(y) AS BIGINT) AS c1,
         |    CAST(SUM(1 - y) AS BIGINT) AS c0
@@ -5968,10 +5677,11 @@ object SparkEntry {
         |SELECT n1, n0, CAST(MIN(v) AS BIGINT) AS at_score, d_num,
         |  CAST(d_num AS DOUBLE) / nullif(CAST(n1 * n0 AS DOUBLE), 0.0) AS d_stat
         |FROM dev JOIN b ON dnum = d_num GROUP BY n1, n0, d_num""".stripMargin
-    },
+    }),
+    // exact Mann-Whitney ROC-AUC of the NB score, ties half-credited
     // same per-score class counts, same Mann-Whitney doubled-U identity
     // U*2 = sum c1*(2*F0 - c0) in HUGEINT, one final division
-    "q_auc_roc" -> {
+    Entry("q_auc_roc", TextOps.aucRoc, {
       s"""WITH $nbScoredCtes,
         |pv AS (SELECT score AS v, CAST(SUM(y) AS BIGINT) AS c1,
         |    CAST(SUM(1 - y) AS BIGINT) AS c0
@@ -5988,11 +5698,12 @@ object SparkEntry {
         |    / nullif(2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE), 0.0) * 2 - 1
         |    AS gini_coeff
         |FROM u""".stripMargin
-    },
+    }),
+    // McNemar paired test: trained NB vs the stopword langid heuristic
     // the NB scoring chain paired with an inline (renamed) copy of the
     // langid chain on the same test docs; same exact 2x2 cells and
     // continuity-corrected chi-square
-    "q_mcnemar" -> {
+    Entry("q_mcnemar", TextOps.mcnemar, {
       import graft.queries.TextOps.NbPosLang
       s"""WITH $nbScoredCtes,
         |ld AS (SELECT doc_id, lang,
@@ -6020,10 +5731,11 @@ object SparkEntry {
         |    * CAST(GREATEST(abs(n10 - n01) - 1, 0) AS DOUBLE)
         |    / nullif(CAST(n10 + n01 AS DOUBLE), 0.0) AS chi2_cc
         |FROM mm""".stripMargin
-    },
+    }),
+    // optimal decision-stump split per feature by exact-moment Gini
     // same per-value reduction (window cumsum replays the two-level
     // prefix sum), same exact-int split objective, same min-v argmax
-    "q_stump" -> {
+    Entry("q_stump", StatsOps.stump, {
       import graft.queries.StatsOps.StumpPosPriority
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       def sq2(a: String, b: String) =
@@ -6053,10 +5765,11 @@ object SparkEntry {
         |${block("b", "day", "order_day")}
         |SELECT * FROM (SELECT * FROM r_a UNION ALL SELECT * FROM r_b)
         |ORDER BY feature""".stripMargin
-    },
+    }),
+    // Friedman blocked-rank chi2 across event types, tie-corrected
     // same complete-block restriction, same in-block doubled midranks,
     // same type-ordered fold and HUGEINT tie moment
-    "q_friedman" ->
+    Entry("q_friedman", StatsOps.friedman,
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
         |  FROM events GROUP BY 1, 2),
         |kk AS (SELECT COUNT(DISTINCT event_type) AS k FROM daily),
@@ -6085,11 +5798,12 @@ object SparkEntry {
         |    12.0 * s / (nd * kd * (kd + 1.0)) - 3.0 * nd * (kd + 1.0) AS chi2,
         |    1.0 - t3d / (nd * kd * (kd * kd - 1.0)) AS tie_c
         |  FROM f)
-        |SELECT k, n, chi2, tie_c, chi2 / nullif(tie_c, 0.0) AS chi2_adj FROM h""".stripMargin,
+        |SELECT k, n, chi2, tie_c, chi2 / nullif(tie_c, 0.0) AS chi2_adj FROM h""".stripMargin),
+    // oracle-checked recall@3 of multi-probe IVF vs exact brute force
     // the q_sim_topk and q_sim_ivf_multi chains verbatim, joined: recall
     // is |approx ∩ exact| / k per probe — the ANN honesty metric itself
     // cross-engine-checked
-    "q_ann_recall" ->
+    Entry("q_ann_recall", VectorOps.annRecall,
       s"""WITH e AS (SELECT vec_id, embedding, len(embedding) AS n FROM embeddings),
         |pr0 AS (SELECT vec_id AS probe_id, embedding AS p_emb, n FROM e WHERE vec_id < 5),
         |pairs0 AS (
@@ -6125,10 +5839,11 @@ object SparkEntry {
         |base AS (SELECT probe_id, CAST(COUNT(*) AS BIGINT) AS k FROM exact GROUP BY 1)
         |SELECT b.probe_id AS probe_id, k, COALESCE(n_hit, 0) AS n_hit,
         |  CAST(COALESCE(n_hit, 0) AS DOUBLE) / CAST(k AS DOUBLE) AS recall
-        |FROM base b LEFT JOIN hits USING (probe_id) ORDER BY b.probe_id""".stripMargin,
+        |FROM base b LEFT JOIN hits USING (probe_id) ORDER BY b.probe_id""".stripMargin),
+    // exact radius nearest-neighbor join via 3x3 grid-cell pruning
     // same shifted integer grid (cell = radius), same 9-offset candidate
     // join, same (dist2, id) argmin
-    "q_radius_nn" -> {
+    Entry("q_radius_nn", VectorOps.radiusNn, {
       import graft.queries.VectorOps.{NnRadius, NnShift}
       s"""WITH p AS (SELECT vec_id,
         |    CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000000) AS BIGINT) + $NnShift AS x,
@@ -6148,19 +5863,21 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2, nn_id) AS rn
         |  FROM c WHERE dist2 <= ${NnRadius * NnRadius})
         |SELECT vec_id, nn_id, dist2 FROM g WHERE rn = 1 ORDER BY vec_id""".stripMargin
-    },
+    }),
+    // winnowing fingerprints (MOSS): windowed rightmost-min 3-gram hashes
     // same packed (hash, rightmost-pos) integer window-min over the same
     // positional 3-gram hashes, full windows only; same n_grams < P
     // packing-bound exclusion of oversized docs
-    "q_winnow" ->
+    Entry("q_winnow", TextOps.winnow,
       s"""WITH $winnowSelSql
         |SELECT doc_id, CAST(MAX(n_grams) AS BIGINT) AS n_grams,
         |  COUNT(*) AS n_fingerprints, COUNT(DISTINCT fp_hash) AS n_distinct_hashes,
         |  CAST(COUNT(*) AS DOUBLE) / CAST(MAX(n_grams) - ${graft.queries.TextOps.WinnowW - 1} AS DOUBLE) AS density
-        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // cross-document plagiarism candidates off shared winnow fingerprints
     // same winnow selection chain, same df-capped fp_hash equi-join, same
     // shared-count threshold and min-side containment
-    "q_plagiarism_pairs" -> {
+    Entry("q_plagiarism_pairs", TextOps.plagiarismPairs, {
       import graft.queries.TextOps.{PlagMaxDf, PlagMinShared}
       s"""WITH $winnowSelSql,
         |fps AS (SELECT DISTINCT doc_id, fp_hash FROM s),
@@ -6175,10 +5892,11 @@ object SparkEntry {
         |  CAST(n_shared AS DOUBLE) / CAST(least(ca.n_fp, cb.n_fp) AS DOUBLE) AS containment
         |FROM pairs JOIN nfp ca ON doc_a = ca.doc_id JOIN nfp cb ON doc_b = cb.doc_id
         |ORDER BY n_shared DESC, doc_a, doc_b""".stripMargin
-    },
+    }),
+    // per-source distinctive vocabulary by smoothed quantized log-odds
     // same margins off the one (source, term) aggregate, same +1-smoothed
     // quantized integer-log cross-products, same (lor DESC, term) top-k
-    "q_topic_words" -> {
+    Entry("q_topic_words", TextOps.topicWords, {
       import graft.queries.TextOps.{BmScale, TopicK}
       def lq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $BmScale.0 + 0.5) AS BIGINT)"
@@ -6197,9 +5915,10 @@ object SparkEntry {
         |SELECT source, CAST(rnk AS INT) AS rank, term, c_sw AS n_in_source,
         |  c_rest AS n_elsewhere, CAST(lor_q AS DOUBLE) / $BmScale.0 AS log_odds
         |FROM r WHERE rnk <= $TopicK ORDER BY source, rank""".stripMargin
-    },
+    }),
+    // marginal bigram-novelty curve over append-order id buckets
     // same arithmetic id buckets off the 1-row max, same min-doc first-seen
-    "q_novelty_curve" -> {
+    Entry("q_novelty_curve", TextOps.noveltyCurve, {
       import graft.queries.TextOps.NoveltyBuckets
       s"""WITH d AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk
         |  FROM documents),
@@ -6221,10 +5940,11 @@ object SparkEntry {
         |    / CAST(nullif(COALESCE(n_instances, 0), 0) AS DOUBLE) AS novelty_rate
         |FROM dc LEFT JOIN inst USING (bucket) LEFT JOIN nw USING (bucket)
         |ORDER BY bucket""".stripMargin
-    },
+    }),
+    // QQ decile table between two corpus slices (the KS companion)
     // same exact-order-statistic interpolation (quantile_cont == percentile,
     // the equidepth contract) at the same 9 deciles
-    "q_qq_deciles" -> {
+    Entry("q_qq_deciles", StatsOps.qqDeciles, {
       import graft.queries.StatsOps.{KsSourceA, KsSourceB}
       val probs = (1 until 10).map(i => (i.toDouble / 10).toString).mkString("[", ", ", "]")
       s"""WITH a AS (SELECT quantile_cont(CAST(n_chars AS DOUBLE), $probs) AS qa
@@ -6235,9 +5955,10 @@ object SparkEntry {
         |SELECT CAST(i * 10 AS INT) AS decile, qa[i] AS q_a, qb[i] AS q_b,
         |  qb[i] - qa[i] AS diff, qb[i] / nullif(qa[i], 0.0) AS ratio
         |FROM x ORDER BY decile""".stripMargin
-    },
+    }),
+    // Kimball drill-across: two facts pre-aggregated to the conformed month
     // same conformed-month pre-aggregation per fact, same full-outer merge
-    "q_drill_across" ->
+    Entry("q_drill_across", OlapOps.drillAcross,
       """WITH rev AS (SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS month_key,
         |    COUNT(*) AS n_orders,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)) AS BIGINT) AS revenue_cents
@@ -6250,10 +5971,11 @@ object SparkEntry {
         |  COALESCE(n_orders, 0) AS n_orders, revenue_cents,
         |  COALESCE(n_events, 0) AS n_events, event_value_cents
         |FROM rev FULL OUTER JOIN act ON rev.month_key = act.month_key
-        |ORDER BY month_key""".stripMargin,
+        |ORDER BY month_key""".stripMargin),
+    // signup->purchase time-to-convert latency percentiles
     // same first-signup / first-qualifying-purchase reduction, same exact
     // microsecond deltas, quantile_cont == percentile (equidepth contract)
-    "q_funnel_time" ->
+    Entry("q_funnel_time", BehaviorOps.funnelTime,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us
         |  FROM events WHERE ts IS NOT NULL),
         |su AS (SELECT user_id, CAST(MIN(us) AS BIGINT) AS s_us FROM e
@@ -6269,11 +5991,12 @@ object SparkEntry {
         |  CAST(n_converted AS DOUBLE) / CAST(n_signups AS DOUBLE) AS conv_rate,
         |  ps[1] / CAST(1000000 AS DOUBLE) AS p50_secs,
         |  ps[2] / CAST(1000000 AS DOUBLE) AS p90_secs
-        |FROM ns CROSS JOIN st""".stripMargin,
+        |FROM ns CROSS JOIN st""".stripMargin),
+    // Zipf exponent: weighted log-log OLS, midrank ranks, no global window
     // same two-level prefix sum for higher-frequency counts, same doubled
     // midranks and quantized integer logs, HUGEINT moments on the VARCHAR
     // detour
-    "q_zipf_fit" -> {
+    Entry("q_zipf_fit", TextOps.zipfFit, {
       import graft.queries.TextOps.BmScale
       def lq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $BmScale.0 + 0.5) AS BIGINT)"
@@ -6304,10 +6027,11 @@ object SparkEntry {
         |SELECT n_terms, $slope AS slope, -($slope) AS zipf_alpha,
         |  ((${hdbl("sy")} - ($slope) * ${hdbl("sx")}) / $varN) / $BmScale.0 AS intercept_ln
         |FROM mo""".stripMargin
-    },
+    }),
+    // per-type interarrival gap profile (cadence / session-gap sizing)
     // same user-partitioned lag gaps (ts, event_id tiebreak), exact
     // microsecond sums, quantile_cont == percentile interpolation
-    "q_interarrival" ->
+    Entry("q_interarrival", BehaviorOps.interarrival,
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us
         |  FROM events WHERE ts IS NOT NULL),
         |g AS (SELECT event_type,
@@ -6319,9 +6043,10 @@ object SparkEntry {
         |    / (CAST(COUNT(*) AS DOUBLE) * CAST(1000000 AS DOUBLE)) AS mean_secs,
         |  quantile_cont(CAST(gap_us AS DOUBLE), 0.5) / CAST(1000000 AS DOUBLE) AS p50_secs,
         |  quantile_cont(CAST(gap_us AS DOUBLE), 0.9) / CAST(1000000 AS DOUBLE) AS p90_secs
-        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // period-over-period churn headline from one conditional aggregate
     // same per-user any-flags, same 1-row conditional reduce
-    "q_churn" ->
+    Entry("q_churn", BehaviorOps.churn,
       """WITH u AS (SELECT user_id,
         |    MAX(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN 1 ELSE 0 END) AS a,
         |    MAX(CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15 THEN 1 ELSE 0 END) AS b
@@ -6333,10 +6058,11 @@ object SparkEntry {
         |  CAST(SUM((1 - a) * b) AS BIGINT) AS n_new,
         |  CAST(SUM(a * (1 - b)) AS DOUBLE)
         |    / CAST(nullif(SUM(a), 0) AS DOUBLE) AS churn_rate
-        |FROM u""".stripMargin,
+        |FROM u""".stripMargin),
+    // Heaps'-law vocabulary-growth exponent over append-order buckets
     // same bucket spine and first-seen types as q_novelty_curve (unigrams),
     // same triangular cumulative, same quantized-log OLS closed forms
-    "q_heaps_fit" -> {
+    Entry("q_heaps_fit", TextOps.heapsFit, {
       import graft.queries.TextOps.{BmScale, NoveltyBuckets}
       def lq(m: String) =
         s"CAST(floor(ln(CAST($m AS DOUBLE)) * $BmScale.0 + 0.5) AS BIGINT)"
@@ -6366,10 +6092,11 @@ object SparkEntry {
         |SELECT n_points, $beta AS heaps_beta,
         |  ((CAST(sy AS DOUBLE) - ($beta) * CAST(sx AS DOUBLE)) / $n) / $BmScale.0 AS ln_k
         |FROM mo""".stripMargin
-    },
+    }),
+    // first-touch conversion attribution via one range-frame window
     // same us*8+code packing, same peer-inclusive RANGE frame (both
     // engines' RANGE windows include same-instant peers), same decode
-    "q_first_touch" -> {
+    Entry("q_first_touch", BehaviorOps.firstTouch, {
       import graft.queries.BehaviorOps.{AttrConvType, AttrLookbackUs, AttrTouch}
       val codeCase = AttrTouch.map { case (t, c) =>
         s"WHEN event_type = '$t' THEN us * 8 + $c"
@@ -6388,12 +6115,13 @@ object SparkEntry {
         |  FROM x WHERE event_type = '$AttrConvType')
         |SELECT channel, COUNT(*) AS n_conversions, CAST(SUM(cents) AS BIGINT) AS revenue_cents
         |FROM c GROUP BY channel ORDER BY channel""".stripMargin
-    },
+    }),
+    // CUPED with per-stratum theta over pre-period activity tiers
     // q_cuped's exact moments and closed forms, per pre-period-spend
     // stratum (zero / below-mean / above-mean, exact integer
     // cross-multiplied cut); the zero-covariate stratum's theta is NULL
     // on both sides and its adjustment coalesces to zero on both sides
-    "q_cuped_strat" -> {
+    Entry("q_cuped_strat", StatsOps.cupedStratified, {
       val arm = h32Sql("CAST(user_id AS VARCHAR)") + " % 2"
       def dbl(c: String) = s"CAST($c AS DOUBLE)"
       def hdbl(c: String) = s"CAST(CAST($c AS VARCHAR) AS DOUBLE)"
@@ -6435,17 +6163,21 @@ object SparkEntry {
         |      * (${dbl("sx_a")} / ${dbl("n_users")} - ${dbl("sx")} / ${dbl("n")}) AS adj_mean_cents,
         |  theta, var_reduction
         |FROM a JOIN gg ON a.stratum = gg.stratum ORDER BY a.stratum, arm""".stripMargin
-    },
+    }),
+    // per-day PSI drift series against the all-period baseline
     // q_psi's bins, two-sided clamp, smoothing, and quantized logs, one
     // row per day vs the all-period baseline; per-day fold in bin order
-    "q_psi_daily" -> psiDailySql,
+    Entry("q_psi_daily", StatsOps.psiDaily, psiDailySql),
+    // streaming-shaped PSI drift monitor (single windowed aggregation +
+    // static-baseline broadcast join), batch twin of q_psi_daily
     // ONE oracle, TWO plans (the q_sessionize / q_session_window
     // precedent): the streaming-shaped single-aggregation window form
     // must reproduce the batch per-day PSI row for row
-    "q_stream_psi" -> psiDailySql,
+    Entry("q_stream_psi", graft.streaming.Streams.psiWindowedBatch, psiDailySql),
+    // URL canonicalization collapse report (pre-dedup crawl normalize)
     // same generated raw URLs (shared rawUrlSql generator), same scalar
     // canonicalization battery, same three cascading group-bys
-    "q_url_canon" -> {
+    Entry("q_url_canon", CurationOps.urlCanon, {
       val raw = graft.queries.CurationOps.rawUrlSql(x => s"CAST($x AS VARCHAR)")
       s"""WITH raw AS (SELECT source, $raw AS raw_url FROM documents),
         |q AS (SELECT source, raw_url,
@@ -6473,10 +6205,11 @@ object SparkEntry {
         |  CAST(CAST(SUM(n_raw) AS BIGINT) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE) AS collapse_ratio
         |FROM g2 GROUP BY source ORDER BY source""".stripMargin
-    },
+    }),
+    // per-host politeness scheduling over the canonical URL frontier
     // same canonical URLs, same per-host ROW_NUMBER politeness rank,
     // same hash-derived crawl delay — all integer ms arithmetic
-    "q_crawl_frontier" -> {
+    Entry("q_crawl_frontier", CurationOps.crawlFrontier, {
       import graft.queries.CurationOps.{CrawlBaseDelayMs, CrawlDelaySpanMs}
       val raw = graft.queries.CurationOps.rawUrlSql(x => s"CAST($x AS VARCHAR)")
       s"""WITH raw AS (SELECT $raw AS raw_url FROM documents),
@@ -6506,11 +6239,13 @@ object SparkEntry {
         |  CAST(MAX((pos - 1) * delay_ms) AS BIGINT) AS makespan_ms,
         |  MAX(CASE WHEN pos = 1 THEN url END) AS first_url
         |FROM s GROUP BY 1, 2 ORDER BY host""".stripMargin
-    },
+    }),
+    // grid-bucketed spatial radius self-join, exact-verified (3×3
+    // literal cell fan-out; never a cross join)
     // same md5-derived integer points, the same 3×3 cell-neighborhood
     // candidate cover (BETWEEN ±1 on both cell axes), same exact int64
     // Euclidean verify — a true neighbor is never farther than one cell
-    "q_geo_neighbors" -> {
+    Entry("q_geo_neighbors", GeoOps.geoNeighbors, {
       import graft.queries.GeoOps.{GeoRadius, GeoSpan}
       val r2 = GeoRadius * GeoRadius
       s"""WITH p AS (SELECT c_custkey AS k,
@@ -6528,11 +6263,12 @@ object SparkEntry {
         |SELECT p.k AS custkey, p.x, p.y,
         |  COALESCE(n.n_neighbors, 0) AS n_neighbors, n.nn_dist_sq
         |FROM p LEFT JOIN n ON n.ka = p.k ORDER BY custkey""".stripMargin
-    },
+    }),
+    // cumulative distinct-user curve from max-merged daily HLL partials
     // the q_hll_distinct register contract, cumulated: per-day register
     // partials max-merged through each day by a window, the exact curve
     // from first-seen-day prefix sums — identical integer algebra
-    "q_hll_sliding" -> {
+    Entry("q_hll_sliding", ProfileOps.hllSliding, {
       import graft.queries.ProfileOps.{HllEstNum, HllRegisters}
       val estSql =
         s"$HllEstNum / CAST(s_present + ($HllRegisters - n_registers) * 8589934592 AS DOUBLE)"
@@ -6560,14 +6296,16 @@ object SparkEntry {
         |SELECT day, n_exact, n_registers, $estSql AS hll_est,
         |  ($estSql - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE) AS rel_err
         |FROM est JOIN ex USING (day) ORDER BY day""".stripMargin
-    },
+    }),
+    // real-coordinate (lat/lon degree) radius census: quantized-
+    // equirectangular metric, shared literal cos table, degree-scaled cells
     // same per-cell aggregation-first shape: the ×9 kernel fan-out runs
     // on the CELL table; the hotspot flag is one integer cross-multiply
     // same grid kernel in degree space: the cos table is GENERATED from
     // the same Scala Seq the Spark plan embeds, so trig rounding cannot
     // drift between engines; the midpoint-band metric is mirrored term
     // by term (both latitude offsets nonnegative -> div/// agree)
-    "q_geo_latlon" -> {
+    Entry("q_geo_latlon", GeoOps.geoLatLon, {
       import graft.queries.GeoOps.{GeoCosQ, GeoCosScale, GeoLLRadius,
         GeoLatSpanU, GeoLonSpanU}
       val lonCell = 2L * GeoLLRadius
@@ -6592,8 +6330,9 @@ object SparkEntry {
         |SELECT p.k AS custkey, p.latu, p.lonu,
         |  COALESCE(n.n_neighbors, 0) AS n_neighbors, n.nn_dist2
         |FROM p LEFT JOIN n ON n.ka = p.k ORDER BY custkey""".stripMargin
-    },
-    "q_geo_density" -> {
+    }),
+    // cell-scale density smoothing + exact-integer hotspot flags
+    Entry("q_geo_density", GeoOps.geoDensity, {
       import graft.queries.GeoOps.{GeoHotDen, GeoHotNum, GeoRadius, GeoSpan}
       val axis = GeoSpan / GeoRadius
       val nCells = axis * axis
@@ -6619,11 +6358,12 @@ object SparkEntry {
         |SELECT w.cx, w.cy, w.n, w.smoothed, w.n_window,
         |  CAST(w.smoothed * $nCells * $GeoHotDen > t.n_total * w.n_window * $GeoHotNum AS INT) AS is_hot
         |FROM w CROSS JOIN total t ORDER BY cx, cy""".stripMargin
-    },
+    }),
+    // right-to-be-forgotten cascade audit (map-only cohort predicate)
     // cohort membership is the same keyed hash on the fact's own user
     // column — no side table; the audit is one combining aggregate over
     // the (type, user, purged) pre-aggregation in both engines
-    "q_forget_user" -> {
+    Entry("q_forget_user", PrivacyOps.forgetUser, {
       import graft.queries.PrivacyOps.ForgetMod
       s"""WITH pu AS (SELECT event_type, user_id,
         |    CASE WHEN ${h32Sql("concat('forget|', CAST(user_id AS VARCHAR))")}
@@ -6638,10 +6378,11 @@ object SparkEntry {
         |  CAST(SUM(CASE WHEN purged = 1 THEN n ELSE 0 END) AS DOUBLE)
         |    / CAST(SUM(n) AS DOUBLE) AS purge_frac
         |FROM pu GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+    }),
+    // Flesch reading-ease per source (exact count sums, one final formula)
     // the same three regex counts summed exactly per source; the Flesch
     // arithmetic runs once per source row on the integer sums
-    "q_readability" -> {
+    Entry("q_readability", TextOps.readability, {
       s"""WITH d AS (SELECT source,
         |    CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS w,
         |    CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS BIGINT) AS s,
@@ -6657,11 +6398,12 @@ object SparkEntry {
         |  206.835 - 1.015 * (CAST(words AS DOUBLE) / CAST(sentences AS DOUBLE))
         |    - 84.6 * (CAST(syllables AS DOUBLE) / CAST(words AS DOUBLE)) AS flesch
         |FROM a ORDER BY source""".stripMargin
-    },
+    }),
+    // report-noisy-max DP median selection over the value-bin spine
     // same bin spine, same prefix-sum utility, same truncated-Laplace
     // replica keyed 'dpm|type|bin', same multiplied-through integer
     // score (u*1000 + noise*2Δ — no signed division anywhere)
-    "q_dp_median" -> {
+    Entry("q_dp_median", PrivacyOps.dpMedian, {
       import graft.queries.PrivacyOps.{DpBMilli, DpEpsMilli, DpHalfRange, DpUSens}
       import graft.queries.StatsOps.{LogScale, PsiBinCents, PsiBins}
       def lnqSql(e: String) =
@@ -6705,10 +6447,11 @@ object SparkEntry {
         |FROM (SELECT * FROM w WHERE rn_noisy = 1) rel
         |JOIN (SELECT * FROM w WHERE rn_true = 1) tru USING (event_type)
         |ORDER BY event_type""".stripMargin
-    },
+    }),
+    // KMV theta-sketch union/intersection estimates vs exact overlap
     // same k-min sketches (rank windows over the same h32 hashes), same
     // combined-sketch membership algebra, same two mirrored divisions
-    "q_kmv_overlap" -> {
+    Entry("q_kmv_overlap", ProfileOps.kmvOverlap, {
       import graft.queries.ProfileOps.KmvK
       val unionNum = (KmvK - 1).toDouble * 4294967296.0
       s"""WITH tu AS (SELECT DISTINCT event_type, user_id FROM events
@@ -6754,8 +6497,8 @@ object SparkEntry {
         |FROM pairs p LEFT JOIN exact x USING (type_a, type_b)
         |  JOIN est e USING (type_a, type_b)
         |ORDER BY type_a, type_b""".stripMargin
-    },
-  )
+    }),
+  ))
 
   /** The per-day PSI oracle shared by q_psi_daily (batch spine/fold form)
     * and q_stream_psi (the streaming single-aggregation window form). */

@@ -71,9 +71,10 @@ object GraphOps {
     * cluster set `spark.graft.checkpoint.reliable=true` (plus either
     * `sparkContext.setCheckpointDir` or `spark.graft.checkpoint.dir`) and
     * every round/layer state lands in the reliable checkpoint store
-    * instead; the DEFAULT path is byte-for-byte the old localCheckpoint,
-    * so local benches are untouched. See SCALE.md "executor loss and
-    * iterative state".
+    * instead — reliable with neither directory set throws rather than
+    * silently degrading to the lossy path. The DEFAULT path is
+    * byte-for-byte the old localCheckpoint, so local benches are
+    * untouched. See SCALE.md "executor loss and iterative state".
     */
   private[graft] def ckpt(df: DataFrame, eager: Boolean = true): DataFrame = {
     val ss = df.sparkSession
@@ -83,8 +84,12 @@ object GraphOps {
       if (ss.sparkContext.getCheckpointDir.isEmpty)
         ss.conf.getOption("spark.graft.checkpoint.dir")
           .foreach(ss.sparkContext.setCheckpointDir)
-      if (ss.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+      if (ss.sparkContext.getCheckpointDir.isEmpty)
+        throw new IllegalStateException(
+          "spark.graft.checkpoint.reliable=true but no checkpoint directory " +
+            "resolves: set spark.graft.checkpoint.dir or call " +
+            "sparkContext.setCheckpointDir")
+      df.checkpoint(eager)
     } else df.localCheckpoint(eager)
   }
 

@@ -108,10 +108,15 @@ class PlanShapeSpec extends SparkSpec {
         while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
         b.result()
       }
-      val missing = digests.collect { case (n, _) if !expected.contains(n) => n }
-      assert(missing.isEmpty,
-        s"entries without a committed plan digest (regenerate + review): " +
-          missing.mkString(", "))
+      // the fixture pins the entry set both ways: a new entry without a
+      // digest and a dropped or renamed entry whose row is left behind
+      // both fail until the fixture is regenerated and reviewed
+      val names = SparkEntry.registry.map(_.name).toSet
+      val noDigest = (names -- expected.keySet).toSeq.sorted
+      val noEntry = (expected.keySet -- names).toSeq.sorted
+      assert(noDigest.isEmpty && noEntry.isEmpty,
+        "registry and committed plan digests disagree (regenerate + review)" +
+          s" — no digest: ${noDigest.mkString(", ")}; no entry: ${noEntry.mkString(", ")}")
       val changed = digests.flatMap { case (n, d) =>
         expected.get(n).filter(_ != d).map(e => (n, e, d))
       }
@@ -122,8 +127,6 @@ class PlanShapeSpec extends SparkSpec {
           }.mkString("\n") +
           "\nIf intended, regenerate with SPARK_GRAFT_REGEN_DIGESTS=1 and " +
           "justify the diff in the commit message.")
-      // stale fixture rows for removed entries are tolerated (renames land
-      // as missing+stale; the missing side already fails loudly)
     }
   }
 }

@@ -618,6 +618,18 @@ class GraphOpsSpec extends SparkSpec {
     assert(prs.head <= GraphOps.PrScale * 2)
   }
 
+  test("reliable-checkpoint seam: reliable with no checkpoint directory throws") {
+    // must run before the next test: setCheckpointDir cannot be unset, so
+    // once that test resolves a directory the shared session keeps it
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try {
+      val e = intercept[IllegalStateException](GraphOps.ckpt(spark.range(3).toDF()))
+      assert(e.getMessage.contains("spark.graft.checkpoint.reliable"))
+      assert(e.getMessage.contains("spark.graft.checkpoint.dir"))
+    } finally spark.conf.unset("spark.graft.checkpoint.reliable")
+  }
+
   test("reliable-checkpoint seam: louvain output identical under checkpoint()") {
     // the r16 ckpt seam (SCALE.md "executor loss and iterative state"):
     // spark.graft.checkpoint.reliable=true routes every iterative round's
@@ -635,8 +647,12 @@ class GraphOpsSpec extends SparkSpec {
       val reliable = GraphOps.louvainFrom(rawOf(edges)).collect().toSeq
       assert(reliable === default)
       // the seam really switched: reliable checkpoint files were written
-      assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0)
+      scala.util.Using.resource(java.nio.file.Files.list(java.nio.file.Paths.get(dir))) {
+        files => assert(files.count() > 0)
+      }
     } finally {
+      // the SparkContext keeps this directory for the rest of the shared
+      // session: setCheckpointDir has no unset, only the confs are undone
       spark.conf.unset("spark.graft.checkpoint.reliable")
       spark.conf.unset("spark.graft.checkpoint.dir")
     }
