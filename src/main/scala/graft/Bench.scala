@@ -389,15 +389,11 @@ object Bench {
       java.nio.file.Files.createTempDirectory("graft-bench-etl"), etlRows)
     def runEtl(): Boolean =
       try {
+        // runEtl1 lands every OLTP table before EP2 reads it (the A3/A12
+        // boundary where the reference writes real tables), so no fact build
+        // re-runs the EP1 chain
         val oltp = graft.etl.Pipeline.runEtl1(spark,
           etlPaths.institutions, etlPaths.users, etlPaths.observationsDir)
-        // A3/A12 materialization boundary: the reference lands OLTP as real
-        // tables before EP2 reads them; without it every fact build would
-        // re-run the whole EP1 chain (3 facts × the author NLJ + priority
-        // resolution). cache() is the in-session stand-in for that handoff.
-        val hot = Seq("observations", "users", "user_institution",
-          "user_subscription", "institutions").map(oltp)
-        hot.foreach(_.cache())
         val dims = graft.olap.Dims.build(oltp)
         val facts = graft.olap.Facts.build(oltp, dims)
         // the 3 fact builds and 2 table exports are INDEPENDENT jobs — a
@@ -416,13 +412,20 @@ object Bench {
         val failures = jobs.flatMap(f =>
           scala.util.Try(scala.concurrent.Await.result(f,
             scala.concurrent.duration.Duration(10, "min"))).failed.toOption)
+        // a timed-out write still reads landed tables: cancel and await it
+        // so the cleanup below does not release them mid-job
+        if (!jobs.forall(_.isCompleted)) {
+          spark.sparkContext.cancelAllJobs()
+          jobs.foreach(f => scala.util.Try(scala.concurrent.Await.ready(f,
+            scala.concurrent.duration.Duration(1, "min"))))
+        }
         failures.headOption.foreach(e => throw e)
         true
       } catch { case e: Throwable =>
         System.err.println(s"[bench] etl_pipeline failed: ${e.getMessage}")
         false
       } finally {
-        // A10 cleanup runs even on failure, so cached staging/OLTP tables
+        // A10 cleanup runs even on failure, so landed staging/OLTP tables
         // from a failed run cannot poison the next iteration's timings
         graft.etl.Pipeline.cleanup(spark)
       }

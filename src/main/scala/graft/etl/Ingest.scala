@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Land.CkptOps
+
 /** A1/A2/A3: CSV ingestion into all-TEXT staging frames.
   *
   * Mirrors `COPY … DELIMITER ',' CSV HEADER` (02_ETL1_part1.sql:24-27,
@@ -53,8 +55,9 @@ object Ingest {
     *
     * NOTE (README.md:19): full-duplicate rows are LEGAL and must all
     * survive — position-derived ids give duplicates distinct ids, never
-    * collapsed. Callers cache the staged frame (Pipeline.scala) so every
-    * downstream branch sees one id assignment.
+    * collapsed. The projected rows are landed before any id is derived
+    * (below), so every evaluation of the returned frame — every downstream
+    * branch — sees one id assignment.
     */
   def stageObservations(spark: SparkSession, path: String): DataFrame = {
     val raw = readCsv(spark, path, Schemas.dopiCsv, encoding = "ISO-8859-1")
@@ -69,13 +72,14 @@ object Ingest {
       col("_metadata.file_path").as("_file"),
       col("_metadata.file_block_start").as("_bstart"))
       .withColumn("_mid", monotonically_increasing_id())
-      // persisted BEFORE the offset collect: both consumers (the per-split
+      // landed BEFORE the offset collect: both consumers (the per-split
       // metadata aggregate below and the final id join) must see ONE _mid
       // assignment structurally — re-deriving it in two jobs would bet
       // correctness on both planning identical splits and read order
-      // (ADVICE r4). The collect() populates the cache; the join reuses it.
-      // Pipeline.cleanup (A10) drops it with the other staging caches.
-      .persist()
+      // (ADVICE r4). The landing job assigns it once; the collect and the
+      // join both read the landed rows. Pipeline.cleanup (A10) releases it
+      // with the other tables EP1 lands.
+      .graftCheckpoint()
     val splits = projected.groupBy(col("_file"), col("_bstart"))
       .agg(min(col("_mid")).as("_mid0"), count(lit(1)).as("_n"))
       .collect()

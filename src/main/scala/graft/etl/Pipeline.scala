@@ -4,11 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Land
+import graft.Land.CkptOps
+
 /** EP1 orchestration (SURVEY.md §3): CSV → staging → validate/quarantine →
   * normalized OLTP, re-enacting 02_ETL1_part1.sql → 04_ETL1_part3.sql over
-  * the real mock CSVs (+ a DOPI-shaped CSV). Pure DataFrame transformations;
-  * materialization points are the returned frames (cached where reused,
-  * A3/A10).
+  * the real mock CSVs (+ a DOPI-shaped CSV). Where the reference writes a
+  * real table (A3/A12), the run lands the frame through [[graft.Land]],
+  * once, where it is defined, in dependency order: every returned table,
+  * and every intermediate more than one later step reads (the staging
+  * frames, the first-pass geography, users, the SCD2 versions). So no
+  * consumer re-runs an upstream step, and the reliable-checkpoint switch
+  * covers EP1 too. [[cleanup]] releases it all (A10).
   *
   * Preserved load-bearing semantics: duplicate-tolerant observation loads
   * (README.md:19 — no dedup on staging rows), manual corrections, SCD2
@@ -39,26 +46,39 @@ object Pipeline {
       .toDF("institution_id", "institution_name", "city_id")
   }
 
-  /** A10: drop all pinned staging frames (02_ETL1_part1.sql:81,
-    * 04_ETL1_part3.sql:457-458) — call after materializing the outputs. */
-  def cleanup(spark: SparkSession): Unit = spark.catalog.clearCache()
+  /** The pins taken since the latest [[runEtl1]] began; [[cleanup]]
+    * releases them. A run started before the previous run's cleanup
+    * leaves that run's tables pinned for the rest of the session. */
+  private var pins: Option[Land.CacheScope] = None
 
-  /** Run ETL1 end-to-end. Returns every OLTP table plus the quarantine
-    * tables, keyed by reference table name.
+  /** A10: drop every table EP1 landed — staging, intermediates and the
+    * returned tables alike (02_ETL1_part1.sql:81, 04_ETL1_part3.sql:457-458)
+    * — with [[graft.Land.CacheScope]]'s sweep, which takes everything
+    * pinned since the latest run began. Call once the outputs are written:
+    * the returned frames must not be read after it. */
+  def cleanup(spark: SparkSession): Unit = synchronized {
+    pins.foreach(_.releaseAll())
+    pins = None
+  }
+
+  /** Run ETL1 end-to-end, landing as it goes. Returns every OLTP table plus
+    * the quarantine tables, keyed by reference table name, each landed.
     */
   def runEtl1(spark: SparkSession, institutionsCsv: String, usersCsv: String,
               observationsCsv: String): Map[String, DataFrame] = {
+    synchronized { pins = Some(new Land.CacheScope(spark)) }
 
     // ---- part 1: institutions (02_ETL1_part1.sql) -------------------------
     val stgInst = Ingest.stageInstitutions(spark, institutionsCsv)
-    val (instValid0, invalidInstitutions) =
+    val (instValid0, invalidInstitutions0) =
       Validate.splitFirstMatch(stgInst, Validate.institutionRules)
-    val instValid = instValid0.cache() // A3 staging materialization
+    val instValid = instValid0.graftCheckpoint() // A3 staging materialization
+    val invalidInstitutions = invalidInstitutions0.graftCheckpoint()
 
     val countries1 = Normalize.buildDim(
       instValid.filter(col("country").isNotNull)
         .select(col("country").as("country_name")),
-      "country_id", Seq("country_name"))
+      "country_id", Seq("country_name")).graftCheckpoint()
 
     def countiesFrom(stg: DataFrame, existing: DataFrame,
         countries: DataFrame): DataFrame =
@@ -90,12 +110,12 @@ object Pipeline {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Schemas.allString(Seq("county_name")).add("country_id", "long").add("county_id", "long"))
       .select(col("county_id"), col("county_name"), col("country_id"))
-    val counties1 = countiesFrom(instValid, emptyCounties, countries1)
+    val counties1 = countiesFrom(instValid, emptyCounties, countries1).graftCheckpoint()
     val emptyCities = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Schemas.allString(Seq("city_name")).add("county_id", "long").add("city_id", "long"))
       .select(col("city_id"), col("city_name"), col("county_id"))
-    val cities1 = citiesFrom(instValid, counties1, emptyCities)
+    val cities1 = citiesFrom(instValid, counties1, emptyCities).graftCheckpoint()
 
     val institutions = Normalize.upsertDim(
       seedInstitutions(spark),
@@ -109,11 +129,13 @@ object Pipeline {
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("institution_name")).orderBy(col("institution_id"))))
       .filter(col("rn") === 1).drop("rn")
+      .graftCheckpoint()
 
     // ---- part 2: users + SCD2 (03_ETL1_part2.sql) -------------------------
     val stgUsers = Ingest.stageUsers(spark, usersCsv)
-    val (usersValid0, invalidUsers) = Validate.splitFirstMatch(stgUsers, Validate.userRules)
-    val usersValid = usersValid0.cache()
+    val (usersValid0, invalidUsers0) = Validate.splitFirstMatch(stgUsers, Validate.userRules)
+    val usersValid = usersValid0.graftCheckpoint()
+    val invalidUsers = invalidUsers0.graftCheckpoint()
 
     // A6 idempotent countries upsert from the USERS staging too
     // (03_ETL1_part2.sql:77-84): without it the user-side geography chain
@@ -121,9 +143,9 @@ object Pipeline {
     val countries = Normalize.upsertDim(countries1,
       usersValid.filter(col("country").isNotNull)
         .select(col("country").as("country_name")),
-      "country_id", Seq("country_name"))
-    val counties = countiesFrom(usersValid, counties1, countries)
-    val cities = citiesFrom(usersValid, counties, cities1)
+      "country_id", Seq("country_name")).graftCheckpoint()
+    val counties = countiesFrom(usersValid, counties1, countries).graftCheckpoint()
+    val cities = citiesFrom(usersValid, counties, cities1).graftCheckpoint()
 
     // DISTINCT ON (username) ORDER BY username, join_date → earliest row
     // wins; email/city complete the tiebreak so two staging rows tied on
@@ -139,8 +161,9 @@ object Pipeline {
         to_date(col("join_date"), "yyyy-MM-dd").as("join_date"))
       .withColumn("user_id",
         row_number().over(Window.orderBy(col("username"))).cast("long"))
+      .graftCheckpoint()
 
-    val subTypes = subscriptionTypes(spark)
+    val subTypes = subscriptionTypes(spark).graftCheckpoint()
 
     // SCD2 user_subscription (03_ETL1_part2.sql:136-188)
     val subVersions = Scd2.dedupVersions(
@@ -149,12 +172,13 @@ object Pipeline {
         .join(broadcast(subTypes), usersValid("subscription_type") === subTypes("type_name"))
         .select(col("user_id"), col("subscription_type_id"),
           to_date(col("subscription_start"), "yyyy-MM-dd").as("start_date")),
-      Seq("user_id", "subscription_type_id", "start_date"))
+      Seq("user_id", "subscription_type_id", "start_date")).graftCheckpoint()
     val userSubscription = Scd2.endDate(
       subVersions, "user_id", "start_date", Seq("subscription_type_id"))
       .withColumn("user_subscription_id",
         row_number().over(Window.orderBy(col("user_id"), col("start_date"),
           col("subscription_type_id"))).cast("long"))
+      .graftCheckpoint()
 
     // SCD2 user_institution (03_ETL1_part2.sql:190-246)
     val affilVersions = Scd2.dedupVersions(
@@ -164,21 +188,22 @@ object Pipeline {
           usersValid("institution") === col("institution_name"))
         .select(col("user_id"), col("institution_id"),
           to_date(col("affiliation_start"), "yyyy-MM-dd").as("start_date")),
-      Seq("user_id", "institution_id", "start_date"))
+      Seq("user_id", "institution_id", "start_date")).graftCheckpoint()
     val userInstitution = Scd2.endDate(
       affilVersions, "user_id", "start_date", Seq("institution_id"))
       .withColumn("user_institution_id",
         row_number().over(Window.orderBy(col("user_id"), col("start_date"),
           col("institution_id"))).cast("long"))
+      .graftCheckpoint()
 
     // ---- part 3: observations (04_ETL1_part3.sql) -------------------------
-    // A3: staging MATERIALIZATION, not just lineage — the quarantine split
-    // fans the staging frame into one branch per rule, and every branch must
-    // see the identical surrogate raw_data_id assignment (a recomputed
-    // global window may tie-break differently per evaluation).
-    val stgObs = Ingest.stageObservations(spark, observationsCsv).cache()
-    val (obsValid0, invalidObservations) = Validate.validateObservations(stgObs)
-    val obsValid = Observations.manualCodeFixes(obsValid0).cache()
+    // A3: the staging rows are landed inside stageObservations, before any
+    // id is derived; raw_data_id is a broadcast join over those landed rows,
+    // so every quarantine branch re-derives the same ids without a 2nd copy.
+    val stgObs = Ingest.stageObservations(spark, observationsCsv)
+    val (obsValid0, invalidObservations0) = Validate.validateObservations(stgObs)
+    val invalidObservations = invalidObservations0.graftCheckpoint()
+    val obsValid = Observations.manualCodeFixes(obsValid0).graftCheckpoint()
 
     // One row per species_name, keeping the LOWEST nbn_code (nulls last):
     // dropDuplicates keeps an arbitrary row, so a species with conflicting
@@ -195,6 +220,7 @@ object Pipeline {
           Normalize.normalizedSpecies("plant_species").as("species_name"))),
       "plant_id", Seq("species_name", "nbn_code"))
       .select(col("plant_id"), col("nbn_code"), col("species_name"))
+      .graftCheckpoint()
 
     val pollinatorSpecies = Normalize.buildDim(
       speciesDedup(obsValid.filter(col("pollinator_species").isNotNull)
@@ -202,11 +228,12 @@ object Pipeline {
           Normalize.normalizedSpecies("pollinator_species").as("species_name"))),
       "pollinator_id", Seq("species_name", "nbn_code"))
       .select(col("pollinator_id"), col("nbn_code"), col("species_name"))
+      .graftCheckpoint()
 
     val castes = Normalize.buildDim(
       obsValid.filter(col("caste").isNotNull)
         .select(trim(col("caste")).as("caste_name")),
-      "caste_id", Seq("caste_name"))
+      "caste_id", Seq("caste_name")).graftCheckpoint()
 
     val pollinatorCaste = obsValid
       .filter(col("pollinator_species").isNotNull && col("caste").isNotNull)
@@ -216,17 +243,18 @@ object Pipeline {
       .select(col("pollinator_id"), col("caste_id")).distinct()
       .withColumn("pollinator_caste_id",
         row_number().over(Window.orderBy(col("pollinator_id"), col("caste_id"))).cast("long"))
+      .graftCheckpoint()
 
     val locations = Normalize.buildDim(
       obsValid.filter(col("latitude").isNotNull && col("longitude").isNotNull)
         .select(col("latitude").cast("decimal(9,6)").as("latitude"),
           col("longitude").cast("decimal(9,6)").as("longitude")),
-      "location_id", Seq("latitude", "longitude"))
+      "location_id", Seq("latitude", "longitude")).graftCheckpoint()
 
     val habitats = Normalize.buildDim(
       obsValid.filter(col("habitat").isNotNull)
         .select(initcap(trim(col("habitat"))).as("habitat_name")),
-      "habitat_id", Seq("habitat_name"))
+      "habitat_id", Seq("habitat_name")).graftCheckpoint()
 
     val dated = Observations.assembleDate(Observations.dayClampFixes(obsValid))
     val withUsers = Observations.matchAuthors(dated, users)
@@ -234,10 +262,11 @@ object Pipeline {
     val observations = Observations.resolveForeignKeys(
       resolved, plantSpecies, pollinatorSpecies, castes, locations, habitats)
       .withColumn("observation_id", col("raw_data_id"))
+      .graftCheckpoint()
 
     // A10 cleanup (DELETE FROM stg / DROP TABLE) is the CALLER's move once
-    // the returned frames are materialized — unpersisting here would drop
-    // the caches before the lazy results evaluate. See Pipeline.cleanup.
+    // the returned tables are written — releasing here would drop them
+    // before the caller reads them. See Pipeline.cleanup.
 
     Map(
       "countries" -> countries,
@@ -254,7 +283,7 @@ object Pipeline {
       "pollinator_caste" -> pollinatorCaste,
       "locations" -> locations,
       "habitats" -> habitats,
-      "pollination_qualities" -> pollinationQualities(spark),
+      "pollination_qualities" -> pollinationQualities(spark).graftCheckpoint(),
       "observations" -> observations,
       "invalid_stg_institutions" -> invalidInstitutions,
       "invalid_stg_users" -> invalidUsers,

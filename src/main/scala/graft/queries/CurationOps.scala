@@ -805,7 +805,7 @@ object CurationOps {
     * aggregate, no window.
     */
   def goldenRecord(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.GraphOps.releasingCaches(spark) { scope =>
+    graft.Land.releasingCaches(spark) { scope =>
       matchLabeled(spark, dir, scope).groupBy(col("comp"))
         .agg(count(lit(1)).as("n_variants"), sum(col("m")).as("n_rows"),
           min(struct((-col("m")).as("negm"), col("name"))).as("g"))
@@ -818,7 +818,7 @@ object CurationOps {
     * (name, m, ws, comp) — factored so [[entityVerify]] consumes the
     * SAME candidate graph and loop. */
   private def matchLabeled(spark: SparkSession, dir: String,
-      scope: graft.queries.GraphOps.CacheScope): DataFrame = {
+      scope: graft.Land.CacheScope): DataFrame = {
     val names = Tables.part(spark, dir)
       .select(lower(col("p_name")).as("name"))
       .groupBy(col("name"))
@@ -877,7 +877,7 @@ object CurationOps {
     * no explode), one combining aggregate to the entity report.
     */
   def entityVerify(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.GraphOps.releasingCaches(spark) { scope =>
+    graft.Land.releasingCaches(spark) { scope =>
       val labeled = matchLabeled(spark, dir, scope)
       val canon = labeled.groupBy(col("comp"))
         .agg(min(struct((-col("m")).as("negm"), col("name"), col("ws"))).as("g"))

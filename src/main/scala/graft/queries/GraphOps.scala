@@ -3,13 +3,14 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Land.{CacheScope, CkptOps, releasingCaches}
 import graft.Tables
 
 /** Iterative graph analytics over relationship graphs derived from the
   * fact tables — the one dataflow shape (bulk-synchronous iteration) the
-  * rest of the query surface doesn't exercise. Connected components
-  * already lives in TextOps (dedup_cc, star-edge contraction); this file
-  * holds the rank-propagation family.
+  * rest of the query surface doesn't exercise. TextOps builds dedup_cc's
+  * star edges, but its connected-components loop is the shared
+  * [[minLabelComponents]] here, next to the rank-propagation family.
   *
   * Everything is 64-bit integer fixed-point: doubles under iterated
   * divide-and-sum would accumulate engine-specific rounding (summation
@@ -20,84 +21,6 @@ import graft.Tables
   * ranking-relevant signal and identical on both sides.
   */
 object GraphOps {
-
-  /** Tracks the DataFrames an entry persists so they can be released
-    * through `df.unpersist()` — which also drops the CacheManager's
-    * plan-keyed entry. Releasing at the RDD level alone leaves that entry
-    * stale: a later identical plan (e.g. the next graph entry's coEdges)
-    * would silently reuse a dead InMemoryRelation that recomputes per
-    * subtree instead of caching.
-    */
-  private[graft] final class CacheScope {
-    private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { tracked += df; df.persist() }
-    def releaseAll(): Unit = tracked.foreach(_.unpersist(blocking = false))
-  }
-
-  /** The `Pipeline.cleanup` pattern for the iterative entries (VERDICT r8
-    * #5): materialize the BOUNDED result (top-k / one-row census — the only
-    * collects in this file, ≤ 2·[[HitsTopK]] rows by construction), then
-    * release everything the entry pinned — scope-tracked `.persist()`s via
-    * `df.unpersist` (so the CacheManager entry goes too) AND the loop
-    * `localCheckpoint`s via an RDD-snapshot sweep — before handing back a
-    * local frame, so no cached topology outlives the entry in a long-lived
-    * session. The since-snapshot sweep is correct because entries execute
-    * one at a time (Verify's loop, bench legs, forked sequential tests); a
-    * concurrent session sharing the SparkContext would need explicit
-    * handles for the checkpoint pins as well.
-    */
-  private[graft] def releasingCaches(spark: SparkSession)(build: CacheScope => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val scope = new CacheScope
-    try {
-      val result = build(scope)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      spark.createDataFrame(rows, result.schema)
-    } finally {
-      scope.releaseAll()
-      // localCheckpoint pins live at the RDD level, not in the
-      // CacheManager — sweep whatever the scope release didn't cover
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = false)
-      }
-    }
-  }
-
-  /** Lineage-truncation seam for the iterative hot paths (VERDICT r15 #4,
-    * guide §5): `localCheckpoint` is the right local-mode trade — no HDFS
-    * round-trip per round — but it is LOSSY at cluster scale: an executor
-    * loss makes truncated lineage unrecoverable mid-query. On a real
-    * cluster set `spark.graft.checkpoint.reliable=true` (plus either
-    * `sparkContext.setCheckpointDir` or `spark.graft.checkpoint.dir`) and
-    * every round/layer state lands in the reliable checkpoint store
-    * instead — reliable with neither directory set throws rather than
-    * silently degrading to the lossy path. The DEFAULT path is
-    * byte-for-byte the old localCheckpoint, so local benches are
-    * untouched. See SCALE.md "executor loss and iterative state".
-    */
-  private[graft] def ckpt(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val ss = df.sparkSession
-    val reliable =
-      ss.conf.getOption("spark.graft.checkpoint.reliable").contains("true")
-    if (reliable) {
-      if (ss.sparkContext.getCheckpointDir.isEmpty)
-        ss.conf.getOption("spark.graft.checkpoint.dir")
-          .foreach(ss.sparkContext.setCheckpointDir)
-      if (ss.sparkContext.getCheckpointDir.isEmpty)
-        throw new IllegalStateException(
-          "spark.graft.checkpoint.reliable=true but no checkpoint directory " +
-            "resolves: set spark.graft.checkpoint.dir or call " +
-            "sparkContext.setCheckpointDir")
-      df.checkpoint(eager)
-    } else df.localCheckpoint(eager)
-  }
-
-  /** Postfix spelling of [[ckpt]] so call sites keep the
-    * `.graftCheckpoint(...)` shape: `df.graftCheckpoint()`. */
-  private[graft] implicit class CkptOps(private val df: DataFrame) {
-    def graftCheckpoint(eager: Boolean = true): DataFrame = ckpt(df, eager)
-  }
 
   /** Fixed-point scale: rank 1.0 == 1e6 units. */
   private[graft] val PrScale = 1000000L
@@ -131,23 +54,9 @@ object GraphOps {
     * any node ≤ N·[[PrScale]] ≈ 1.7e10 at sf0.1; ×[[PrDampNum]] ≈ 1.4e16,
     * three orders of magnitude inside int64.
     */
-  def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-    // both directions from ONE pass over the distinct pairs: a
-    // union-of-two-selects re-runs the lineitem⋈orders+distinct subtree
-    // per branch (measured in the cached plan), an explode doubles
-    // map-side
-    val edges = pairs
-      .select(explode(array(
-        struct(col("c").as("src"), col("s").as("dst")),
-        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+  def pagerank(spark: SparkSession, dir: String): DataFrame =
     releasingCaches(spark) { scope =>
-      prRanks(edges, scope)
+      prRanks(tradeEdges(spark, dir), scope)
         .select(
           expr("node div 2").as("entity_key"),
           when(col("node") % 2 === 1, lit("supplier")).otherwise(lit("customer")).as("kind"),
@@ -155,15 +64,34 @@ object GraphOps {
         .orderBy(col("pr").desc, col("kind"), col("entity_key"))
         .limit(20)
     }
-  }
 
-  /** The [[PrIters]]-step fixed-point iteration over an arbitrary directed
-    * `(src, dst)` edge list — factored out so the spec can pin ranks on a
-    * hand-computed graph. Nodes are DEFINED as the distinct sources (every
-    * node of a symmetric graph is one), so callers must feed symmetric
-    * edge lists or accept that pure sinks receive no row. Returns
-    * `(node, deg, pr)`.
+  /** The distinct (customer `c`, supplier `s`) pairs that ever traded
+    * (lineitem⋈orders), lazily; `c` and `s` are node ids computed from
+    * `o_custkey` and `l_suppkey` (the keys themselves by default). */
+  private def tradePairs(spark: SparkSession, dir: String,
+      c: Column = col("o_custkey"), s: Column = col("l_suppkey")): DataFrame =
+    Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
+      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(c.as("c"), s.as("s"))
+      .distinct()
+
+  /** The symmetric customer–supplier trade graph, lazily: one edge each
+    * way per [[tradePairs]] pair, customers at even ids 2c, suppliers at
+    * odd 2s+1 — the edge list of [[pagerank]], [[ppr]] and the BFS family
+    * ([[bfsReach]], [[harmonic]], [[betweenness]], [[anf]]), which pin it
+    * in their [[CacheScope]]. Both directions come from ONE pass over the
+    * distinct pairs: a union-of-two-selects re-runs the
+    * lineitem⋈orders+distinct subtree per branch (measured in the cached
+    * plan), an explode doubles map-side.
     */
+  private def tradeEdges(spark: SparkSession, dir: String): DataFrame =
+    tradePairs(spark, dir, col("o_custkey") * 2, col("l_suppkey") * 2 + 1)
+      .select(explode(array(
+        struct(col("c").as("src"), col("s").as("dst")),
+        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
   /** Degree distribution of the trade graph, split by node kind — the
     * FIRST statistic a graph pipeline reads, because it prices
     * everything else: wedge counts (triangles), per-iteration join skew
@@ -176,11 +104,7 @@ object GraphOps {
     * combine, output bounded by |distinct degrees|.
     */
   def degreeProfile(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .distinct()
+    val pairs = tradePairs(spark, dir)
     def hist(df: DataFrame, kind: String): DataFrame =
       df.groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
@@ -485,11 +409,7 @@ object GraphOps {
     * aggregate.
     */
   def tailIndex(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .distinct()
+    val pairs = tradePairs(spark, dir)
     def lnq(c: Column): Column =
       floor(log(c.cast(org.apache.spark.sql.types.DoubleType))
         * lit(AaScale.toDouble) + lit(0.5))
@@ -535,12 +455,7 @@ object GraphOps {
     * plan.
     */
   def hits(spark: SparkSession, dir: String): DataFrame = releasingCaches(spark) { scope =>
-    val edges = scope.cache(
-      Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-        .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct())
+    val edges = scope.cache(tradePairs(spark, dir))
     var hubs = edges.select(col("c")).distinct().withColumn("h", lit(HitsScale))
     var auths = edges.select(col("s")).distinct().withColumn("a", lit(HitsScale))
     for (_ <- 1 to HitsIters) {
@@ -570,8 +485,15 @@ object GraphOps {
       .orderBy(col("kind"), col("score").desc, col("entity_key"))
   }
 
+  /** The [[PrIters]]-step fixed-point iteration over an arbitrary directed
+    * `(src, dst)` edge list — factored out so the spec can pin ranks on a
+    * hand-computed graph. Nodes are DEFINED as the distinct sources (every
+    * node of a symmetric graph is one), so callers must feed symmetric
+    * edge lists or accept that pure sinks receive no row. Returns
+    * `(node, deg, pr)`.
+    */
   private[graft] def prRanks(edges: DataFrame,
-      scope: CacheScope = new CacheScope): DataFrame = {
+      scope: CacheScope = new CacheScope(SparkSession.active)): DataFrame = {
     val e = scope.cache(edges)
     val deg = scope.cache(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
@@ -659,36 +581,40 @@ object GraphOps {
     * which collapses geometric-diameter graphs (a spatial radius blob, a
     * long co-purchase chain) to O(log diameter) rounds where plain
     * propagation blows any fixed budget (the Shiloach–Vishkin /
-    * hash-to-min discipline). One node-scale join + combining groupBy +
-    * node-scale self-join per round; `localCheckpoint` lineage hygiene;
-    * callers own cache release. Returns (doc_id, comp) over every node
-    * appearing as a source (= every node, by symmetry).
+    * hash-to-min discipline). Per round: one node-scale join + combining
+    * groupBy, plus a node-scale self-join while labels still move;
+    * checkpointed lineage hygiene; callers own cache release. `nodes` (one
+    * `doc_id` column) seeds the label set when given — nodes without an
+    * edge stay singletons; by default the nodes are those appearing as a
+    * source (= every node, by symmetry). Returns (doc_id, comp), comp the
+    * component's minimum node id, checkpoint-backed.
     */
-  private[graft] def minLabelComponents(edges: DataFrame): DataFrame = {
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+  private[graft] def minLabelComponents(edges: DataFrame,
+      nodes: Option[DataFrame] = None): DataFrame = {
+    var labels = nodes.getOrElse(edges.select(col("src").as("doc_id")).distinct())
       .withColumn("comp", col("doc_id"))
       .graftCheckpoint()
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 32) {
-      val prop = TextOps.ccRound(labels, edges)
-      // path-halving: every comp value IS a labeled node id (labels seed
-      // as own-id and only ever take neighbor label values), so the inner
-      // self-join is total. (r15 note: fusing TWO propagate+halve steps
-      // per materialization was tried and REVERTED — without a
-      // checkpoint between them the nested lazy round re-executes the
-      // inner subtree per reference, the hits 2^rounds blowup; measured
-      // dbscan 7 → 16 s, modularity 9.5 → 14 s at sf0.1.)
-      val next = prop
-        .join(prop.select(col("doc_id").as("comp"), col("comp").as("comp2")),
-          Seq("comp"))
-        .select(col("doc_id"), col("comp2").as("comp"),
-          (col("chg") + (col("comp2") < col("comp")).cast(
-            org.apache.spark.sql.types.LongType)).as("chg"))
-        .graftCheckpoint(eager = false)
+      // propagation lands (lazily) by itself: its changed-sum job both
+      // materializes it and decides convergence, one job per round (r15:
+      // fusing two propagate+halve steps into one landing re-ran the inner
+      // round per reference, 2^rounds — dbscan 7 → 16 s, modularity 9.5 → 14 s)
+      val prop = TextOps.ccRound(labels, edges).graftCheckpoint(eager = false)
       // coalesce: an EMPTY edge set (no matches at small SF) sums to NULL
-      changed = next.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
-      labels = next.select(col("doc_id"), col("comp"))
+      changed = prop.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
+      labels = prop.select(col("doc_id"), col("comp"))
+      // path-halving over the landed propagation, only while it moved a
+      // label: a converged labeling is its own halving, so shallow hooked
+      // stars skip the self-join on their last round. Total self-join: every
+      // comp IS a labeled node id. The next round's job materializes it.
+      if (changed > 0)
+        labels = labels
+          .join(labels.select(col("doc_id").as("comp"), col("comp").as("comp2")),
+            Seq("comp"))
+          .select(col("doc_id"), col("comp2").as("comp"))
+          .graftCheckpoint(eager = false)
       rounds += 1
     }
     require(changed == 0,
@@ -1224,7 +1150,7 @@ object GraphOps {
     * the edge list grows with the GRAPH, not a bounded domain, so a
     * static hint is a raw OOM on a web-scale graph (ADVICE r10). The
     * plan therefore switches on the COUNTED edge cardinality — the list
-    * is localCheckpoint()ed every round, so the count is already paid —
+    * is checkpointed every round, so the count is already paid —
     * and above the ceiling the probe is a partitioned hash semi-join;
     * the enumeration shape is identical either way
     * (GraphOpsSpec pins both sides of the switch). */
@@ -1394,25 +1320,8 @@ object GraphOps {
     * web-scale graph swaps the broadcasts for hash joins pre-partitioned
     * on node id (the prRanks note).
     */
-  /** The symmetric customer–supplier bipartite edge list (customers at
-    * even ids 2c, suppliers at odd 2s+1), cached into `scope` — shared
-    * by [[bfsReach]] and [[harmonic]]. */
-  private def bipartiteEdges(spark: SparkSession, dir: String,
-      scope: CacheScope): DataFrame = {
-    val pairs = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-    scope.cache(pairs
-      .select(explode(array(
-        struct(col("c").as("src"), col("s").as("dst")),
-        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-  }
-
   def bfsReach(spark: SparkSession, dir: String): DataFrame = releasingCaches(spark) { scope =>
-    val edges = bipartiteEdges(spark, dir, scope)
+    val edges = scope.cache(tradeEdges(spark, dir))
     val seeds = edges
       .filter(col("src") % 2 === 0 && expr(s"(src div 2) % $BfsSeedMod") === 1)
       .select(col("src").as("node")).distinct()
@@ -1471,7 +1380,7 @@ object GraphOps {
     * per source.
     */
   def harmonic(spark: SparkSession, dir: String): DataFrame = releasingCaches(spark) { scope =>
-    val edges = bipartiteEdges(spark, dir, scope)
+    val edges = scope.cache(tradeEdges(spark, dir))
     val seeds = edges
       .filter(col("src") % 2 === 0 && expr(s"(src div 2) % $HarmonicSeedMod") === 1)
       .select(col("src").as("s")).distinct()
@@ -1545,7 +1454,7 @@ object GraphOps {
   def betweenness(spark: SparkSession, dir: String): DataFrame =
     releasingCaches(spark) { scope =>
       import org.apache.spark.sql.types.DoubleType
-      val edges = bipartiteEdges(spark, dir, scope)
+      val edges = scope.cache(tradeEdges(spark, dir))
       val seeds = edges
         .filter(col("src") % 2 === 0 && expr(s"(src div 2) % $HarmonicSeedMod") === 1)
         .select(col("src").as("s")).distinct()
@@ -1749,7 +1658,7 @@ object GraphOps {
   def anf(spark: SparkSession, dir: String): DataFrame =
     releasingCaches(spark) { scope =>
       import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-      val edges = bipartiteEdges(spark, dir, scope)
+      val edges = scope.cache(tradeEdges(spark, dir))
       val ms = (0 until AnfRegisters).map(i => s"m$i")
       val denom = ms.map(m =>
         expr(s"shiftleft(CAST(1 AS BIGINT), CAST(33 - $m AS INT))"))
@@ -1790,19 +1699,9 @@ object GraphOps {
     * scale). Non-seed mass decays to pure inflow, so unreached nodes
     * stay at exactly 0 — bit-identical in the oracle's unrolled replay.
     */
-  def ppr(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-    val edges = pairs
-      .select(explode(array(
-        struct(col("c").as("src"), col("s").as("dst")),
-        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+  def ppr(spark: SparkSession, dir: String): DataFrame =
     releasingCaches(spark) { scope =>
-      pprRanks(edges, scope)
+      pprRanks(tradeEdges(spark, dir), scope)
         .select(
           expr("node div 2").as("entity_key"),
           when(col("node") % 2 === 1, lit("supplier")).otherwise(lit("customer")).as("kind"),
@@ -1810,7 +1709,6 @@ object GraphOps {
         .orderBy(col("ppr").desc, col("kind"), col("entity_key"))
         .limit(20)
     }
-  }
 
   /** The seeded fixed-point iteration over an arbitrary symmetric
     * `(src, dst)` edge list — factored so the spec can pin ranks on a
@@ -1818,7 +1716,7 @@ object GraphOps {
     * (odd ∧ (node−1)/2 ≡ 0 mod [[PprSeedMod]]), evaluated on the degree
     * frame, so callers control it through the node numbering. */
   private[graft] def pprRanks(edges: DataFrame,
-      scope: CacheScope = new CacheScope): DataFrame = {
+      scope: CacheScope = new CacheScope(SparkSession.active)): DataFrame = {
     val e = scope.cache(edges)
     val deg = scope.cache(
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.queries.GraphOps.CkptOps
+import graft.Land.CkptOps
 
 /** Data-profiling operators — the catalog-building pass a pipeline runs
   * over an unfamiliar 100 TB corpus before it writes a single query:
@@ -594,7 +594,7 @@ object ProfileOps {
     // the corpus is scanned once, released after the |types|²-row result
     // materializes into its checkpoint (the hammingClustersFrom pattern)
     val tu = kmvTu(spark, dir).persist()
-    val out = kmvOverlapFrom(tu).localCheckpoint()
+    val out = kmvOverlapFrom(tu).graftCheckpoint()
     tu.unpersist(blocking = false)
     out.orderBy(col("type_a"), col("type_b"))
   }
@@ -606,7 +606,7 @@ object ProfileOps {
       .select(col("event_type"), col("user_id")).distinct()
 
   /** Pre-checkpoint shape for plan audits (ADVICE r14): [[kmvOverlap]]'s
-    * final frame digests as an RDDScan because the localCheckpoint (which
+    * final frame digests as an RDDScan because the checkpoint (which
     * exists to release the persisted `tu`) truncates the plan, so the
     * committed digest in `plan_digests.json` cannot see the documented
     * scale shape. The WindowGroupLimit top-k and broadcast pair-frame

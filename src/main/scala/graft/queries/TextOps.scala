@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Land.CkptOps
 import graft.Tables
 
 /** LLM-training-data pipeline operators over the `documents` table:
@@ -165,7 +166,7 @@ object TextOps {
     * O(configs) rows.
     */
   def lshTuning(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.GraphOps.releasingCaches(spark) { scope =>
+    graft.Land.releasingCaches(spark) { scope =>
       val sigs = scope.cache(minhashSigs(spark, dir))
       val perConfig = LshConfigs.map { case (b, r) =>
         val bandStructs = (0 until b).map { j =>
@@ -248,16 +249,17 @@ object TextOps {
     * Graph construction stays linear: per (band_id, band_key) bucket the
     * edges are the STAR (bucket-min → member), not the clique — same
     * components, O(bucket) edges instead of O(bucket²). Components are
-    * found by iterative min-label propagation: each round every node takes
+    * found by [[GraphOps.minLabelComponents]]: each round every node takes
     * the min label over itself and its neighbors (one hash join + one
-    * map-side-combining groupBy per round), converging in O(graph diameter)
-    * rounds — the hash-to-min family of MapReduce CC algorithms. The
-    * driver-side loop is bounded control flow (diameter of a near-dup
-    * chain, handfuls), not data flow: each round's changed-sum moves one
-    * long to the driver, riding the round's own materialization job.
-    * `localCheckpoint` truncates lineage so the plan does
-    * not deepen with iteration count — the standard Spark iterative-algo
-    * hygiene (same reason GraphX/ALS checkpoint).
+    * map-side-combining groupBy per round) and, while labels still move,
+    * its label's label (path-halving): O(log graph diameter) rounds — the
+    * hash-to-min family of MapReduce CC algorithms. The driver-side loop
+    * is bounded control flow (diameter of a near-dup chain, handfuls),
+    * not data flow: each round's changed-sum moves one long to the
+    * driver, riding the round's own materialization job. The checkpoint
+    * seam truncates lineage so the plan does not deepen with iteration
+    * count — the standard Spark iterative-algo hygiene (same reason
+    * GraphX/ALS checkpoint).
     *
     * At 100 TB: rounds are each one shuffle of (node, label) pairs; the
     * edge table is bucket-star-bounded (≤ corpus × bands rows). Diameter of
@@ -290,7 +292,7 @@ object TextOps {
     * driver's changed-count rides the round's materialization instead of a
     * separate next⋈previous join+count job (VERDICT r6 #6 — per-round job
     * count halved). Factored out so PlanGuard-style specs can audit the
-    * per-round plan the iterative loop executes (the loop's localCheckpoint
+    * per-round plan the iterative loop executes (the loop's checkpoint
     * stubs hide it from the usual whole-query plan walk).
     */
   private[graft] def ccRound(labels: DataFrame, edges: DataFrame): DataFrame = {
@@ -319,23 +321,8 @@ object TextOps {
     // enumerate doc ids (equivalent on this corpus: every doc tokenizes
     // non-empty, so every doc has bands; a doc without bands is an
     // isolated singleton component either way)
-    var labels = docs.select(col("doc_id"))
-      .withColumn("comp", col("doc_id"))
-      .localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 32) {
-      // lazy localCheckpoint: the changed-sum action below both MATERIALIZES
-      // the round's checkpoint blocks and aggregates the round's own chg
-      // column — ONE job per round, where the previous form paid a second
-      // next⋈labels join+count job just to detect convergence
-      val next = ccRound(labels, edges).localCheckpoint(eager = false)
-      changed = next.agg(sum(col("chg"))).head().getLong(0)
-      labels = next
-      rounds += 1
-    }
+    val labels = GraphOps.minLabelComponents(edges, Some(docs.select(col("doc_id"))))
     edges.unpersist()
-    require(changed == 0, s"dedupCC: label propagation not converged after $rounds rounds")
     labels
       .withColumn("is_dup", (col("doc_id") =!= col("comp")).cast(IntegerType))
       .select(col("doc_id"), col("comp").as("component_id"), col("is_dup"))
@@ -463,7 +450,7 @@ object TextOps {
         when(col("alive"), col("comp")).otherwise(col("doc_id")))
       .select(col("doc_id"), col("component_id"),
         (col("doc_id") =!= col("component_id")).cast(IntegerType).as("is_dup"))
-      .localCheckpoint()
+      .graftCheckpoint()
     inBucket.unpersist(blocking = false)
     reps.unpersist(blocking = false)
     tokSets.unpersist(blocking = false)
@@ -586,7 +573,7 @@ object TextOps {
       .withColumn("is_dup",
         (col("doc_id") =!= col("component_id")).cast(IntegerType))
       .select(col("doc_id"), col("component_id"), col("is_dup"), col("is_batch"))
-      .localCheckpoint()
+      .graftCheckpoint()
     inBucket.unpersist(blocking = false)
     exLabels.unpersist(blocking = false)
     docSigs.unpersist(blocking = false)
@@ -921,7 +908,7 @@ object TextOps {
     * window sum INSIDE the bucket exchange the pair join needs anyway;
     * the pair join is a self-join on the bucket key with the Hamming
     * verify fused into its post-filter; propagation is class-scale per
-    * round with localCheckpoint lineage truncation. The signature frame
+    * round with checkpointed lineage truncation. The signature frame
     * is persisted across its consumers and released after the final
     * frame materializes into its checkpoint.
     */
@@ -975,7 +962,7 @@ object TextOps {
         when(col("alive"), col("comp")).otherwise(col("doc_id")))
       .select(col("doc_id"), col(sigCol), col("cluster_id"),
         (col("doc_id") =!= col("cluster_id")).cast(IntegerType).as("is_dup"))
-      .localCheckpoint()
+      .graftCheckpoint()
     inBucket.unpersist(blocking = false)
     reps.unpersist(blocking = false)
     sigsP.unpersist(blocking = false)
@@ -987,8 +974,8 @@ object TextOps {
     * min(self, min verified neighbor) — a near-dup CLIQUE (the dominant
     * component shape; measured 607k verified edges over 5000 docs at
     * sf0.1) collapses to its min member in this ONE aggregate, so the
-    * iterative [[ccRound]] loop runs on the contracted quotient graph
-    * instead of re-joining the full edge set every round. Components
+    * [[GraphOps.minLabelComponents]] loop runs on the contracted quotient
+    * graph instead of re-joining the full edge set every round. Components
     * are preserved exactly and the component min is its own hook root,
     * so cluster ids are unchanged. The oracles mirror the same hook
     * (the raw-edge recursive walk measured 711 s at sf0.1; hooked it
@@ -1008,7 +995,7 @@ object TextOps {
       .join(nmin, Seq("doc_id"), "left")
       .select(col("doc_id"),
         least(col("doc_id"), coalesce(col("nbr_min"), col("doc_id"))).as("p"))
-      .localCheckpoint()
+      .graftCheckpoint()
     val ec = sym
       .join(lab0.select(col("doc_id").as("src"), col("p").as("pa")), Seq("src"))
       .join(lab0.select(col("doc_id").as("dst"), col("p").as("pb")), Seq("dst"))
@@ -1016,23 +1003,12 @@ object TextOps {
       .select(col("pa").as("src"), col("pb").as("dst"))
       .distinct()
       .persist()
-    var labels = lab0.select(col("p").as("doc_id")).distinct()
-      .withColumn("comp", col("doc_id"))
-      .localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 32) {
-      val next = ccRound(labels, ec).localCheckpoint(eager = false)
-      changed = next.agg(coalesce(sum(col("chg")), lit(0L))).head().getLong(0)
-      labels = next
-      rounds += 1
-    }
-    require(changed == 0,
-      s"hookedComponents: label propagation not converged after $rounds rounds")
+    val labels = GraphOps.minLabelComponents(ec,
+      Some(lab0.select(col("p").as("doc_id")).distinct()))
     val out = lab0
       .join(labels.select(col("doc_id").as("p"), col("comp")), Seq("p"))
       .select(col("doc_id"), col("comp"))
-      .localCheckpoint()
+      .graftCheckpoint()
     sym.unpersist(blocking = false)
     ec.unpersist(blocking = false)
     out
@@ -2484,7 +2460,7 @@ object TextOps {
       // ambiguously (see BpeIters note) — excluded, not silently corrupted
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(regexp_replace(col("w"), "(.)", "|$1").as("repr"), col("freq"))
-      .localCheckpoint() // corpus pass paid once; rounds are vocab-bounded
+      .graftCheckpoint() // corpus pass paid once; rounds are vocab-bounded
     var repr = vocab
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     for (it <- 1 to BpeIters) {

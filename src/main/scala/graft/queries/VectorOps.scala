@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Land.CkptOps
 import graft.Tables
 import graft.functions.VectorFunctions.{signed_proj, vec_dot}
 
@@ -678,7 +679,7 @@ object VectorOps {
     * O(extent/radius) ≈ 100 hops here, where plain neighbor propagation
     * (built for shallow near-dup stars) blows any fixed round budget —
     * via [[GraphOps.minLabelComponents]], the shared pointer-jumping
-    * loop. Every pin is swept by [[GraphOps.releasingCaches]] on exit.
+    * loop. Every pin is swept by [[graft.Land.releasingCaches]] on exit.
     */
   def dbscan(spark: SparkSession, dir: String): DataFrame =
     dbscanFrom(Tables.embeddings(spark, dir))
@@ -686,7 +687,7 @@ object VectorOps {
   /** [[dbscan]] over any (vec_id, embedding) frame — factored so the spec
     * can pin clusters on a hand-drawn point set. */
   private[graft] def dbscanFrom(emb: DataFrame): DataFrame =
-    GraphOps.releasingCaches(emb.sparkSession) { scope =>
+    graft.Land.releasingCaches(emb.sparkSession) { scope =>
       val pairs = scope.cache(radiusPairsFrom(emb))
       val core = pairs.groupBy(col("vec_id")).agg(count(lit(1)).as("n_nbrs"))
         .filter(col("n_nbrs") >= DbscanMinPts).select(col("vec_id"))
@@ -1096,14 +1097,14 @@ object VectorOps {
   def graphAnn(spark: SparkSession, dir: String): DataFrame = {
     // the bucketed vector table and the edge list are INDEX ARTIFACTS —
     // a production pipeline materializes both once and serves every
-    // query from them (the minhash-band-table seam). localCheckpoint is
+    // query from them (the minhash-band-table seam). The checkpoint seam is
     // the in-session stand-in; without it the lazy plan re-reads the
     // corpus parquet 88 times (measured in the plan digest) because
     // every beam hop re-derives the index from scratch.
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), normd(col("embedding")).as("norm"),
         lshBucket(col("embedding")).as("b1"), lshBucket2(col("embedding")).as("b2"))
-      .localCheckpoint()
+      .graftCheckpoint()
     // ---- index: two hash tables melt into (tbl, bucket) keys; a pair
     // sharing both tables appears twice -> distinct before ranking
     def melted(side: String): DataFrame = e
@@ -1129,7 +1130,7 @@ object VectorOps {
     val edges = topk
       .unionByName(topk.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint()
+      .graftCheckpoint()
     // ---- search
     val probes = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
@@ -1504,11 +1505,11 @@ object VectorOps {
         col("embedding").as("c_emb"), col("norm").as("c_norm"), col("rel"))
       .withColumn("rnk", row_number().over(wPool))
       .filter(col("rnk") <= MmrPoolK)
-      .localCheckpoint() // probe-scale; 4 greedy rounds must not rescan the corpus
+      .graftCheckpoint() // probe-scale; 4 greedy rounds must not rescan the corpus
     var selected = pool.filter(col("rnk") === 1)
       .select(col("probe_id"), col("cand_id"), col("c_emb"), col("c_norm"),
         lit(1).as("mmr_rank"), col("rel"), col("rel").as("mmr_score"))
-      .localCheckpoint()
+      .graftCheckpoint()
     val wPick = Window.partitionBy(col("probe_id"))
       .orderBy(col("mmr_score").desc, col("cand_id"))
     for (k <- 2 to MmrK) {
@@ -1529,7 +1530,7 @@ object VectorOps {
         .filter(col("rnk2") === 1)
         .select(col("probe_id"), col("cand_id"), col("c_emb"), col("c_norm"),
           lit(k).as("mmr_rank"), col("rel"), col("mmr_score"))
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = selected.unionByName(pick).graftCheckpoint()
     }
     selected.select(col("probe_id"), col("mmr_rank"),
         col("cand_id").as("vec_id"), col("rel"), col("mmr_score"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * two private corpora cost the suite two full sweeps (~180 s each).
   *
   * Construction is SEQUENTIAL by design: the eagerly-executing entries end
-  * with [[graft.queries.GraphOps.releasingCaches]]'s RDD-pin sweep, which
+  * with [[graft.Land.releasingCaches]]'s RDD-pin sweep, which
   * unpersists every RDD pinned since the entry started — under concurrent
   * construction one entry's sweep unpersists a sibling's in-flight
   * localCheckpoint blocks (measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND

@@ -5,7 +5,7 @@ import java.sql.Date
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Land, SparkSpec}
 
 /** End-to-end EP1+EP2 over the REAL reference mock CSVs plus the synthesized
   * DOPI fixture (SURVEY.md §5 golden test). Asserts the load-bearing
@@ -16,26 +16,26 @@ import graft.SparkSpec
   */
 class EtlPipelineSpec extends SparkSpec {
 
-  /** Materialization boundary (suite wall-clock, VERDICT r15 #1): the OLTP
-    * tables are handful-of-rows frames on ENORMOUS lazy EP1 lineage (author
-    * NLJ + priority resolution per observation), and every assertion below
-    * used to re-plan and re-execute that whole chain per action — the
-    * EP2/grain tests alone cost 396 s + 268 s of the suite's 39-minute
-    * wall. `localCheckpoint` lands each tiny table once (the same A3/A12
-    * handoff Bench.runEtl models with cache()); all assertions are
-    * unchanged and still see exactly the pipeline's output rows. */
-  private def mat(tables: Map[String, org.apache.spark.sql.DataFrame]) =
-    tables.map { case (k, df) => k -> df.localCheckpoint() }
+  /** Landing boundary (suite wall-clock, VERDICT r15 #1): the OLTP tables
+    * are handful-of-rows frames on ENORMOUS lazy EP1 lineage (author NLJ +
+    * priority resolution per observation), and every assertion below used
+    * to re-plan and re-execute that whole chain per action — the EP2/grain
+    * tests alone cost 396 s + 268 s of the suite's 39-minute wall. runEtl1
+    * lands each table once (the A3/A12 handoff), and the EP2 tables are
+    * landed here through the same seam; all assertions are unchanged and
+    * still see exactly the pipeline's output rows. */
   private lazy val oltp: Map[String, org.apache.spark.sql.DataFrame] = {
     val dir = Files.createTempDirectory("graft-etl")
     val dopi = DopiFixture.write(dir)
-    mat(Pipeline.runEtl1(spark,
+    Pipeline.runEtl1(spark,
       "/root/reference/01_data_raw/institutions_mock.csv",
       "/root/reference/01_data_raw/users_mock.csv",
-      dopi))
+      dopi)
   }
-  private lazy val dims = mat(graft.olap.Dims.build(oltp))
-  private lazy val facts = mat(graft.olap.Facts.build(oltp, dims))
+  private lazy val dims =
+    graft.olap.Dims.build(oltp).map { case (k, df) => k -> Land.ckpt(df) }
+  private lazy val facts =
+    graft.olap.Facts.build(oltp, dims).map { case (k, df) => k -> Land.ckpt(df) }
 
   test("institutions: 10 CSV rows + seeded Unaffiliated, none quarantined") {
     assert(oltp("institutions").count() === 11)

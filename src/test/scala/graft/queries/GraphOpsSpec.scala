@@ -624,22 +624,24 @@ class GraphOpsSpec extends SparkSpec {
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {
-      val e = intercept[IllegalStateException](GraphOps.ckpt(spark.range(3).toDF()))
+      val e = intercept[IllegalStateException](graft.Land.ckpt(spark.range(3).toDF()))
       assert(e.getMessage.contains("spark.graft.checkpoint.reliable"))
       assert(e.getMessage.contains("spark.graft.checkpoint.dir"))
     } finally spark.conf.unset("spark.graft.checkpoint.reliable")
   }
 
   test("reliable-checkpoint seam: louvain output identical under checkpoint()") {
-    // the r16 ckpt seam (SCALE.md "executor loss and iterative state"):
+    // the graft.Land seam (SCALE.md "executor loss and iterative state"):
     // spark.graft.checkpoint.reliable=true routes every iterative round's
     // lineage cut through reliable checkpoint() instead of the lossy
     // localCheckpoint — results must be byte-identical, only durability
     // changes. Exercised on the bridge fixture whose exact trajectory the
-    // louvain spec above pins.
+    // louvain spec above pins, and on dedupCC's label loop at sf0.001.
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
     val default = GraphOps.louvainFrom(rawOf(edges)).collect().toSeq
+    val sf = graft.PlanCorpus.sf // sf0.001
+    val defaultCC = TextOps.dedupCC(spark, sf).collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     spark.conf.set("spark.graft.checkpoint.dir", dir)
@@ -650,6 +652,14 @@ class GraphOpsSpec extends SparkSpec {
       scala.util.Using.resource(java.nio.file.Files.list(java.nio.file.Paths.get(dir))) {
         files => assert(files.count() > 0)
       }
+      // dedupCC's label rounds land there too, not in local blocks
+      def ckptFiles(): Long =
+        scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))) {
+          _.filter(java.nio.file.Files.isRegularFile(_)).count()
+        }
+      val beforeCC = ckptFiles()
+      assert(TextOps.dedupCC(spark, sf).collect().toSeq === defaultCC)
+      assert(ckptFiles() > beforeCC)
     } finally {
       // the SparkContext keeps this directory for the rest of the shared
       // session: setCheckpointDir has no unset, only the confs are undone
