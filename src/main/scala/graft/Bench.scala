@@ -402,24 +402,13 @@ object Bench {
         // cluster this overlaps their scheduling + idle stages
         val outs = facts.values.toSeq :+ oltp("observations") :+
           oltp("invalid_stg_insect_observations")
-        val jobs = outs.map(df => scala.concurrent.Future {
-          df.write.format("noop").mode("overwrite").save()
-        }(scala.concurrent.ExecutionContext.global))
-        // await ALL siblings before surfacing any failure (ADVICE r6: a
+        // every write ends before any failure surfaces (ADVICE r6: a
         // fail-fast rethrow left sibling writes running into the next
-        // iteration), and bound the wait so one wedged job cannot hang the
-        // whole bench
-        val failures = jobs.flatMap(f =>
-          scala.util.Try(scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration(10, "min"))).failed.toOption)
-        // a timed-out write still reads landed tables: cancel and await it
-        // so the cleanup below does not release them mid-job
-        if (!jobs.forall(_.isCompleted)) {
-          spark.sparkContext.cancelAllJobs()
-          jobs.foreach(f => scala.util.Try(scala.concurrent.Await.ready(f,
-            scala.concurrent.duration.Duration(1, "min"))))
+        // iteration, and into the cleanup below); the wait is bounded so one
+        // wedged job cannot hang the whole bench
+        graft.Land.concurrently(spark, scala.concurrent.duration.Duration(10, "min")) { jobs =>
+          outs.foreach(df => jobs(df.write.format("noop").mode("overwrite").save()))
         }
-        failures.headOption.foreach(e => throw e)
         true
       } catch { case e: Throwable =>
         System.err.println(s"[bench] etl_pipeline failed: ${e.getMessage}")

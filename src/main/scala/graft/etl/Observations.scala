@@ -68,12 +68,17 @@ object Observations {
     * theta-join (authors ILIKE '%'||last_name||'%'). INNER join — rows with
     * no matching user drop, multi-user matches fan out (resolved by the
     * priority pass). Users is a tiny bounded dim → broadcast NLJ; the DOPI
-    * side streams at any scale.
+    * side streams at any scale. Both sides are lowercased once per row
+    * before the join, not once per (observation, user) pair inside the
+    * nested-loop condition.
     */
   def matchAuthors(stg: DataFrame, users: DataFrame): DataFrame =
-    stg.join(
-      broadcast(users.select(col("user_id"), col("last_name"))),
-      lower(col("authors")).contains(lower(col("last_name"))))
+    stg.withColumn("_authors_lc", lower(col("authors")))
+      .join(
+        broadcast(users.select(col("user_id"), col("last_name"),
+          lower(col("last_name")).as("_last_name_lc"))),
+        col("_authors_lc").contains(col("_last_name_lc")))
+      .drop("_authors_lc", "_last_name_lc")
 
   /** Prioritized best-match affiliation (04_ETL1_part3.sql:396-416):
     * rank every candidate (user, affiliation) per observation —

@@ -135,8 +135,13 @@ object Validate {
 
   /** Full observation validation: scrub, then the reference's two-phase
     * quarantine. Returns (valid staging, quarantine). */
-  def validateObservations(stg: DataFrame): (DataFrame, DataFrame) = {
-    val scrubbed = scrubObs(stg)
+  def validateObservations(stg: DataFrame): (DataFrame, DataFrame) =
+    splitObservations(scrubObs(stg))
+
+  /** The reference's two-phase quarantine over already-scrubbed staging
+    * (the scrub is not idempotent: " NA " scrubs to "NA", then to NULL).
+    * Returns (valid staging, quarantine). */
+  def splitObservations(scrubbed: DataFrame): (DataFrame, DataFrame) = {
     val (afterMissing, qMissing) = splitFirstMatch(scrubbed, Seq(obsMissingRule))
     val (valid, qInvalid) = splitAllMatches(afterMissing, obsValidityRules)
     val quarantineCols = Seq("raw_data_id", "error_message", "row_data").map(col)

@@ -1,7 +1,14 @@
 package graft.etl
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -21,10 +28,9 @@ class EtlFixtureSpec extends SparkSpec {
     * and over lazy EP1+EP2 lineage this spec alone cost 421 s of the
     * 39-minute suite. runEtl1 lands its own tables; the EP2 ones are landed
     * here through the same seam. */
-  private lazy val oltp: Map[String, org.apache.spark.sql.DataFrame] = {
-    val paths = EtlFixture.write(Files.createTempDirectory("graft-etlfix"), nObs)
+  private lazy val paths = EtlFixture.write(Files.createTempDirectory("graft-etlfix"), nObs)
+  private lazy val oltp: Map[String, DataFrame] =
     Pipeline.runEtl1(spark, paths.institutions, paths.users, paths.observationsDir)
-  }
   private lazy val dims =
     graft.olap.Dims.build(oltp).map { case (k, df) => k -> Land.ckpt(df) }
   private lazy val facts =
@@ -83,5 +89,68 @@ class EtlFixtureSpec extends SparkSpec {
     Pipeline.cleanup(spark)
     assert(sc.getPersistentRDDs.keySet === pinsBefore)
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** Order-independent hash of each table: row count and the sum of every
+    * row's xxhash64 (as an exact decimal, so no overflow). */
+  private def hashes(tables: Map[String, DataFrame]): Map[String, (Long, BigDecimal)] =
+    tables.map { case (name, df) =>
+      val r = df.select(xxhash64(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
+          .cast("decimal(38,0)").as("h"))
+        .agg(count(lit(1)), coalesce(sum(col("h")), lit(0)).cast("decimal(38,0)"))
+        .head()
+      name -> ((r.getLong(0), BigDecimal(r.getDecimal(1))))
+    }
+
+  test("two runEtl1 runs in one session land equal tables") {
+    val first = hashes(oltp)
+    val again = Pipeline.runEtl1(spark, paths.institutions, paths.users, paths.observationsDir)
+    try assert(hashes(again) === first)
+    finally Pipeline.cleanup(spark)
+  }
+
+  test("EP1 jobs started under a job group all carry that group") {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("ep1-run", "EP1 under one label")
+      try Pipeline.runEtl1(spark, paths.institutions, paths.users, paths.observationsDir)
+      finally {
+        sc.clearJobGroup()
+        Pipeline.cleanup(spark)
+      }
+      // one listener queue delivers in order: once the marker job, started
+      // after every EP1 job, is seen, every EP1 job start has been seen
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(1 to 1).count() finally sc.clearJobGroup()
+      val deadline = 1.minute.fromNow
+      while (!seen.asScala.exists(_._1 == "marker") && deadline.hasTimeLeft()) Thread.sleep(50)
+      val ep1 = seen.asScala.toSeq.takeWhile(_._1 != "marker")
+      assert(ep1.size > 20, s"too few EP1 jobs seen: ${ep1.size}")
+      assert(ep1.forall(_ == (("ep1-run", "EP1 under one label"))),
+        s"EP1 jobs outside the group: ${ep1.filterNot(_._1 == "ep1-run").distinct}")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a missing input fails runEtl1 with its own error; cleanup then leaves nothing behind") {
+    val sc = spark.sparkContext
+    val pinsBefore = sc.getPersistentRDDs.keySet
+    val missing = paths.observationsDir + "-missing"
+    val run = Future(Pipeline.runEtl1(spark, paths.institutions, paths.users, missing))(
+      ExecutionContext.global)
+    // a hang fails here after 5 minutes instead of stalling the suite
+    val err = intercept[AnalysisException](Await.result(run, 5.minutes))
+    assert(err.getMessage.contains("PATH_NOT_FOUND"), err.getMessage)
+    Pipeline.cleanup(spark)
+    assert(sc.getPersistentRDDs.keySet === pinsBefore)
+    val poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(Land.PoolThreadPrefix))
+    assert(poolThreads.isEmpty, s"pool threads still alive: $poolThreads")
   }
 }
