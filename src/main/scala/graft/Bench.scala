@@ -389,26 +389,11 @@ object Bench {
       java.nio.file.Files.createTempDirectory("graft-bench-etl"), etlRows)
     def runEtl(): Boolean =
       try {
-        // runEtl1 lands every OLTP table before EP2 reads it (the A3/A12
-        // boundary where the reference writes real tables), so no fact build
-        // re-runs the EP1 chain
-        val oltp = graft.etl.Pipeline.runEtl1(spark,
+        // EP1+EP2 as one DAG: every OLTP, star and fact table lands (the
+        // A3/A12 boundary where the reference writes real tables), and the
+        // run returns once all 32 have
+        graft.etl.Pipeline.run(spark,
           etlPaths.institutions, etlPaths.users, etlPaths.observationsDir)
-        val dims = graft.olap.Dims.build(oltp)
-        val facts = graft.olap.Facts.build(oltp, dims)
-        // the 3 fact builds and 2 table exports are INDEPENDENT jobs — a
-        // production driver submits them concurrently (FAIR-scheduler
-        // style) instead of serializing 5 DAG tails; on a many-core
-        // cluster this overlaps their scheduling + idle stages
-        val outs = facts.values.toSeq :+ oltp("observations") :+
-          oltp("invalid_stg_insect_observations")
-        // every write ends before any failure surfaces (ADVICE r6: a
-        // fail-fast rethrow left sibling writes running into the next
-        // iteration, and into the cleanup below); the wait is bounded so one
-        // wedged job cannot hang the whole bench
-        graft.Land.concurrently(spark, scala.concurrent.duration.Duration(10, "min")) { jobs =>
-          outs.foreach(df => jobs(df.write.format("noop").mode("overwrite").save()))
-        }
         true
       } catch { case e: Throwable =>
         System.err.println(s"[bench] etl_pipeline failed: ${e.getMessage}")

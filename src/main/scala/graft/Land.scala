@@ -1,13 +1,12 @@
 package graft
 
 import java.util.concurrent.{CancellationException, ConcurrentLinkedQueue,
-  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+  LinkedBlockingQueue, Phaser, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.jdk.CollectionConverters._
-import scala.util.{Success, Try}
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -105,9 +104,11 @@ object Land {
   /** The Spark jobs one piece of work runs at once, on a pool of
     * `defaultParallelism` threads: at most one job per core is in flight,
     * so independent single-task jobs fill the cores instead of queueing
-    * behind each other. Start jobs with [[apply]] or [[land]], chaining
+    * behind each other. Start landings with [[land]] or [[landAll]], chaining
     * dependents with `map`/`flatMap`/`for` on the returned futures — never
-    * by blocking on one inside the pool.
+    * by blocking on one inside the pool. A callback may start landings too:
+    * a task it hands the pool is counted before the callback itself ends,
+    * so [[awaitAll]] sees it.
     *
     * The threads are started by the thread that opens the pool, so each
     * inherits a copy of its Spark local properties (job group, description,
@@ -129,12 +130,18 @@ object Land {
       p.prestartAllCoreThreads()
       p
     }
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    private val started = new ConcurrentLinkedQueue[Future[Any]]
+    // one party for the waiter, plus one per task handed to the pool and
+    // not yet ended: a job's body or a callback chained on one
+    private val pending = new Phaser(1)
     private val firstFailure = new AtomicReference[Throwable]
 
-    /** Start `body` on the pool now. */
-    def apply[A](body: => A): Future[A] = track(Future(body))
+    implicit val ec: ExecutionContext = new ExecutionContext {
+      def execute(task: Runnable): Unit = {
+        pending.register()
+        pool.execute(() => try task.run() finally pending.arriveAndDeregister())
+      }
+      def reportFailure(e: Throwable): Unit = fail(e)
+    }
 
     /** Land the frame `plan` yields, once it has one. After any job of this
       * pool has failed, a landing not yet started is skipped. */
@@ -145,24 +152,28 @@ object Land {
         ckpt(df)
       })
 
+    /** Land each frame of the table map `plans` yields, once it has one. */
+    def landAll(plans: Future[Map[String, DataFrame]]): Future[Map[String, DataFrame]] =
+      track(plans).flatMap(tables => all(tables.map { case (name, df) =>
+        name -> land(Future.successful(df)) }))
+
+    /** The table map, once every one of its frames is there. */
+    def all(tables: Map[String, Future[DataFrame]]): Future[Map[String, DataFrame]] =
+      Future.traverse(tables.toSeq) { case (name, df) => df.map(name -> _) }.map(_.toMap)
+
     private[Land] def fail(e: Throwable): Unit = { firstFailure.compareAndSet(null, e); () }
 
-    private def track[A](f: Future[A]): Future[A] = {
-      // transform, not onComplete: the failure is recorded before the
-      // tracked future completes, so awaitAll never misses it
-      val t = f.transform { r => r.failed.foreach(fail); r }
-      started.add(t)
-      t
-    }
+    private def track[A](f: Future[A]): Future[A] = f.transform { r => r.failed.foreach(fail); r }
 
-    /** Wait for every started job; past `limit`, cancel the context's jobs
-      * and wait for them to end. Then stop the pool and rethrow the first
-      * failure. Every job must have been started before this is called. */
+    /** Wait until no job or callback is pending; past `limit`, cancel the
+      * context's jobs and wait for them to end. Then stop the pool and
+      * rethrow the first failure. */
     private[Land] def awaitAll(limit: Duration): Unit = {
-      val all = Future.sequence(started.asScala.toList.map(_.transform(_ => Success(()))))
-      if (Try(Await.ready(all, limit)).isFailure) {
+      val phase = pending.arrive()
+      val nanos = if (limit.isFinite) limit.toNanos else Long.MaxValue
+      if (Try(pending.awaitAdvanceInterruptibly(phase, nanos, TimeUnit.NANOSECONDS)).isFailure) {
         sc.cancelAllJobs()
-        Await.ready(all, Duration.Inf)
+        pending.awaitAdvance(phase)
       }
       pool.shutdown()
       threads.forEach(_.join(TimeUnit.MINUTES.toMillis(1)))

@@ -1,16 +1,19 @@
 package graft.etl
 
 import scala.concurrent.Future
+import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Land
+import graft.olap.{Dims, Facts}
 
-/** EP1 orchestration (SURVEY.md §3): CSV → staging → validate/quarantine →
-  * normalized OLTP, re-enacting 02_ETL1_part1.sql → 04_ETL1_part3.sql over
-  * the real mock CSVs (+ a DOPI-shaped CSV). Where the reference writes a
+/** EP1+EP2 orchestration (SURVEY.md §3): CSV → staging → validate/
+  * quarantine → normalized OLTP → star schema, re-enacting
+  * 02_ETL1_part1.sql → 08_ETL2_part2.sql over the real mock CSVs (+ a
+  * DOPI-shaped CSV). Where the reference writes a
   * real table (A3/A12), the run lands the frame through [[graft.Land]],
   * once: every returned table, and every intermediate more than one later
   * step reads (the staging frames, the scrubbed observation staging, the
@@ -19,7 +22,8 @@ import graft.Land
   * ([[graft.Land.concurrently]]): each table lands as soon as the tables
   * it reads have landed, so the institutions/users chain and the
   * observations chain run side by side until `observations` joins them.
-  * [[cleanup]] releases it all (A10).
+  * [[run]] is the one EP1+EP2 entry point: it extends the same DAG with the
+  * star dimensions and facts. [[cleanup]] releases it all (A10).
   *
   * Preserved load-bearing semantics: duplicate-tolerant observation loads
   * (README.md:19 — no dedup on staging rows), manual corrections, SCD2
@@ -50,12 +54,12 @@ object Pipeline {
       .toDF("institution_id", "institution_name", "city_id")
   }
 
-  /** The pins taken since the latest [[runEtl1]] began; [[cleanup]]
+  /** The pins taken since the latest run began; [[cleanup]]
     * releases them. A run started before the previous run's cleanup
     * leaves that run's tables pinned for the rest of the session. */
   private var pins: Option[Land.CacheScope] = None
 
-  /** A10: drop every table EP1 landed — staging, intermediates and the
+  /** A10: drop every table the run landed — staging, intermediates and the
     * returned tables alike (02_ETL1_part1.sql:81, 04_ETL1_part3.sql:457-458)
     * — with [[graft.Land.CacheScope]]'s sweep, which takes everything
     * pinned since the latest run began. Call once the outputs are written:
@@ -65,243 +69,258 @@ object Pipeline {
     pins = None
   }
 
+  /** Bound on one run's wait for its landings: past it the run cancels the
+    * context's jobs, so one wedged job cannot hang its caller. */
+  private val Limit = 10.minutes
+
   /** Run ETL1 end-to-end as a DAG of landings. Returns every OLTP table plus
     * the quarantine tables, keyed by reference table name, each landed; it
     * returns once all of them have landed, and on failure once every
     * landing it started has ended, rethrowing the first error.
     */
   def runEtl1(spark: SparkSession, institutionsCsv: String, usersCsv: String,
-              observationsCsv: String): Map[String, DataFrame] = {
-    synchronized { pins = Some(new Land.CacheScope(spark)) }
+              observationsCsv: String): Map[String, DataFrame] =
+    landed(spark)(etl1(spark, institutionsCsv, usersCsv, observationsCsv, _))
 
-    def countiesFrom(stg: DataFrame, existing: DataFrame,
-        countries: DataFrame): DataFrame =
-      Normalize.upsertDim(existing,
+  /** EP1+EP2 as one DAG of landings: [[runEtl1]]'s tables, then the 10 star
+    * dimensions ([[graft.olap.Dims]]) once every EP1 table has landed, then
+    * the 3 facts ([[graft.olap.Facts]]) once the dimensions have. Returns
+    * all 32 tables, landed, on [[runEtl1]]'s terms.
+    */
+  def run(spark: SparkSession, institutionsCsv: String, usersCsv: String,
+          observationsCsv: String): Map[String, DataFrame] =
+    landed(spark) { dag =>
+      import dag.ec
+      val oltp = etl1(spark, institutionsCsv, usersCsv, observationsCsv, dag)
+      val dims = dag.landAll(oltp.map(Dims.build))
+      val facts = dag.landAll(for (o <- oltp; d <- dims) yield Facts.build(o, d))
+      for (o <- oltp; d <- dims; f <- facts) yield o ++ d ++ f
+    }
+
+  /** Open the run's pins, start its landings and wait for all of them; once
+    * `concurrently` returns, every landing has succeeded. */
+  private def landed(spark: SparkSession)(
+      start: Land.Jobs => Future[Map[String, DataFrame]]): Map[String, DataFrame] = {
+    synchronized { pins = Some(new Land.CacheScope(spark)) }
+    Land.concurrently(spark, Limit)(start).value.get.get
+  }
+
+  /** EP1's landings, each started on `dag` once the tables it reads have
+    * landed; the returned tables once all of them have. */
+  private def etl1(spark: SparkSession, institutionsCsv: String, usersCsv: String,
+                   observationsCsv: String, dag: Land.Jobs): Future[Map[String, DataFrame]] = {
+    import dag.ec
+
+    // The institutions pass builds each geography dim; the users pass
+    // upserts its own rows into the first pass's dim.
+    def dimFrom(existing: Option[DataFrame], rows: DataFrame,
+        idCol: String, keyCols: Seq[String]): DataFrame =
+      existing.fold(Normalize.buildDim(rows, idCol, keyCols))(
+        Normalize.upsertDim(_, rows, idCol, keyCols))
+
+    def countiesFrom(stg: DataFrame, countries: DataFrame, existing: Option[DataFrame]) =
+      dimFrom(existing,
         stg.join(countries, stg("country") === countries("country_name"))
           .filter(col("county").isNotNull)
           .select(col("county").as("county_name"), col("country_id")),
         "county_id", Seq("county_name", "country_id"))
 
-    def citiesFrom(stg: DataFrame, counties: DataFrame, existing: DataFrame): DataFrame =
-      Normalize.upsertDim(existing,
+    def citiesFrom(stg: DataFrame, counties: DataFrame, existing: Option[DataFrame]) =
+      dimFrom(existing,
         stg.join(counties, stg("county") === counties("county_name"))
           .filter(col("city").isNotNull)
           .select(col("city").as("city_name"), col("county_id")),
         "city_id", Seq("city_name", "county_id"))
 
+    // One row per `key`, the first in `order`. DISTINCT ON keeps an
+    // arbitrary row where its ORDER BY ties and dropDuplicates any row; each
+    // dedup here orders by enough columns to keep the same row every run.
+    def firstPer(df: DataFrame, key: String, order: Column*): DataFrame =
+      df.withColumn("rn", row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+        .filter(col("rn") === 1).drop("rn")
+
     // Cities are keyed (city_name, county_id) but staging rows carry only a
     // name; a name existing under two counties would fan out the join and
-    // duplicate the already-deduped users/institutions. The reference's
-    // DISTINCT ON collapses that fanout keeping an arbitrary city; we keep
-    // the lowest city_id — same outcome whenever names are unique,
-    // deterministic when they are not.
-    def cityByName(cities: DataFrame): DataFrame =
-      cities.withColumn("rn", row_number().over(
-        Window.partitionBy(col("city_name")).orderBy(col("city_id"))))
-        .filter(col("rn") === 1).drop("rn")
+    // duplicate the already-deduped users/institutions. We keep the lowest
+    // city_id — the reference's outcome whenever names are unique.
+    def cityByName(cities: DataFrame): DataFrame = firstPer(cities, "city_name", col("city_id"))
 
-    // One row per species_name, keeping the LOWEST nbn_code (nulls last):
-    // dropDuplicates keeps an arbitrary row, so a species with conflicting
-    // codes could surface a different nbn_code run to run — same
-    // deterministic-keep policy as institutions/cities above.
+    // One row per species_name, keeping the LOWEST nbn_code (nulls last).
     def speciesDedup(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-        Window.partitionBy(col("species_name")).orderBy(col("nbn_code").asc_nulls_last)))
-        .filter(col("rn") === 1).drop("rn")
+      firstPer(df, "species_name", col("nbn_code").asc_nulls_last)
 
-    val emptyCounties = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Schemas.allString(Seq("county_name")).add("country_id", "long").add("county_id", "long"))
-      .select(col("county_id"), col("county_name"), col("country_id"))
-    val emptyCities = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Schemas.allString(Seq("city_name")).add("county_id", "long").add("city_id", "long"))
-      .select(col("city_id"), col("city_name"), col("county_id"))
+    // ---- part 1: institutions (02_ETL1_part1.sql) -----------------------
+    val instSplit = Future(Validate.splitFirstMatch(
+      Ingest.stageInstitutions(spark, institutionsCsv), Validate.institutionRules))
+    val instValid = dag.land(instSplit.map(_._1)) // A3 staging materialization
+    val invalidInstitutions = dag.land(instSplit.map(_._2))
 
-    val tables = Land.concurrently(spark) { dag =>
-      import dag.ec
+    val countries1 = dag.land(instValid.map(iv => Normalize.buildDim(
+      iv.filter(col("country").isNotNull).select(col("country").as("country_name")),
+      "country_id", Seq("country_name"))))
 
-      // ---- part 1: institutions (02_ETL1_part1.sql) -----------------------
-      val instSplit = Future(Validate.splitFirstMatch(
-        Ingest.stageInstitutions(spark, institutionsCsv), Validate.institutionRules))
-      val instValid = dag.land(instSplit.map(_._1)) // A3 staging materialization
-      val invalidInstitutions = dag.land(instSplit.map(_._2))
+    val counties1 = dag.land(for (iv <- instValid; c <- countries1) yield
+      countiesFrom(iv, c, None))
+    val cities1 = dag.land(for (iv <- instValid; c <- counties1) yield
+      citiesFrom(iv, c, None))
 
-      val countries1 = dag.land(instValid.map(iv => Normalize.buildDim(
-        iv.filter(col("country").isNotNull).select(col("country").as("country_name")),
-        "country_id", Seq("country_name"))))
+    // upsertDim keys on (name, city); the reference keys on name alone, so
+    // the lowest id per name is kept
+    val institutions = dag.land(for (iv <- instValid; c <- cities1) yield firstPer(
+      Normalize.upsertDim(
+        seedInstitutions(spark),
+        iv.join(cityByName(c), iv("city") === col("city_name"), "left")
+          .filter(col("institution").isNotNull)
+          .select(col("institution").as("institution_name"), col("city_id")),
+        "institution_id", Seq("institution_name", "city_id")),
+      "institution_name", col("institution_id")))
 
-      val counties1 = dag.land(for (iv <- instValid; c <- countries1) yield
-        countiesFrom(iv, emptyCounties, c))
-      val cities1 = dag.land(for (iv <- instValid; c <- counties1) yield
-        citiesFrom(iv, c, emptyCities))
+    // ---- part 2: users + SCD2 (03_ETL1_part2.sql) -----------------------
+    val usersSplit = Future(Validate.splitFirstMatch(
+      Ingest.stageUsers(spark, usersCsv), Validate.userRules))
+    val usersValid = dag.land(usersSplit.map(_._1))
+    val invalidUsers = dag.land(usersSplit.map(_._2))
 
-      val institutions = dag.land(for (iv <- instValid; c <- cities1) yield
-        Normalize.upsertDim(
-          seedInstitutions(spark),
-          iv.join(cityByName(c), iv("city") === col("city_name"), "left")
-            .filter(col("institution").isNotNull)
-            .select(col("institution").as("institution_name"), col("city_id")),
-          "institution_id", Seq("institution_name", "city_id"))
-          // upsertDim keys on (name, city); the reference keys on name alone.
-          // Deterministic keep (lowest id) — dropDuplicates picks an arbitrary
-          // row, which would make surrogate↔city assignment vary run to run.
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("institution_name")).orderBy(col("institution_id"))))
-          .filter(col("rn") === 1).drop("rn"))
+    // A6 idempotent countries upsert from the USERS staging too
+    // (03_ETL1_part2.sql:77-84): without it the user-side geography chain
+    // would depend on the institutions file having yielded valid rows
+    val countries = dag.land(for (uv <- usersValid; c1 <- countries1) yield
+      Normalize.upsertDim(c1,
+        uv.filter(col("country").isNotNull).select(col("country").as("country_name")),
+        "country_id", Seq("country_name")))
+    val counties = dag.land(for (uv <- usersValid; c1 <- counties1; c <- countries) yield
+      countiesFrom(uv, c, Some(c1)))
+    val cities = dag.land(for (uv <- usersValid; c <- counties; c1 <- cities1) yield
+      citiesFrom(uv, c, Some(c1)))
 
-      // ---- part 2: users + SCD2 (03_ETL1_part2.sql) -----------------------
-      val usersSplit = Future(Validate.splitFirstMatch(
-        Ingest.stageUsers(spark, usersCsv), Validate.userRules))
-      val usersValid = dag.land(usersSplit.map(_._1))
-      val invalidUsers = dag.land(usersSplit.map(_._2))
+    // DISTINCT ON (username) ORDER BY username, join_date → earliest row
+    // wins; email/city complete the tiebreak so two staging rows tied on
+    // (join_date, full_name) cannot flip the surviving email between runs
+    val users = dag.land(for (uv <- usersValid; c <- cities) yield
+      Normalize.nameSplit(firstPer(uv, "username",
+          col("join_date"), col("full_name"), col("email"), col("city")))
+        .join(cityByName(c), uv("city") === col("city_name"), "left")
+        .select(col("username"), col("email"), col("first_name_or_initials"),
+          col("last_name"), col("city_id"),
+          to_date(col("join_date"), "yyyy-MM-dd").as("join_date"))
+        .withColumn("user_id",
+          row_number().over(Window.orderBy(col("username"))).cast("long")))
 
-      // A6 idempotent countries upsert from the USERS staging too
-      // (03_ETL1_part2.sql:77-84): without it the user-side geography chain
-      // would depend on the institutions file having yielded valid rows
-      val countries = dag.land(for (uv <- usersValid; c1 <- countries1) yield
-        Normalize.upsertDim(c1,
-          uv.filter(col("country").isNotNull).select(col("country").as("country_name")),
-          "country_id", Seq("country_name")))
-      val counties = dag.land(for (uv <- usersValid; c1 <- counties1; c <- countries) yield
-        countiesFrom(uv, c1, c))
-      val cities = dag.land(for (uv <- usersValid; c <- counties; c1 <- cities1) yield
-        citiesFrom(uv, c, c1))
+    val subTypes = dag.land(Future(subscriptionTypes(spark)))
 
-      // DISTINCT ON (username) ORDER BY username, join_date → earliest row
-      // wins; email/city complete the tiebreak so two staging rows tied on
-      // (join_date, full_name) cannot flip the surviving email between runs
-      // (the same deterministic-keep policy as cities/institutions/species)
-      val users = dag.land(for (uv <- usersValid; c <- cities) yield {
-        val userW = Window.partitionBy(col("username"))
-          .orderBy(col("join_date"), col("full_name"), col("email"), col("city"))
-        Normalize.nameSplit(uv.withColumn("rn", row_number().over(userW)).filter(col("rn") === 1))
-          .join(cityByName(c), uv("city") === col("city_name"), "left")
-          .select(col("username"), col("email"), col("first_name_or_initials"),
-            col("last_name"), col("city_id"),
-            to_date(col("join_date"), "yyyy-MM-dd").as("join_date"))
-          .withColumn("user_id",
-            row_number().over(Window.orderBy(col("username"))).cast("long"))
-      })
+    // SCD2 user_subscription (03_ETL1_part2.sql:136-188); the version rows
+    // have this one reader, so they are not landed on their own
+    val userSubscription = dag.land(for (uv <- usersValid; u <- users; st <- subTypes) yield
+      Scd2.endDate(
+        Scd2.dedupVersions(
+          uv.join(u.select(col("user_id"), col("username")), Seq("username"))
+            .join(broadcast(st), uv("subscription_type") === st("type_name"))
+            .select(col("user_id"), col("subscription_type_id"),
+              to_date(col("subscription_start"), "yyyy-MM-dd").as("start_date")),
+          Seq("user_id", "subscription_type_id", "start_date")),
+        "user_id", "start_date", Seq("subscription_type_id"))
+        .withColumn("user_subscription_id",
+          row_number().over(Window.orderBy(col("user_id"), col("start_date"),
+            col("subscription_type_id"))).cast("long")))
 
-      val subTypes = dag.land(Future(subscriptionTypes(spark)))
+    // SCD2 user_institution (03_ETL1_part2.sql:190-246), likewise
+    val userInstitution = dag.land(for (uv <- usersValid; u <- users; inst <- institutions) yield
+      Scd2.endDate(
+        Scd2.dedupVersions(
+          uv.join(u.select(col("user_id"), col("username")), Seq("username"))
+            .join(broadcast(inst.select(col("institution_id"), col("institution_name"))),
+              uv("institution") === col("institution_name"))
+            .select(col("user_id"), col("institution_id"),
+              to_date(col("affiliation_start"), "yyyy-MM-dd").as("start_date")),
+          Seq("user_id", "institution_id", "start_date")),
+        "user_id", "start_date", Seq("institution_id"))
+        .withColumn("user_institution_id",
+          row_number().over(Window.orderBy(col("user_id"), col("start_date"),
+            col("institution_id"))).cast("long")))
 
-      // SCD2 user_subscription (03_ETL1_part2.sql:136-188); the version rows
-      // have this one reader, so they are not landed on their own
-      val userSubscription = dag.land(for (uv <- usersValid; u <- users; st <- subTypes) yield
-        Scd2.endDate(
-          Scd2.dedupVersions(
-            uv.join(u.select(col("user_id"), col("username")), Seq("username"))
-              .join(broadcast(st), uv("subscription_type") === st("type_name"))
-              .select(col("user_id"), col("subscription_type_id"),
-                to_date(col("subscription_start"), "yyyy-MM-dd").as("start_date")),
-            Seq("user_id", "subscription_type_id", "start_date")),
-          "user_id", "start_date", Seq("subscription_type_id"))
-          .withColumn("user_subscription_id",
-            row_number().over(Window.orderBy(col("user_id"), col("start_date"),
-              col("subscription_type_id"))).cast("long")))
+    // ---- part 3: observations (04_ETL1_part3.sql) -----------------------
+    // A3: the staging rows are landed inside stageObservations, before any
+    // id is derived. The reference then scrubs its staging table in place
+    // (04_ETL1_part3.sql:117-154); the scrubbed rows are landed here, so
+    // the quarantine and valid branches both read them instead of each
+    // re-deriving the ids and the 16-column scrub.
+    val scrubbed = dag.land(Future(
+      Validate.scrubObs(Ingest.stageObservations(spark, observationsCsv))))
+    val obsSplit = scrubbed.map(Validate.splitObservations)
+    val invalidObservations = dag.land(obsSplit.map(_._2))
+    val obsValid = dag.land(obsSplit.map(s => Observations.manualCodeFixes(s._1)))
 
-      // SCD2 user_institution (03_ETL1_part2.sql:190-246), likewise
-      val userInstitution = dag.land(for (uv <- usersValid; u <- users; inst <- institutions) yield
-        Scd2.endDate(
-          Scd2.dedupVersions(
-            uv.join(u.select(col("user_id"), col("username")), Seq("username"))
-              .join(broadcast(inst.select(col("institution_id"), col("institution_name"))),
-                uv("institution") === col("institution_name"))
-              .select(col("user_id"), col("institution_id"),
-                to_date(col("affiliation_start"), "yyyy-MM-dd").as("start_date")),
-            Seq("user_id", "institution_id", "start_date")),
-          "user_id", "start_date", Seq("institution_id"))
-          .withColumn("user_institution_id",
-            row_number().over(Window.orderBy(col("user_id"), col("start_date"),
-              col("institution_id"))).cast("long")))
+    val plantSpecies = dag.land(obsValid.map(ov => Normalize.buildDim(
+      speciesDedup(ov.filter(col("plant_species").isNotNull)
+        .select(upper(col("nbn_plant_code")).as("nbn_code"),
+          Normalize.normalizedSpecies("plant_species").as("species_name"))),
+      "plant_id", Seq("species_name", "nbn_code"))
+      .select(col("plant_id"), col("nbn_code"), col("species_name"))))
 
-      // ---- part 3: observations (04_ETL1_part3.sql) -----------------------
-      // A3: the staging rows are landed inside stageObservations, before any
-      // id is derived. The reference then scrubs its staging table in place
-      // (04_ETL1_part3.sql:117-154); the scrubbed rows are landed here, so
-      // the quarantine and valid branches both read them instead of each
-      // re-deriving the ids and the 16-column scrub.
-      val scrubbed = dag.land(Future(
-        Validate.scrubObs(Ingest.stageObservations(spark, observationsCsv))))
-      val obsSplit = scrubbed.map(Validate.splitObservations)
-      val invalidObservations = dag.land(obsSplit.map(_._2))
-      val obsValid = dag.land(obsSplit.map(s => Observations.manualCodeFixes(s._1)))
+    val pollinatorSpecies = dag.land(obsValid.map(ov => Normalize.buildDim(
+      speciesDedup(ov.filter(col("pollinator_species").isNotNull)
+        .select(upper(col("nbn_pollinator_code")).as("nbn_code"),
+          Normalize.normalizedSpecies("pollinator_species").as("species_name"))),
+      "pollinator_id", Seq("species_name", "nbn_code"))
+      .select(col("pollinator_id"), col("nbn_code"), col("species_name"))))
 
-      val plantSpecies = dag.land(obsValid.map(ov => Normalize.buildDim(
-        speciesDedup(ov.filter(col("plant_species").isNotNull)
-          .select(upper(col("nbn_plant_code")).as("nbn_code"),
-            Normalize.normalizedSpecies("plant_species").as("species_name"))),
-        "plant_id", Seq("species_name", "nbn_code"))
-        .select(col("plant_id"), col("nbn_code"), col("species_name"))))
+    val castes = dag.land(obsValid.map(ov => Normalize.buildDim(
+      ov.filter(col("caste").isNotNull).select(trim(col("caste")).as("caste_name")),
+      "caste_id", Seq("caste_name"))))
 
-      val pollinatorSpecies = dag.land(obsValid.map(ov => Normalize.buildDim(
-        speciesDedup(ov.filter(col("pollinator_species").isNotNull)
-          .select(upper(col("nbn_pollinator_code")).as("nbn_code"),
-            Normalize.normalizedSpecies("pollinator_species").as("species_name"))),
-        "pollinator_id", Seq("species_name", "nbn_code"))
-        .select(col("pollinator_id"), col("nbn_code"), col("species_name"))))
+    val pollinatorCaste = dag.land(
+      for (ov <- obsValid; ps <- pollinatorSpecies; ca <- castes) yield ov
+        .filter(col("pollinator_species").isNotNull && col("caste").isNotNull)
+        .join(ps, lower(ps("species_name")) === lower(col("pollinator_species")))
+        .join(broadcast(ca), ca("caste_name") === trim(col("caste")))
+        .select(col("pollinator_id"), col("caste_id")).distinct()
+        .withColumn("pollinator_caste_id",
+          row_number().over(Window.orderBy(col("pollinator_id"), col("caste_id"))).cast("long")))
 
-      val castes = dag.land(obsValid.map(ov => Normalize.buildDim(
-        ov.filter(col("caste").isNotNull).select(trim(col("caste")).as("caste_name")),
-        "caste_id", Seq("caste_name"))))
+    val locations = dag.land(obsValid.map(ov => Normalize.buildDim(
+      ov.filter(col("latitude").isNotNull && col("longitude").isNotNull)
+        .select(col("latitude").cast("decimal(9,6)").as("latitude"),
+          col("longitude").cast("decimal(9,6)").as("longitude")),
+      "location_id", Seq("latitude", "longitude"))))
 
-      val pollinatorCaste = dag.land(
-        for (ov <- obsValid; ps <- pollinatorSpecies; ca <- castes) yield ov
-          .filter(col("pollinator_species").isNotNull && col("caste").isNotNull)
-          .join(ps, lower(ps("species_name")) === lower(col("pollinator_species")))
-          .join(broadcast(ca), ca("caste_name") === trim(col("caste")))
-          .select(col("pollinator_id"), col("caste_id")).distinct()
-          .withColumn("pollinator_caste_id",
-            row_number().over(Window.orderBy(col("pollinator_id"), col("caste_id"))).cast("long")))
+    val habitats = dag.land(obsValid.map(ov => Normalize.buildDim(
+      ov.filter(col("habitat").isNotNull).select(initcap(trim(col("habitat"))).as("habitat_name")),
+      "habitat_id", Seq("habitat_name"))))
 
-      val locations = dag.land(obsValid.map(ov => Normalize.buildDim(
-        ov.filter(col("latitude").isNotNull && col("longitude").isNotNull)
-          .select(col("latitude").cast("decimal(9,6)").as("latitude"),
-            col("longitude").cast("decimal(9,6)").as("longitude")),
-        "location_id", Seq("latitude", "longitude"))))
+    val observations = dag.land(for {
+      ov <- obsValid; u <- users; ui <- userInstitution
+      ps <- plantSpecies; po <- pollinatorSpecies; ca <- castes
+      lo <- locations; ha <- habitats
+    } yield {
+      val dated = Observations.assembleDate(Observations.dayClampFixes(ov))
+      val resolved = Observations.resolveAffiliation(Observations.matchAuthors(dated, u), ui)
+      Observations.resolveForeignKeys(resolved, ps, po, ca, lo, ha)
+        .withColumn("observation_id", col("raw_data_id"))
+    })
 
-      val habitats = dag.land(obsValid.map(ov => Normalize.buildDim(
-        ov.filter(col("habitat").isNotNull).select(initcap(trim(col("habitat"))).as("habitat_name")),
-        "habitat_id", Seq("habitat_name"))))
+    // A10 cleanup (DELETE FROM stg / DROP TABLE) is the CALLER's move once
+    // the returned tables are written — releasing here would drop them
+    // before the caller reads them. See Pipeline.cleanup.
 
-      val observations = dag.land(for {
-        ov <- obsValid; u <- users; ui <- userInstitution
-        ps <- plantSpecies; po <- pollinatorSpecies; ca <- castes
-        lo <- locations; ha <- habitats
-      } yield {
-        val dated = Observations.assembleDate(Observations.dayClampFixes(ov))
-        val resolved = Observations.resolveAffiliation(Observations.matchAuthors(dated, u), ui)
-        Observations.resolveForeignKeys(resolved, ps, po, ca, lo, ha)
-          .withColumn("observation_id", col("raw_data_id"))
-      })
-
-      // A10 cleanup (DELETE FROM stg / DROP TABLE) is the CALLER's move once
-      // the returned tables are written — releasing here would drop them
-      // before the caller reads them. See Pipeline.cleanup.
-
-      Map(
-        "countries" -> countries,
-        "counties" -> counties,
-        "cities" -> cities,
-        "institutions" -> institutions,
-        "users" -> users,
-        "subscription_types" -> subTypes,
-        "user_subscription" -> userSubscription,
-        "user_institution" -> userInstitution,
-        "plant_species" -> plantSpecies,
-        "pollinator_species" -> pollinatorSpecies,
-        "castes" -> castes,
-        "pollinator_caste" -> pollinatorCaste,
-        "locations" -> locations,
-        "habitats" -> habitats,
-        "pollination_qualities" -> dag.land(Future(pollinationQualities(spark))),
-        "observations" -> observations,
-        "invalid_stg_institutions" -> invalidInstitutions,
-        "invalid_stg_users" -> invalidUsers,
-        "invalid_stg_insect_observations" -> invalidObservations)
-    }
-    // every landing has succeeded once concurrently returns
-    tables.map { case (name, landed) => name -> landed.value.get.get }
+    dag.all(Map(
+      "countries" -> countries,
+      "counties" -> counties,
+      "cities" -> cities,
+      "institutions" -> institutions,
+      "users" -> users,
+      "subscription_types" -> subTypes,
+      "user_subscription" -> userSubscription,
+      "user_institution" -> userInstitution,
+      "plant_species" -> plantSpecies,
+      "pollinator_species" -> pollinatorSpecies,
+      "castes" -> castes,
+      "pollinator_caste" -> pollinatorCaste,
+      "locations" -> locations,
+      "habitats" -> habitats,
+      "pollination_qualities" -> dag.land(Future(pollinationQualities(spark))),
+      "observations" -> observations,
+      "invalid_stg_institutions" -> invalidInstitutions,
+      "invalid_stg_users" -> invalidUsers,
+      "invalid_stg_insect_observations" -> invalidObservations))
   }
 }

@@ -1,7 +1,6 @@
 package graft.olap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** EP2 part 1 (07_ETL2_part1.sql): OLTP → OLAP star dimensions. The FDW hop
@@ -9,49 +8,37 @@ import org.apache.spark.sql.functions._
   * DataFrames; what is kept is the namespace boundary: these functions only
   * READ OLTP frames and emit independent OLAP frames.
   *
-  * `ON CONFLICT (business_key) DO NOTHING` on a batch rebuild reduces to a
-  * business-key dedup before surrogate assignment (SURVEY.md §2.A6).
-  * Surrogate keys are deterministic: row_number over the business key for
-  * bounded dims, arithmetic year*100+month for dim_date.
+  * Surrogate keys are EP1's ids. The reference's `ON CONFLICT
+  * (business_key) DO NOTHING` plus a sequence numbers each dimension in
+  * business-key order (SURVEY.md §2.A6); EP1 already assigns every OLTP id
+  * that way — `Normalize.buildDim` for species, castes, habitats and
+  * locations, one numbering order each for users, user_subscription and
+  * user_institution — over tables unique on their business key. So each
+  * `*_sk` is its row's OLTP id (dim_subscription_type takes
+  * `user_subscription_id`, dim_institution `user_institution_id`), and the
+  * bridge is `pollinator_caste` renamed; dim_date's key is arithmetic,
+  * year*100+month.
   */
 object Dims {
 
-  /** Deterministic surrogate key over the business-key order. CONTRACT: the
-    * input is a deduplicated DIMENSION (species, castes, users, locations —
-    * small by data-model construction), where a single-partition window sort
-    * is the right price for run-to-run determinism. For a high-cardinality
-    * table this pattern is wrong — use per-partition offsets
-    * (zipWithIndex-style) or carry the business key instead (SCALE.md,
-    * Windows).
-    */
-  private def sk(name: String, orderCols: Seq[String])(df: DataFrame): DataFrame =
-    df.withColumn(name,
-      row_number().over(Window.orderBy(orderCols.map(col): _*)).cast("long"))
-
   def build(oltp: Map[String, DataFrame]): Map[String, DataFrame] = {
     // 07_ETL2_part1.sql:5-11 / :13-19 — species dims keyed on species_name
-    val dimPlant = sk("plant_sk", Seq("species_name"))(
-      oltp("plant_species").dropDuplicates("species_name")
-        .select(col("plant_id").as("plant_id_bk"), col("nbn_code"), col("species_name")))
-    val dimPollinator = sk("pollinator_sk", Seq("species_name"))(
-      oltp("pollinator_species").dropDuplicates("species_name")
-        .select(col("pollinator_id").as("pollinator_id_bk"), col("nbn_code"), col("species_name")))
+    val dimPlant = oltp("plant_species").select(col("plant_id").as("plant_id_bk"),
+      col("nbn_code"), col("species_name"), col("plant_id").as("plant_sk"))
+    val dimPollinator = oltp("pollinator_species").select(
+      col("pollinator_id").as("pollinator_id_bk"), col("nbn_code"), col("species_name"),
+      col("pollinator_id").as("pollinator_sk"))
     // :21-33
-    val dimCaste = sk("caste_sk", Seq("caste_name"))(
-      oltp("castes").dropDuplicates("caste_name")
-        .select(col("caste_id").as("caste_id_bk"), col("caste_name")))
-    val dimHabitat = sk("habitat_sk", Seq("habitat_name"))(
-      oltp("habitats").dropDuplicates("habitat_name")
-        .select(col("habitat_id").as("habitat_id_bk"), col("habitat_name")))
+    val dimCaste = oltp("castes").select(col("caste_id").as("caste_id_bk"),
+      col("caste_name"), col("caste_id").as("caste_sk"))
+    val dimHabitat = oltp("habitats").select(col("habitat_id").as("habitat_id_bk"),
+      col("habitat_name"), col("habitat_id").as("habitat_sk"))
     // :35-41 — keyed on (latitude, longitude)
-    val dimLocation = sk("location_sk", Seq("latitude", "longitude"))(
-      oltp("locations").dropDuplicates("latitude", "longitude")
-        .select(col("location_id").as("location_id_bk"), col("latitude"), col("longitude")))
+    val dimLocation = oltp("locations").select(col("location_id").as("location_id_bk"),
+      col("latitude"), col("longitude"), col("location_id").as("location_sk"))
     // :43-50 — keyed on username
-    val dimUser = sk("user_sk", Seq("username"))(
-      oltp("users").dropDuplicates("username")
-        .select(col("user_id").as("user_id_bk"), col("username"),
-          col("last_name"), col("first_name_or_initials")))
+    val dimUser = oltp("users").select(col("user_id").as("user_id_bk"), col("username"),
+      col("last_name"), col("first_name_or_initials"), col("user_id").as("user_sk"))
     // :53-64 — dim_date from observation dates; arithmetic surrogate
     val dimDate = oltp("observations")
       .filter(col("observation_date").isNotNull)
@@ -67,26 +54,22 @@ object Dims {
     // :70-99 — SCD2 dim_subscription_type: OLTP is the system of record;
     // OLAP stores the versions (insert-new + end-date catch-up both reduce
     // to a passthrough on batch rebuild)
-    val dimSubscriptionType = sk("subscription_type_sk",
-      Seq("user_id_bk", "start_date", "subscription_type_id_bk"))(
-      oltp("user_subscription")
-        .join(oltp("subscription_types"), Seq("subscription_type_id"))
-        .select(col("user_id").as("user_id_bk"),
-          col("subscription_type_id").as("subscription_type_id_bk"),
-          col("type_name"), col("start_date"), col("end_date")))
+    val dimSubscriptionType = oltp("user_subscription")
+      .join(oltp("subscription_types"), Seq("subscription_type_id"))
+      .select(col("user_id").as("user_id_bk"),
+        col("subscription_type_id").as("subscription_type_id_bk"),
+        col("type_name"), col("start_date"), col("end_date"),
+        col("user_subscription_id").as("subscription_type_sk"))
     // :101-130 — SCD2 dim_institution
-    val dimInstitution = sk("institution_sk",
-      Seq("user_id_bk", "start_date", "institution_id_bk"))(
-      oltp("user_institution")
-        .join(oltp("institutions"), Seq("institution_id"))
-        .select(col("user_id").as("user_id_bk"),
-          col("institution_id").as("institution_id_bk"),
-          col("institution_name"), col("start_date"), col("end_date")))
-    // :133-145 — bridge with bk→sk remap
+    val dimInstitution = oltp("user_institution")
+      .join(oltp("institutions"), Seq("institution_id"))
+      .select(col("user_id").as("user_id_bk"),
+        col("institution_id").as("institution_id_bk"),
+        col("institution_name"), col("start_date"), col("end_date"),
+        col("user_institution_id").as("institution_sk"))
+    // :133-145 — the bk→sk remap is the identity
     val bridge = oltp("pollinator_caste")
-      .join(dimPollinator, col("pollinator_id_bk") === col("pollinator_id"))
-      .join(dimCaste, col("caste_id_bk") === col("caste_id"))
-      .select(col("pollinator_sk"), col("caste_sk")).distinct()
+      .select(col("pollinator_id").as("pollinator_sk"), col("caste_id").as("caste_sk"))
 
     Map(
       "dim_plant" -> dimPlant,

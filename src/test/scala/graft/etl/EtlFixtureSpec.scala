@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.{Land, SparkSpec}
@@ -26,15 +26,10 @@ class EtlFixtureSpec extends SparkSpec {
   /** Landed once, as in EtlPipelineSpec (suite wall-clock, VERDICT r15
     * #1): the grain-uniqueness assertions below fire several actions each,
     * and over lazy EP1+EP2 lineage this spec alone cost 421 s of the
-    * 39-minute suite. runEtl1 lands its own tables; the EP2 ones are landed
-    * here through the same seam. */
+    * 39-minute suite. Pipeline.run lands every EP1 and EP2 table. */
   private lazy val paths = EtlFixture.write(Files.createTempDirectory("graft-etlfix"), nObs)
-  private lazy val oltp: Map[String, DataFrame] =
-    Pipeline.runEtl1(spark, paths.institutions, paths.users, paths.observationsDir)
-  private lazy val dims =
-    graft.olap.Dims.build(oltp).map { case (k, df) => k -> Land.ckpt(df) }
-  private lazy val facts =
-    graft.olap.Facts.build(oltp, dims).map { case (k, df) => k -> Land.ckpt(df) }
+  private lazy val tables: Map[String, DataFrame] =
+    Pipeline.run(spark, paths.institutions, paths.users, paths.observationsDir)
 
   test("staging keeps full duplicates: 1000 rows + every 100th twice") {
     val paths = EtlFixture.write(Files.createTempDirectory("graft-etlfix2"), nObs)
@@ -44,16 +39,16 @@ class EtlFixtureSpec extends SparkSpec {
   }
 
   test("users load: one user per generated identity, none quarantined") {
-    assert(oltp("users").count() === 50) // max(50, 1000/50)
-    assert(oltp("invalid_stg_users").count() === 0)
+    assert(tables("users").count() === 50) // max(50, 1000/50)
+    assert(tables("invalid_stg_users").count() === 0)
     // multi-version users produce >1 SCD2 subscription interval
-    val versions = oltp("user_subscription").groupBy("user_id").count()
+    val versions = tables("user_subscription").groupBy("user_id").count()
     assert(versions.filter(col("count") > 1).count() > 0)
   }
 
   test("observations split: valid rows land, every quarantine class fires") {
-    assert(oltp("observations").count() > 0)
-    val q = oltp("invalid_stg_insect_observations")
+    assert(tables("observations").count() > 0)
+    val q = tables("invalid_stg_insect_observations")
     val messages = q.select("error_message").distinct()
       .collect().map(_.getString(0)).toSet
     assert(messages.contains("Missing required plant species, pollinator species, or author"))
@@ -62,13 +57,13 @@ class EtlFixtureSpec extends SparkSpec {
   }
 
   test("EP2 over the fixture: dims populated, fact grains unique") {
-    assert(dims("dim_user").count() === 50)
-    assert(dims("dim_date").count() > 0)
-    val fpa = facts("fact_pollination_activity")
+    assert(tables("dim_user").count() === 50)
+    assert(tables("dim_date").count() > 0)
+    val fpa = tables("fact_pollination_activity")
     assert(fpa.count() > 0)
     assert(fpa.count() === fpa.dropDuplicates("pollinator_sk", "caste_sk", "plant_sk",
       "habitat_sk", "location_sk", "date_sk").count())
-    val fums = facts("fact_user_monthly_summary")
+    val fums = tables("fact_user_monthly_summary")
     assert(fums.count() > 0)
     assert(fums.count() === fums.dropDuplicates("user_sk", "date_sk",
       "institution_sk", "subscription_type_sk").count())
@@ -77,18 +72,22 @@ class EtlFixtureSpec extends SparkSpec {
   test("runEtl1 lands every table it returns; cleanup releases every pin it took") {
     val paths = EtlFixture.write(Files.createTempDirectory("graft-etlfix3"), nObs)
     val sc = spark.sparkContext
-    // earlier suites in this JVM may leave cache entries; EP1 must add none
+    // earlier suites in this JVM may leave cache entries; a run must add none
     spark.catalog.clearCache()
-    val pinsBefore = sc.getPersistentRDDs.keySet
-    val tables = Pipeline.runEtl1(spark, paths.institutions, paths.users, paths.observationsDir)
-    // landed: reading a returned table scans its landed rows, never a CSV
-    val scanning = tables.collect { case (name, df)
-      if df.queryExecution.sparkPlan.exists(_.isInstanceOf[FileSourceScanExec]) => name }
-    assert(scanning.isEmpty, s"tables still planned over the input files: $scanning")
-    assert(sc.getPersistentRDDs.keySet.size > pinsBefore.size)
-    Pipeline.cleanup(spark)
-    assert(sc.getPersistentRDDs.keySet === pinsBefore)
-    assert(spark.sharedState.cacheManager.isEmpty)
+    // runEtl1 returns the 19 EP1 tables; run adds the 10 dims and 3 facts
+    Seq(19 -> Pipeline.runEtl1 _, 32 -> Pipeline.run _).foreach { case (n, runner) =>
+      val pinsBefore = sc.getPersistentRDDs.keySet
+      val tables = runner(spark, paths.institutions, paths.users, paths.observationsDir)
+      assert(tables.size === n)
+      // landed: each returned table is a scan of its landed rows
+      val unlanded = tables.collect { case (name, df)
+        if !df.queryExecution.logical.isInstanceOf[LogicalRDD] => name }
+      assert(unlanded.isEmpty, s"tables not landed: $unlanded")
+      assert(sc.getPersistentRDDs.keySet.size > pinsBefore.size)
+      Pipeline.cleanup(spark)
+      assert(sc.getPersistentRDDs.keySet === pinsBefore)
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
   }
 
   /** Order-independent hash of each table: row count and the sum of every
@@ -103,9 +102,9 @@ class EtlFixtureSpec extends SparkSpec {
     }
 
   test("two runEtl1 runs in one session land equal tables") {
-    val first = hashes(oltp)
+    val first = hashes(tables)
     val again = Pipeline.runEtl1(spark, paths.institutions, paths.users, paths.observationsDir)
-    try assert(hashes(again) === first)
+    try assert(hashes(again) === first.filter { case (name, _) => again.contains(name) })
     finally Pipeline.cleanup(spark)
   }
 

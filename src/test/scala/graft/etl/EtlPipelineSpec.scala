@@ -5,7 +5,7 @@ import java.sql.Date
 
 import org.apache.spark.sql.functions._
 
-import graft.{Land, SparkSpec}
+import graft.SparkSpec
 
 /** End-to-end EP1+EP2 over the REAL reference mock CSVs plus the synthesized
   * DOPI fixture (SURVEY.md §5 golden test). Asserts the load-bearing
@@ -20,35 +20,30 @@ class EtlPipelineSpec extends SparkSpec {
     * are handful-of-rows frames on ENORMOUS lazy EP1 lineage (author NLJ +
     * priority resolution per observation), and every assertion below used
     * to re-plan and re-execute that whole chain per action — the EP2/grain
-    * tests alone cost 396 s + 268 s of the suite's 39-minute wall. runEtl1
-    * lands each table once (the A3/A12 handoff), and the EP2 tables are
-    * landed here through the same seam; all assertions are unchanged and
-    * still see exactly the pipeline's output rows. */
-  private lazy val oltp: Map[String, org.apache.spark.sql.DataFrame] = {
+    * tests alone cost 396 s + 268 s of the suite's 39-minute wall.
+    * Pipeline.run lands each OLTP, star and fact table once (the A3/A12
+    * handoff), so the assertions see exactly the pipeline's output rows. */
+  private lazy val tables: Map[String, org.apache.spark.sql.DataFrame] = {
     val dir = Files.createTempDirectory("graft-etl")
     val dopi = DopiFixture.write(dir)
-    Pipeline.runEtl1(spark,
+    Pipeline.run(spark,
       "/root/reference/01_data_raw/institutions_mock.csv",
       "/root/reference/01_data_raw/users_mock.csv",
       dopi)
   }
-  private lazy val dims =
-    graft.olap.Dims.build(oltp).map { case (k, df) => k -> Land.ckpt(df) }
-  private lazy val facts =
-    graft.olap.Facts.build(oltp, dims).map { case (k, df) => k -> Land.ckpt(df) }
 
   test("institutions: 10 CSV rows + seeded Unaffiliated, none quarantined") {
-    assert(oltp("institutions").count() === 11)
-    assert(oltp("invalid_stg_institutions").count() === 0)
+    assert(tables("institutions").count() === 11)
+    assert(tables("invalid_stg_institutions").count() === 0)
   }
 
   test("users: 36 staging rows dedup to 31 users via DISTINCT ON earliest join_date") {
-    assert(oltp("users").count() === 31)
-    assert(oltp("invalid_stg_users").count() === 0)
+    assert(tables("users").count() === 31)
+    assert(tables("invalid_stg_users").count() === 0)
   }
 
   test("name-split: dotted names split, plain names pass through whole") {
-    val u = oltp("users").select("username", "first_name_or_initials", "last_name")
+    val u = tables("users").select("username", "first_name_or_initials", "last_name")
       .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     assert(u("chapdude63") === (("R. E.", "Chapman")))
     assert(u("sarah764") === (("Sarah A.", "Corbet")))
@@ -57,9 +52,9 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("SCD2 subscriptions: chapdude63 Free closed the day before BeeWatch+ starts") {
-    val subs = oltp("user_subscription")
-      .join(oltp("users").filter(col("username") === "chapdude63"), Seq("user_id"))
-      .join(oltp("subscription_types"), Seq("subscription_type_id"))
+    val subs = tables("user_subscription")
+      .join(tables("users").filter(col("username") === "chapdude63"), Seq("user_id"))
+      .join(tables("subscription_types"), Seq("subscription_type_id"))
       .select("type_name", "start_date", "end_date")
       .collect().map(r => (r.getString(0), r.getDate(1), r.getDate(2))).toSet
     assert(subs === Set(
@@ -68,15 +63,15 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("SCD2 affiliations: end-dating + exactly one open interval per user") {
-    val chap = oltp("user_institution")
-      .join(oltp("users").filter(col("username") === "chapdude63"), Seq("user_id"))
-      .join(oltp("institutions"), Seq("institution_id"))
+    val chap = tables("user_institution")
+      .join(tables("users").filter(col("username") === "chapdude63"), Seq("user_id"))
+      .join(tables("institutions"), Seq("institution_id"))
       .select("institution_name", "start_date", "end_date")
       .collect().map(r => (r.getString(0), r.getDate(1), r.getDate(2))).toSet
     assert(chap === Set(
       ("The Bumblebee Behaviour Bureau", Date.valueOf("2018-04-08"), Date.valueOf("2019-01-06")),
       ("Centre for Cross-Pollination Strategy and Research", Date.valueOf("2019-01-07"), null)))
-    val openPerUser = oltp("user_institution")
+    val openPerUser = tables("user_institution")
       .groupBy("user_id")
       .agg(sum(when(col("end_date").isNull, 1).otherwise(0)).as("n_open"))
       .filter(col("n_open") =!= 1).count()
@@ -84,8 +79,8 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("observation validation: 8 valid, 7 quarantine entries (one row twice)") {
-    assert(oltp("observations").count() === DopiFixture.expectedObservations)
-    val q = oltp("invalid_stg_insect_observations")
+    assert(tables("observations").count() === DopiFixture.expectedObservations)
+    val q = tables("invalid_stg_insect_observations")
     val entries = q.select("raw_data_id", "error_message").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted
     assert(entries.length === DopiFixture.expectedQuarantineEntries)
@@ -96,26 +91,26 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("duplicate-tolerant load: the full-duplicate row survives twice (README.md:19)") {
-    val dupDates = oltp("observations")
+    val dupDates = tables("observations")
       .filter(col("observation_date") === Date.valueOf("2018-06-15"))
     assert(dupDates.count() === 2)
     assert(dupDates.select("observation_id").distinct().count() === 2)
   }
 
   test("placeholder-January: missing month assembles to YYYY-01-01") {
-    assert(oltp("observations")
+    assert(tables("observations")
       .filter(col("observation_date") === Date.valueOf("2023-01-01")).count() === 1)
   }
 
   test("day clamp: 31 April corrected to 30 April before date assembly") {
-    assert(oltp("observations")
+    assert(tables("observations")
       .filter(col("observation_date") === Date.valueOf("2019-04-30")).count() === 1)
   }
 
   test("priority resolution: in-range beats earliest; class-3 falls back to earliest start") {
-    val obs = oltp("observations")
-      .join(oltp("user_institution"), Seq("user_institution_id"))
-      .join(oltp("institutions"), Seq("institution_id"))
+    val obs = tables("observations")
+      .join(tables("user_institution"), Seq("user_institution_id"))
+      .join(tables("institutions"), Seq("institution_id"))
       .select(col("observation_date"), col("institution_name"))
       .collect().map(r => (r.getDate(0), r.getString(1)))
     // class 1: 2018-06-15 (both copies) in Bureau's interval
@@ -132,9 +127,9 @@ class EtlPipelineSpec extends SparkSpec {
   test("species normalization quirk preserved: mixed-case staging row drops from observations") {
     // r7 ('apis Mellifera', 2018-06-16) normalizes into the dim but the
     // final FK join is exact-case → the observation is dropped
-    assert(oltp("observations")
+    assert(tables("observations")
       .filter(col("observation_date") === Date.valueOf("2018-06-16")).count() === 0)
-    assert(oltp("pollinator_species")
+    assert(tables("pollinator_species")
       .filter(col("species_name") === "Apis mellifera").count() === 1)
   }
 
@@ -143,7 +138,7 @@ class EtlPipelineSpec extends SparkSpec {
     // re-running it doubles the table by design. The Spark sink analog is
     // write.mode("append") on the table directory.
     val out = Files.createTempDirectory("graft-append").resolve("observations").toString
-    val obs = oltp("observations")
+    val obs = tables("observations")
     obs.write.mode("append").parquet(out)
     obs.write.mode("append").parquet(out)
     val reread = spark.read.parquet(out)
@@ -152,23 +147,23 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("OLAP dims: dim_user covers users; dim_date has one row per observed month") {
-    assert(dims("dim_user").count() === 31)
-    val months = dims("dim_date").select("year", "month")
+    assert(tables("dim_user").count() === 31)
+    val months = tables("dim_date").select("year", "month")
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(months === Set((2018, 6), (2010, 5), (2019, 4), (2023, 1)))
   }
 
   test("OLAP facts: declared grains are unique (the ON CONFLICT arbiter keys)") {
-    val fpa = facts("fact_pollination_activity")
+    val fpa = tables("fact_pollination_activity")
     assert(fpa.count() === fpa.dropDuplicates("pollinator_sk", "caste_sk", "plant_sk",
       "habitat_sk", "location_sk", "date_sk").count())
-    val fulm = facts("fact_user_location_monthly")
+    val fulm = tables("fact_user_location_monthly")
     assert(fulm.count() === fulm.dropDuplicates("user_sk", "location_sk", "date_sk",
       "institution_sk", "subscription_type_sk").count())
-    val fums = facts("fact_user_monthly_summary")
+    val fums = tables("fact_user_monthly_summary")
     assert(fums.count() > 0)
     // the duplicate-tolerant pair lands as ONE fact row with count 2
-    assert(facts("fact_pollination_activity")
+    assert(tables("fact_pollination_activity")
       .filter(col("observation_count") === 2).count() >= 1)
   }
 }
