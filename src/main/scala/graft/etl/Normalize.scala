@@ -4,44 +4,38 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** B9/A6/D7 + §H: dimension normalization — DISTINCT + anti-join idempotent
-  * inserts with deterministic surrogate ids, species-name normalization,
-  * and the user name-split.
+/** B9/A6/D7 + §H: dimension normalization — EP1's one id-numbering rule,
+  * species-name normalization, and the user name-split.
   */
 object Normalize {
 
-  /** Idempotent dim insert (ON CONFLICT DO NOTHING / NOT IN analog,
-    * 02_ETL1_part1.sql:37-78, 07_ETL2_part1.sql:5-50): distinct incoming
-    * keys absent from `existing` get appended with ids continuing after the
-    * existing maximum — SERIAL semantics made deterministic by ordering new
-    * rows on the business key.
-    *
-    * Scale note: the max-id lookup is a 1-row aggregate broadcast via cross
-    * join, and the id window orders only NEW distinct keys — valid for
-    * bounded dimension domains (countries/counties/species/…); a
-    * high-cardinality dim would switch to hash surrogate keys (see
+  /** Number `df`'s rows 1..n in `order`, appending the id as `idCol`: the
+    * SERIAL column made deterministic. One unpartitioned window — valid for
+    * the bounded OLTP domains EP1 numbers (countries/counties/species/users
+    * /…); a high-cardinality table would switch to hash surrogate keys (see
     * CoreOps.ciJoin).
     */
-  def upsertDim(existing: DataFrame, incoming: DataFrame,
-                idCol: String, keyCols: Seq[String]): DataFrame = {
-    val newRows = incoming.select(keyCols.map(col): _*).distinct()
-      .join(existing.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val base = existing.agg(coalesce(max(col(idCol)), lit(0L)).as("max_id"))
-    val w = Window.orderBy(keyCols.map(col): _*)
-    val appended = newRows
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .crossJoin(broadcast(base))
-      .withColumn(idCol, col("max_id") + col("rn"))
-      .select(existing.columns.toIndexedSeq.map(col): _*)
-    existing.unionAll(appended)
-  }
+  def numbered(df: DataFrame, idCol: String, order: Column*): DataFrame =
+    df.withColumn(idCol, row_number().over(Window.orderBy(order: _*)).cast("long"))
 
-  /** Fresh dim from scratch: empty-existing upsertDim convenience. */
-  def buildDim(incoming: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
-    val w = Window.orderBy(keyCols.map(col): _*)
-    incoming.select(keyCols.map(col): _*).distinct()
-      .withColumn(idCol, row_number().over(w).cast("long"))
-      .select((idCol +: keyCols).map(col): _*)
+  /** A dim loaded from `sources` in turn, each inserting the keys no earlier
+    * source holds (ON CONFLICT DO NOTHING / NOT IN analog,
+    * 02_ETL1_part1.sql:37-78 then 03_ETL1_part2.sql:76-105): each distinct
+    * key is numbered by (index of the first source holding it, key order),
+    * which is what appending each source's new keys after the existing
+    * maximum gives. NULL never equals NULL under NOT IN, so a key with a
+    * NULL column is new in every source that holds it and is numbered once
+    * per such source. Returns (idCol, keyCols…).
+    */
+  def buildDim(sources: Seq[DataFrame], idCol: String, keyCols: Seq[String]): DataFrame = {
+    val keys = keyCols.map(col)
+    val tagged = sources.zipWithIndex
+      .map { case (s, i) => s.select(keys :+ lit(i).as("_src"): _*) }
+      .reduce(_ unionAll _)
+    // complete keys group across sources; a key with a NULL groups per source
+    val group = when(keys.map(_.isNotNull).reduce(_ && _), lit(-1)).otherwise(col("_src"))
+    val firsts = tagged.groupBy(keys :+ group.as("_group"): _*).agg(min("_src").as("_src"))
+    numbered(firsts, idCol, col("_src") +: keys: _*).select((idCol +: keyCols).map(col): _*)
   }
 
   /** Species normalization (04_ETL1_part3.sql:245-265, 295-315):

@@ -13,12 +13,13 @@ import graft.olap.{Dims, Facts}
 /** EP1+EP2 orchestration (SURVEY.md §3): CSV → staging → validate/
   * quarantine → normalized OLTP → star schema, re-enacting
   * 02_ETL1_part1.sql → 08_ETL2_part2.sql over the real mock CSVs (+ a
-  * DOPI-shaped CSV). Where the reference writes a
-  * real table (A3/A12), the run lands the frame through [[graft.Land]],
-  * once: every returned table, and every intermediate more than one later
-  * step reads (the staging frames, the scrubbed observation staging, the
-  * first-pass geography, users). So no consumer re-runs an upstream step,
-  * and the reliable-checkpoint switch covers EP1 too. EP1 lands as a DAG
+  * DOPI-shaped CSV). Where the reference writes a real table (A3/A12), the
+  * run lands the frame through [[graft.Land]], once: every returned table,
+  * and every intermediate more than one later step reads (the staging
+  * frames and the scrubbed observation staging). So no consumer re-runs an
+  * upstream step, and the reliable-checkpoint switch covers EP1 too. Every
+  * OLTP id comes from [[Normalize]]'s one numbering rule, and each
+  * geography dim is built once, from both staging files. EP1 lands as a DAG
   * ([[graft.Land.concurrently]]): each table lands as soon as the tables
   * it reads have landed, so the institutions/users chain and the
   * observations chain run side by side until `observations` joins them.
@@ -111,26 +112,19 @@ object Pipeline {
                    observationsCsv: String, dag: Land.Jobs): Future[Map[String, DataFrame]] = {
     import dag.ec
 
-    // The institutions pass builds each geography dim; the users pass
-    // upserts its own rows into the first pass's dim.
-    def dimFrom(existing: Option[DataFrame], rows: DataFrame,
-        idCol: String, keyCols: Seq[String]): DataFrame =
-      existing.fold(Normalize.buildDim(rows, idCol, keyCols))(
-        Normalize.upsertDim(_, rows, idCol, keyCols))
+    // Geography is built once per dim, from the institutions staging then
+    // the users staging (02_ETL1_part1.sql:37-78, 03_ETL1_part2.sql:76-105).
+    // Both stagings inject the same country, so each file's county and city
+    // names resolve to the rows the institutions pass alone would build.
+    def countiesIn(stg: DataFrame, countries: DataFrame) =
+      stg.join(countries, stg("country") === countries("country_name"))
+        .filter(col("county").isNotNull)
+        .select(col("county").as("county_name"), col("country_id"))
 
-    def countiesFrom(stg: DataFrame, countries: DataFrame, existing: Option[DataFrame]) =
-      dimFrom(existing,
-        stg.join(countries, stg("country") === countries("country_name"))
-          .filter(col("county").isNotNull)
-          .select(col("county").as("county_name"), col("country_id")),
-        "county_id", Seq("county_name", "country_id"))
-
-    def citiesFrom(stg: DataFrame, counties: DataFrame, existing: Option[DataFrame]) =
-      dimFrom(existing,
-        stg.join(counties, stg("county") === counties("county_name"))
-          .filter(col("city").isNotNull)
-          .select(col("city").as("city_name"), col("county_id")),
-        "city_id", Seq("city_name", "county_id"))
+    def citiesIn(stg: DataFrame, counties: DataFrame) =
+      stg.join(counties, stg("county") === counties("county_name"))
+        .filter(col("city").isNotNull)
+        .select(col("city").as("city_name"), col("county_id"))
 
     // One row per `key`, the first in `order`. DISTINCT ON keeps an
     // arbitrary row where its ORDER BY ties and dropDuplicates any row; each
@@ -145,98 +139,92 @@ object Pipeline {
     // city_id — the reference's outcome whenever names are unique.
     def cityByName(cities: DataFrame): DataFrame = firstPer(cities, "city_name", col("city_id"))
 
-    // One row per species_name, keeping the LOWEST nbn_code (nulls last).
-    def speciesDedup(df: DataFrame): DataFrame =
-      firstPer(df, "species_name", col("nbn_code").asc_nulls_last)
+    // SCD2 versions of one user attribute `attr` = (id, name)
+    // (03_ETL1_part2.sql:136-188, :190-246): each staging row's (user, id,
+    // start) version, deduped, end-dated and numbered in (user, start, id)
+    // order. The version rows have this one reader, so they are not landed
+    // on their own.
+    def scd2Versions(uv: DataFrame, users: DataFrame, attr: DataFrame,
+        nameCol: String, startCol: String, idCol: String): DataFrame = {
+      val Array(attrId, attrName) = attr.columns
+      val versions = uv.join(users.select(col("user_id"), col("username")), Seq("username"))
+        .join(broadcast(attr), uv(nameCol) === col(attrName))
+        .select(col("user_id"), col(attrId),
+          to_date(col(startCol), "yyyy-MM-dd").as("start_date"))
+      Normalize.numbered(
+        Scd2.endDate(Scd2.dedupVersions(versions, Seq("user_id", attrId, "start_date")),
+          "user_id", "start_date", Seq(attrId)),
+        idCol, col("user_id"), col("start_date"), col(attrId))
+    }
 
-    // ---- part 1: institutions (02_ETL1_part1.sql) -----------------------
+    // Species dim (04_ETL1_part3.sql:245-265, 295-315): one row per
+    // normalized species_name, keeping the LOWEST nbn_code (nulls last).
+    def speciesDim(ov: DataFrame, speciesCol: String, codeCol: String, idCol: String) =
+      Normalize.buildDim(Seq(firstPer(
+          ov.filter(col(speciesCol).isNotNull).select(upper(col(codeCol)).as("nbn_code"),
+            Normalize.normalizedSpecies(speciesCol).as("species_name")),
+          "species_name", col("nbn_code").asc_nulls_last)),
+        idCol, Seq("species_name", "nbn_code"))
+        .select(col(idCol), col("nbn_code"), col("species_name"))
+
+    // ---- parts 1-2: institutions, users, SCD2 (02_ETL1_part1.sql,
+    // 03_ETL1_part2.sql) ----------------------------------------------------
     val instSplit = Future(Validate.splitFirstMatch(
       Ingest.stageInstitutions(spark, institutionsCsv), Validate.institutionRules))
     val instValid = dag.land(instSplit.map(_._1)) // A3 staging materialization
     val invalidInstitutions = dag.land(instSplit.map(_._2))
-
-    val countries1 = dag.land(instValid.map(iv => Normalize.buildDim(
-      iv.filter(col("country").isNotNull).select(col("country").as("country_name")),
-      "country_id", Seq("country_name"))))
-
-    val counties1 = dag.land(for (iv <- instValid; c <- countries1) yield
-      countiesFrom(iv, c, None))
-    val cities1 = dag.land(for (iv <- instValid; c <- counties1) yield
-      citiesFrom(iv, c, None))
-
-    // upsertDim keys on (name, city); the reference keys on name alone, so
-    // the lowest id per name is kept
-    val institutions = dag.land(for (iv <- instValid; c <- cities1) yield firstPer(
-      Normalize.upsertDim(
-        seedInstitutions(spark),
-        iv.join(cityByName(c), iv("city") === col("city_name"), "left")
-          .filter(col("institution").isNotNull)
-          .select(col("institution").as("institution_name"), col("city_id")),
-        "institution_id", Seq("institution_name", "city_id")),
-      "institution_name", col("institution_id")))
-
-    // ---- part 2: users + SCD2 (03_ETL1_part2.sql) -----------------------
     val usersSplit = Future(Validate.splitFirstMatch(
       Ingest.stageUsers(spark, usersCsv), Validate.userRules))
     val usersValid = dag.land(usersSplit.map(_._1))
     val invalidUsers = dag.land(usersSplit.map(_._2))
 
-    // A6 idempotent countries upsert from the USERS staging too
-    // (03_ETL1_part2.sql:77-84): without it the user-side geography chain
-    // would depend on the institutions file having yielded valid rows
-    val countries = dag.land(for (uv <- usersValid; c1 <- countries1) yield
-      Normalize.upsertDim(c1,
-        uv.filter(col("country").isNotNull).select(col("country").as("country_name")),
-        "country_id", Seq("country_name")))
-    val counties = dag.land(for (uv <- usersValid; c1 <- counties1; c <- countries) yield
-      countiesFrom(uv, c, Some(c1)))
-    val cities = dag.land(for (uv <- usersValid; c <- counties; c1 <- cities1) yield
-      citiesFrom(uv, c, Some(c1)))
+    // A6: the users staging adds its own geography keys too; without it the
+    // user-side chain would depend on the institutions file having yielded
+    // valid rows (03_ETL1_part2.sql:77-84)
+    val countries = dag.land(for (iv <- instValid; uv <- usersValid) yield Normalize.buildDim(
+      Seq(iv, uv).map(_.filter(col("country").isNotNull).select(col("country").as("country_name"))),
+      "country_id", Seq("country_name")))
+    val counties = dag.land(for (iv <- instValid; uv <- usersValid; c <- countries) yield
+      Normalize.buildDim(Seq(iv, uv).map(countiesIn(_, c)),
+        "county_id", Seq("county_name", "country_id")))
+    val cities = dag.land(for (iv <- instValid; uv <- usersValid; c <- counties) yield
+      Normalize.buildDim(Seq(iv, uv).map(citiesIn(_, c)),
+        "city_id", Seq("city_name", "county_id")))
+
+    // Part 1 runs before part 2, so an institution looks its city up only
+    // among the keys the institutions file introduced. The dim keys on
+    // (name, city); the reference keys on name alone, so the lowest id per
+    // name is kept
+    val institutions = dag.land(for (iv <- instValid; co <- counties; c <- cities) yield {
+      val instCities = c.join(citiesIn(iv, co), Seq("city_name", "county_id"), "left_semi")
+      firstPer(
+        Normalize.buildDim(Seq(seedInstitutions(spark),
+          iv.join(cityByName(instCities), iv("city") === col("city_name"), "left")
+            .filter(col("institution").isNotNull)
+            .select(col("institution").as("institution_name"), col("city_id"))),
+          "institution_id", Seq("institution_name", "city_id")),
+        "institution_name", col("institution_id"))
+    })
 
     // DISTINCT ON (username) ORDER BY username, join_date → earliest row
     // wins; email/city complete the tiebreak so two staging rows tied on
     // (join_date, full_name) cannot flip the surviving email between runs
-    val users = dag.land(for (uv <- usersValid; c <- cities) yield
+    val users = dag.land(for (uv <- usersValid; c <- cities) yield Normalize.numbered(
       Normalize.nameSplit(firstPer(uv, "username",
           col("join_date"), col("full_name"), col("email"), col("city")))
         .join(cityByName(c), uv("city") === col("city_name"), "left")
         .select(col("username"), col("email"), col("first_name_or_initials"),
           col("last_name"), col("city_id"),
-          to_date(col("join_date"), "yyyy-MM-dd").as("join_date"))
-        .withColumn("user_id",
-          row_number().over(Window.orderBy(col("username"))).cast("long")))
+          to_date(col("join_date"), "yyyy-MM-dd").as("join_date")),
+      "user_id", col("username")))
 
     val subTypes = dag.land(Future(subscriptionTypes(spark)))
 
-    // SCD2 user_subscription (03_ETL1_part2.sql:136-188); the version rows
-    // have this one reader, so they are not landed on their own
     val userSubscription = dag.land(for (uv <- usersValid; u <- users; st <- subTypes) yield
-      Scd2.endDate(
-        Scd2.dedupVersions(
-          uv.join(u.select(col("user_id"), col("username")), Seq("username"))
-            .join(broadcast(st), uv("subscription_type") === st("type_name"))
-            .select(col("user_id"), col("subscription_type_id"),
-              to_date(col("subscription_start"), "yyyy-MM-dd").as("start_date")),
-          Seq("user_id", "subscription_type_id", "start_date")),
-        "user_id", "start_date", Seq("subscription_type_id"))
-        .withColumn("user_subscription_id",
-          row_number().over(Window.orderBy(col("user_id"), col("start_date"),
-            col("subscription_type_id"))).cast("long")))
-
-    // SCD2 user_institution (03_ETL1_part2.sql:190-246), likewise
+      scd2Versions(uv, u, st, "subscription_type", "subscription_start", "user_subscription_id"))
     val userInstitution = dag.land(for (uv <- usersValid; u <- users; inst <- institutions) yield
-      Scd2.endDate(
-        Scd2.dedupVersions(
-          uv.join(u.select(col("user_id"), col("username")), Seq("username"))
-            .join(broadcast(inst.select(col("institution_id"), col("institution_name"))),
-              uv("institution") === col("institution_name"))
-            .select(col("user_id"), col("institution_id"),
-              to_date(col("affiliation_start"), "yyyy-MM-dd").as("start_date")),
-          Seq("user_id", "institution_id", "start_date")),
-        "user_id", "start_date", Seq("institution_id"))
-        .withColumn("user_institution_id",
-          row_number().over(Window.orderBy(col("user_id"), col("start_date"),
-            col("institution_id"))).cast("long")))
+      scd2Versions(uv, u, inst.select(col("institution_id"), col("institution_name")),
+        "institution", "affiliation_start", "user_institution_id"))
 
     // ---- part 3: observations (04_ETL1_part3.sql) -----------------------
     // A3: the staging rows are landed inside stageObservations, before any
@@ -250,41 +238,31 @@ object Pipeline {
     val invalidObservations = dag.land(obsSplit.map(_._2))
     val obsValid = dag.land(obsSplit.map(s => Observations.manualCodeFixes(s._1)))
 
-    val plantSpecies = dag.land(obsValid.map(ov => Normalize.buildDim(
-      speciesDedup(ov.filter(col("plant_species").isNotNull)
-        .select(upper(col("nbn_plant_code")).as("nbn_code"),
-          Normalize.normalizedSpecies("plant_species").as("species_name"))),
-      "plant_id", Seq("species_name", "nbn_code"))
-      .select(col("plant_id"), col("nbn_code"), col("species_name"))))
-
-    val pollinatorSpecies = dag.land(obsValid.map(ov => Normalize.buildDim(
-      speciesDedup(ov.filter(col("pollinator_species").isNotNull)
-        .select(upper(col("nbn_pollinator_code")).as("nbn_code"),
-          Normalize.normalizedSpecies("pollinator_species").as("species_name"))),
-      "pollinator_id", Seq("species_name", "nbn_code"))
-      .select(col("pollinator_id"), col("nbn_code"), col("species_name"))))
+    val plantSpecies = dag.land(obsValid.map(
+      speciesDim(_, "plant_species", "nbn_plant_code", "plant_id")))
+    val pollinatorSpecies = dag.land(obsValid.map(
+      speciesDim(_, "pollinator_species", "nbn_pollinator_code", "pollinator_id")))
 
     val castes = dag.land(obsValid.map(ov => Normalize.buildDim(
-      ov.filter(col("caste").isNotNull).select(trim(col("caste")).as("caste_name")),
+      Seq(ov.filter(col("caste").isNotNull).select(trim(col("caste")).as("caste_name"))),
       "caste_id", Seq("caste_name"))))
 
     val pollinatorCaste = dag.land(
-      for (ov <- obsValid; ps <- pollinatorSpecies; ca <- castes) yield ov
+      for (ov <- obsValid; ps <- pollinatorSpecies; ca <- castes) yield Normalize.numbered(ov
         .filter(col("pollinator_species").isNotNull && col("caste").isNotNull)
         .join(ps, lower(ps("species_name")) === lower(col("pollinator_species")))
         .join(broadcast(ca), ca("caste_name") === trim(col("caste")))
-        .select(col("pollinator_id"), col("caste_id")).distinct()
-        .withColumn("pollinator_caste_id",
-          row_number().over(Window.orderBy(col("pollinator_id"), col("caste_id"))).cast("long")))
+        .select(col("pollinator_id"), col("caste_id")).distinct(),
+        "pollinator_caste_id", col("pollinator_id"), col("caste_id")))
 
     val locations = dag.land(obsValid.map(ov => Normalize.buildDim(
-      ov.filter(col("latitude").isNotNull && col("longitude").isNotNull)
+      Seq(ov.filter(col("latitude").isNotNull && col("longitude").isNotNull)
         .select(col("latitude").cast("decimal(9,6)").as("latitude"),
-          col("longitude").cast("decimal(9,6)").as("longitude")),
+          col("longitude").cast("decimal(9,6)").as("longitude"))),
       "location_id", Seq("latitude", "longitude"))))
 
     val habitats = dag.land(obsValid.map(ov => Normalize.buildDim(
-      ov.filter(col("habitat").isNotNull).select(initcap(trim(col("habitat"))).as("habitat_name")),
+      Seq(ov.filter(col("habitat").isNotNull).select(initcap(trim(col("habitat"))).as("habitat_name"))),
       "habitat_id", Seq("habitat_name"))))
 
     val observations = dag.land(for {

@@ -108,7 +108,7 @@ object Validate {
 
   /** The observation rule battery (04_ETL1_part3.sql:158-229), in reference
     * order. Rule 1 runs firstMatch (insert+delete); rules 2-6 run
-    * allMatches on the remainder — see [[validateObservations]]. */
+    * allMatches on the remainder — see [[splitObservations]]. */
   val obsMissingRule: Rule =
     Rule("Missing required plant species, pollinator species, or author",
       col("plant_species").isNull || col("plant_species") === "" ||
@@ -132,11 +132,6 @@ object Validate {
     Rule("Invalid pollen or nectar value",
       (col("pollen").isNotNull && !upper(col("pollen")).isin("Y", "N")) ||
         (col("nectar").isNotNull && !upper(col("nectar")).isin("Y", "N"))))
-
-  /** Full observation validation: scrub, then the reference's two-phase
-    * quarantine. Returns (valid staging, quarantine). */
-  def validateObservations(stg: DataFrame): (DataFrame, DataFrame) =
-    splitObservations(scrubObs(stg))
 
   /** The reference's two-phase quarantine over already-scrubbed staging
     * (the scrub is not idempotent: " NA " scrubs to "NA", then to NULL).

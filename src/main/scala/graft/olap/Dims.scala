@@ -11,13 +11,13 @@ import org.apache.spark.sql.functions._
   * Surrogate keys are EP1's ids. The reference's `ON CONFLICT
   * (business_key) DO NOTHING` plus a sequence numbers each dimension in
   * business-key order (SURVEY.md §2.A6); EP1 already assigns every OLTP id
-  * that way — `Normalize.buildDim` for species, castes, habitats and
-  * locations, one numbering order each for users, user_subscription and
-  * user_institution — over tables unique on their business key. So each
-  * `*_sk` is its row's OLTP id (dim_subscription_type takes
-  * `user_subscription_id`, dim_institution `user_institution_id`), and the
-  * bridge is `pollinator_caste` renamed; dim_date's key is arithmetic,
-  * year*100+month.
+  * that way, through `Normalize`'s one numbering rule (`buildDim` for
+  * species, castes, habitats and locations; `numbered` in business-key
+  * order for users, user_subscription and user_institution), over tables
+  * unique on their business key. So each `*_sk` is its row's OLTP id
+  * (dim_subscription_type takes `user_subscription_id`, dim_institution
+  * `user_institution_id`), and the bridge is `pollinator_caste` renamed;
+  * dim_date's key is arithmetic, year*100+month.
   */
 object Dims {
 

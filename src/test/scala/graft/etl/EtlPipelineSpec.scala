@@ -3,6 +3,8 @@ package graft.etl
 import java.nio.file.Files
 import java.sql.Date
 
+import scala.util.Try
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -22,8 +24,10 @@ class EtlPipelineSpec extends SparkSpec {
     * to re-plan and re-execute that whole chain per action — the EP2/grain
     * tests alone cost 396 s + 268 s of the suite's 39-minute wall.
     * Pipeline.run lands each OLTP, star and fact table once (the A3/A12
-    * handoff), so the assertions see exactly the pipeline's output rows. */
-  private lazy val tables: Map[String, org.apache.spark.sql.DataFrame] = {
+    * handoff), so the assertions see exactly the pipeline's output rows.
+    * The run's outcome is kept, failure included: a run that throws is not
+    * retried by every later test. */
+  private lazy val outcome: Try[Map[String, org.apache.spark.sql.DataFrame]] = Try {
     val dir = Files.createTempDirectory("graft-etl")
     val dopi = DopiFixture.write(dir)
     Pipeline.run(spark,
@@ -31,6 +35,7 @@ class EtlPipelineSpec extends SparkSpec {
       "/root/reference/01_data_raw/users_mock.csv",
       dopi)
   }
+  private def tables: Map[String, org.apache.spark.sql.DataFrame] = outcome.get
 
   test("institutions: 10 CSV rows + seeded Unaffiliated, none quarantined") {
     assert(tables("institutions").count() === 11)

@@ -3,7 +3,7 @@ package graft.etl
 import graft.SparkSpec
 
 /** Name-split CASE (03_ETL1_part2.sql:112-121), species normalization
-  * (04_ETL1_part3.sql:245-265), and idempotent dim upserts (A6).
+  * (04_ETL1_part3.sql:245-265), and dims loaded from several sources (A6).
   */
 class NormalizeSpec extends SparkSpec {
   import spark.implicits._
@@ -27,18 +27,21 @@ class NormalizeSpec extends SparkSpec {
     assert(out.toSeq === Seq("Apis mellifera", "Bombus", "Prunella vulgaris subsp. alba"))
   }
 
-  test("upsertDim: appends only new keys, ids continue after existing max") {
-    val existing = Seq((1L, "Free"), (2L, "Pro")).toDF("id", "name")
-    val incoming = Seq("Pro", "HiveMind", "BeeWatch+").toDF("name")
-    val out = Normalize.upsertDim(existing, incoming, "id", Seq("name"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(out === Set((1L, "Free"), (2L, "Pro"), (3L, "BeeWatch+"), (4L, "HiveMind")))
+  private def ids(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+  test("buildDim: a later source adds only its new keys, numbered after the earlier ones") {
+    val out = Normalize.buildDim(
+      Seq(Seq("Free", "Pro").toDF("name"), Seq("Pro", "HiveMind", "BeeWatch+").toDF("name")),
+      "id", Seq("name"))
+    assert(ids(out) === Set((1L, "Free"), (2L, "Pro"), (3L, "BeeWatch+"), (4L, "HiveMind")))
   }
 
-  test("upsertDim is idempotent: re-inserting the same keys changes nothing") {
-    val existing = Seq((1L, "Free")).toDF("id", "name")
-    val once = Normalize.upsertDim(existing, Seq("Free", "Pro").toDF("name"), "id", Seq("name"))
-    val twice = Normalize.upsertDim(once, Seq("Free", "Pro").toDF("name"), "id", Seq("name"))
-    assert(twice.exceptAll(once).count() === 0 && once.exceptAll(twice).count() === 0)
+  test("buildDim: a repeated source adds no key") {
+    val sources = Seq(Seq("Free").toDF("name"), Seq("Free", "Pro").toDF("name"))
+    val once = Normalize.buildDim(sources, "id", Seq("name"))
+    val twice = Normalize.buildDim(sources :+ sources.last, "id", Seq("name"))
+    assert(ids(once) === Set((1L, "Free"), (2L, "Pro")))
+    assert(ids(twice) === ids(once))
   }
 }

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -17,8 +18,10 @@ class ValidateSpec extends SparkSpec {
       .withColumn("raw_data_id", monotonically_increasing_id())
   }
 
+  private def split(stg: DataFrame) = Validate.splitObservations(Validate.scrubObs(stg))
+
   test("scrub: 'NA' and whitespace-only become NULL, values are trimmed") {
-    val (valid, _) = Validate.validateObservations(
+    val (valid, _) = split(
       stg(Seq(("a", "  p  ", "NA", "  "), ("b", "q", "pl", "1.5"))))
     val rows = valid.select("authors", "pollinator_species", "plant_species", "latitude")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
@@ -27,7 +30,7 @@ class ValidateSpec extends SparkSpec {
   }
 
   test("first-match rule wins: missing species quarantined with that message only") {
-    val (_, q) = Validate.validateObservations(
+    val (_, q) = split(
       stg(Seq((null, "p", "pl", "9999")))) // missing author AND bad latitude
     val msgs = q.select("error_message").collect().map(_.getString(0))
     assert(msgs === Array("Missing required plant species, pollinator species, or author"))
@@ -37,7 +40,7 @@ class ValidateSpec extends SparkSpec {
     val df = stg(Seq(("a", "p", "pl", "91.5")))
       .withColumn("interactions", lit("three"))
       .withColumn("pollination", lit("7"))
-    val (_, q) = Validate.validateObservations(df)
+    val (_, q) = split(df)
     val msgs = q.select("error_message").collect().map(_.getString(0)).toSet
     assert(msgs === Set(
       "Invalid latitude or longitude",
@@ -48,7 +51,7 @@ class ValidateSpec extends SparkSpec {
   test("range + regex edges: boundary values pass, out-of-range fail") {
     val df = stg(Seq(("a", "p", "pl", "-90"), ("b", "p", "pl", "90"),
       ("c", "p", "pl", "-90.0001"), ("d", "p", "pl", "not-a-number")))
-    val (valid, q) = Validate.validateObservations(df)
+    val (valid, q) = split(df)
     assert(valid.count() === 2)
     assert(q.filter(col("error_message") === "Invalid latitude or longitude").count() === 2)
   }
@@ -56,7 +59,7 @@ class ValidateSpec extends SparkSpec {
   test("pollen/nectar domain is case-insensitive Y/N") {
     val df = stg(Seq(("a", "p", "pl", null))).withColumn("pollen", lit("y"))
       .unionByName(stg(Seq(("b", "p", "pl", null))).withColumn("pollen", lit("X")))
-    val (valid, q) = Validate.validateObservations(df)
+    val (valid, q) = split(df)
     assert(valid.select("authors").collect().map(_.getString(0)).toSet === Set("a"))
     assert(q.select("error_message").collect().map(_.getString(0)).toSet ===
       Set("Invalid pollen or nectar value"))
@@ -69,7 +72,7 @@ class ValidateSpec extends SparkSpec {
     val df = stg(Seq(("a", "p", "pl", "1000000"))) // overflows DECIMAL(12,6)
       .withColumn("interactions", lit("99999999999")) // > Int.MaxValue
       .withColumn("obs_year", lit("18x5")) // 4 chars, non-numeric
-    val (valid, q) = Validate.validateObservations(df)
+    val (valid, q) = split(df)
     assert(valid.count() === 0)
     val msgs = q.select("error_message").collect().map(_.getString(0)).toSet
     assert(msgs === Set(
@@ -94,7 +97,7 @@ class ValidateSpec extends SparkSpec {
   }
 
   test("quarantine row_data is a JSON snapshot of the scrubbed staging row") {
-    val (_, q) = Validate.validateObservations(stg(Seq(("a", "p", "NA", "1.0"))))
+    val (_, q) = split(stg(Seq(("a", "p", "NA", "1.0"))))
     val snapshot = q.select("row_data").head().getString(0)
     assert(snapshot.contains("\"authors\":\"a\""))
     assert(!snapshot.contains("plant_species\":\"NA\"")) // scrubbed to null first
