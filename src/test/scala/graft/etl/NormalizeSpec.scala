@@ -30,7 +30,7 @@ class NormalizeSpec extends SparkSpec {
   private def ids(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
-  test("buildDim: a later source adds only its new keys, numbered after the earlier ones") {
+  test("buildDim: a later source adds only new keys numbered after earlier ones") {
     val out = Normalize.buildDim(
       Seq(Seq("Free", "Pro").toDF("name"), Seq("Pro", "HiveMind", "BeeWatch+").toDF("name")),
       "id", Seq("name"))
