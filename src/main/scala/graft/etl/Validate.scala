@@ -42,24 +42,22 @@ object Validate {
   /** Split with one quarantine row PER failing rule (multi-insert shape,
     * 04_ETL1_part3.sql:174-235): valid = rows failing no rule.
     *
-    * The quarantine side is ONE pass: each row is tagged with the array of
-    * its failed-rule messages and exploded — not one filtered branch per
-    * rule unioned (which re-evaluates the full staging lineage once per
-    * rule; at the 100 TB staging front door that multiplied the quarantine
-    * stage ~rules-fold). Same rows, rule order preserved within a row.
+    * The quarantine side is ONE pass: each row explodes into one message
+    * per rule (NULL where the rule passed) and the NULLs are dropped — not
+    * one filtered branch per rule unioned (which re-evaluates the full
+    * staging lineage once per rule; at the 100 TB staging front door that
+    * multiplied the quarantine stage ~rules-fold). Same rows, rule order
+    * preserved within a row. No higher-order `filter` over the array: that
+    * is a CodegenFallback and would run the battery interpreted.
     */
   def splitAllMatches(df: DataFrame, rules: Seq[Rule]): (DataFrame, DataFrame) = {
     val anyFailed = rules.map(_.failed).reduce(_ || _)
     val valid = df.filter(!coalesce(anyFailed, lit(false)))
-    val failedArr = filter(
-      array(rules.map(r => when(coalesce(r.failed, lit(false)), lit(r.problem))): _*),
-      m => m.isNotNull)
+    val messages = array(rules.map(r => when(coalesce(r.failed, lit(false)), lit(r.problem))): _*)
     val invalid = df
-      .withColumn("_failed", failedArr)
-      .filter(size(col("_failed")) > 0)
-      .withColumn("error_message", explode(col("_failed")))
+      .withColumn("error_message", explode(messages))
+      .filter(col("error_message").isNotNull)
       .withColumn("row_data", rowSnapshot(df))
-      .drop("_failed")
     (valid, invalid)
   }
 

@@ -1,6 +1,6 @@
 package graft.olap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** EP2 part 1 (07_ETL2_part1.sql): OLTP → OLAP star dimensions. The FDW hop
@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   * dim_date's key is arithmetic, year*100+month.
   */
 object Dims {
+
+  /** dim_date's surrogate key: year*100+month. */
+  def dateSk(year: Column, month: Column): Column = (year * 100 + month).cast("long")
 
   def build(oltp: Map[String, DataFrame]): Map[String, DataFrame] = {
     // 07_ETL2_part1.sql:5-11 / :13-19 — species dims keyed on species_name
@@ -46,7 +49,7 @@ object Dims {
         year(col("observation_date")).as("year"),
         month(col("observation_date")).as("month"))
       .distinct()
-      .withColumn("date_sk", (col("year") * 100 + col("month")).cast("long"))
+      .withColumn("date_sk", dateSk(col("year"), col("month")))
       .withColumn("month_name",
         date_format(make_date(col("year"), col("month"), lit(1)), "MMMM"))
       .withColumn("month_year",

@@ -10,30 +10,37 @@ import org.apache.spark.sql.functions._
   * aggregate at its declared grain and overwriting (SURVEY.md §4), which is
   * what these functions produce. All measures use map-side partial
   * aggregation; grains shuffle once on their key columns.
+  *
+  * `dims` must be `Dims.build` over the same `oltp`. Each keyed dimension's
+  * `*_sk` is then its row's OLTP id, and dim_date's is `Dims.dateSk` of the
+  * observation's (year, month), so each fact key is read off the row that
+  * already holds it: no dimension is joined only to read a key back. The
+  * reference's inner dim joins drop no row here — EP1 resolves plant and
+  * pollinator by inner join, fact rows need a location, dim_date is built
+  * from the observations and `user_institution_id` is the observation's own
+  * affiliation version — and FactsSpec pins that against the joining form.
+  * The joins that stay add information: `pollination_qualities` (the
+  * quality code), `user_institution` (the user), `users` (`join_date`, the
+  * subscription fallback) and the two dim_subscription_type as-of lookups.
   */
 object Facts {
 
-  /** fact_pollination_activity (08_ETL2_part2.sql:5-66): 6-dim grain with
-    * conditional counts. Caste/habitat joins are LEFT (nullable dims, C9
-    * null-guarded conditions reduce to plain equality — null keys never
-    * match); date joins on the computed (year, month) key.
-    */
-  def factPollinationActivity(oltp: Map[String, DataFrame],
-                              dims: Map[String, DataFrame]): DataFrame = {
-    val ob = oltp("observations")
+  private def factObservations(oltp: Map[String, DataFrame]): DataFrame =
+    oltp("observations")
       .filter(col("observation_date").isNotNull && col("location_id").isNotNull)
-    ob
-      .join(dims("dim_pollinator"), col("pollinator_id_bk") === col("pollinator_id"))
-      .join(broadcast(dims("dim_caste")), col("caste_id_bk") === col("caste_id"), "left")
-      .join(dims("dim_plant"), col("plant_id_bk") === col("plant_id"))
-      .join(broadcast(dims("dim_habitat")), col("habitat_id_bk") === col("habitat_id"), "left")
-      .join(dims("dim_location"), col("location_id_bk") === col("location_id"))
-      .join(broadcast(dims("dim_date")),
-        col("year") === year(col("observation_date")) &&
-          col("month") === month(col("observation_date")))
+
+  private val dateSk = Dims.dateSk(year(col("observation_date")), month(col("observation_date")))
+
+  /** fact_pollination_activity (08_ETL2_part2.sql:5-66): 6-dim grain with
+    * conditional counts. Caste and habitat are nullable (the reference's
+    * LEFT joins): a NULL id is a NULL key.
+    */
+  def factPollinationActivity(oltp: Map[String, DataFrame]): DataFrame =
+    factObservations(oltp)
       .join(broadcast(oltp("pollination_qualities")), Seq("pollination_quality_id"), "left")
-      .groupBy(col("pollinator_sk"), col("caste_sk"), col("plant_sk"),
-        col("habitat_sk"), col("location_sk"), col("date_sk"))
+      .groupBy(col("pollinator_id").as("pollinator_sk"), col("caste_id").as("caste_sk"),
+        col("plant_id").as("plant_sk"), col("habitat_id").as("habitat_sk"),
+        col("location_id").as("location_sk"), dateSk.as("date_sk"))
       .agg(
         coalesce(sum(col("interaction_count")), lit(0)).as("interaction_count"),
         count(lit(1)).as("observation_count"),
@@ -41,7 +48,6 @@ object Facts {
         coalesce(sum(when(col("nectar_collected"), 1).otherwise(0)), lit(0)).as("nectar_collected"),
         coalesce(sum(when(col("quality_code").isNotNull && col("quality_code") =!= 4, 1)
           .otherwise(0)), lit(0)).as("confirmed_pollination_count"))
-  }
 
   /** Shared observation→(user, institution, subscription) resolution for the
     * two user facts (08_ETL2_part2.sql:88-109, 150-169): as-of subscription
@@ -51,8 +57,6 @@ object Facts {
     */
   private def userResolved(oltp: Map[String, DataFrame],
                            dims: Map[String, DataFrame]): DataFrame = {
-    val ob = oltp("observations")
-      .filter(col("observation_date").isNotNull && col("location_id").isNotNull)
     val subActive = dims("dim_subscription_type").select(
       col("user_id_bk").as("sa_user"), col("start_date").as("sa_start"),
       col("end_date").as("sa_end"), col("subscription_type_sk").as("sa_sk"))
@@ -68,20 +72,10 @@ object Facts {
       .withColumn("se_rn", row_number().over(seW))
       .filter(col("se_rn") === 1)
       .drop("se_rn")
-    ob
-      .join(oltp("user_institution").select(col("user_institution_id"),
-        col("user_id"), col("institution_id"), col("start_date").as("ui_start")),
+    factObservations(oltp)
+      .join(oltp("user_institution").select(col("user_institution_id"), col("user_id")),
         Seq("user_institution_id"))
       .join(oltp("users").select(col("user_id"), col("join_date")), Seq("user_id"))
-      .join(dims("dim_user"), col("user_id_bk") === col("user_id"))
-      // match the exact SCD2 VERSION (start_date included): a user with two
-      // stints at the same institution has two dim rows on (user,
-      // institution) alone, and the version-less join would fan out and
-      // double-count every downstream measure
-      .join(dims("dim_institution"),
-        dims("dim_institution")("user_id_bk") === col("user_id") &&
-          col("institution_id_bk") === col("institution_id") &&
-          dims("dim_institution")("start_date") === col("ui_start"))
       .join(subActive,
         col("sa_user") === col("user_id") &&
           col("sa_start") <= col("observation_date") &&
@@ -89,17 +83,16 @@ object Facts {
       .join(subEarliest,
         col("se_user") === col("user_id") && col("se_start") === col("join_date"), "left")
       .withColumn("subscription_type_sk", coalesce(col("sa_sk"), col("se_sk")))
-      .join(broadcast(dims("dim_date")),
-        col("year") === year(col("observation_date")) &&
-          col("month") === month(col("observation_date")))
+      .withColumn("user_sk", col("user_id"))
+      .withColumn("institution_sk", col("user_institution_id"))
+      .withColumn("date_sk", dateSk)
   }
 
   /** fact_user_location_monthly (08_ETL2_part2.sql:71-122). */
   def factUserLocationMonthly(oltp: Map[String, DataFrame],
                               dims: Map[String, DataFrame]): DataFrame =
     userResolved(oltp, dims)
-      .join(dims("dim_location"), col("location_id_bk") === col("location_id"))
-      .groupBy(col("user_sk"), col("location_sk"), col("date_sk"),
+      .groupBy(col("user_sk"), col("location_id").as("location_sk"), col("date_sk"),
         col("institution_sk"), col("subscription_type_sk"))
       .agg(
         count(lit(1)).as("observation_count"),
@@ -123,7 +116,7 @@ object Facts {
 
   def build(oltp: Map[String, DataFrame], dims: Map[String, DataFrame]): Map[String, DataFrame] =
     Map(
-      "fact_pollination_activity" -> factPollinationActivity(oltp, dims),
+      "fact_pollination_activity" -> factPollinationActivity(oltp),
       "fact_user_location_monthly" -> factUserLocationMonthly(oltp, dims),
       "fact_user_monthly_summary" -> factUserMonthlySummary(oltp, dims))
 }

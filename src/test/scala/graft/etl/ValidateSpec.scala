@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -63,6 +64,23 @@ class ValidateSpec extends SparkSpec {
     assert(valid.select("authors").collect().map(_.getString(0)).toSet === Set("a"))
     assert(q.select("error_message").collect().map(_.getString(0)).toSet ===
       Set("Invalid pollen or nectar value"))
+  }
+
+  test("multi-match phase: messages in rule order, no higher-order function in the plan") {
+    val df = Validate.scrubObs(stg(Seq(("a", "p", "pl", "91.5")))
+      .withColumn("interactions", lit("three"))
+      .withColumn("pollination", lit("7")))
+    val (_, q) = Validate.splitAllMatches(df, Validate.obsValidityRules)
+    assert(q.select("error_message").collect().map(_.getString(0)) === Array(
+      "Invalid latitude or longitude",
+      "Invalid interaction count",
+      "Invalid pollination value"))
+    // a higher-order function (e.g. ArrayFilter) is a CodegenFallback: it
+    // would evaluate the rule battery outside whole-stage codegen. The
+    // analyzed plan, since the optimizer folds this local input away.
+    val hofs = q.queryExecution.analyzed.flatMap(
+      _.expressions.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName }))
+    assert(hofs.isEmpty, s"higher-order functions in the quarantine plan: $hofs")
   }
 
   test("ANSI hazards quarantine instead of crashing: overflow lat, huge interactions, junk year") {
