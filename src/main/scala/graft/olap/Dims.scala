@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object Dims {
 
   /** dim_date's surrogate key: year*100+month. */
-  def dateSk(year: Column, month: Column): Column = (year * 100 + month).cast("long")
+  private[olap] def dateSk(year: Column, month: Column): Column = (year * 100 + month).cast("long")
 
   def build(oltp: Map[String, DataFrame]): Map[String, DataFrame] = {
     // 07_ETL2_part1.sql:5-11 / :13-19 — species dims keyed on species_name
